@@ -25,12 +25,8 @@ object BatchJob {
         (b, o, TimeWindow.hour(y.toInt, m.toInt, d.toInt, h.toInt))
       case _ => sys.error("usage: BatchJob <basePath> <outPath> [year month day hour]")
     }
-    // spark-submit injects the master; default to local for bare runs
-    val builder = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master("local[*]")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // spark-submit injects the master; a bare run is local
+    val spark = GraftSession.local()
     try run(spark, basePath, outPath, window)
     finally spark.stop()
   }
@@ -44,10 +40,10 @@ object BatchJob {
       10, col("cnt").desc, col("token").asc)
 
     Sinks.csv(counts, s"$outPath/top10")
-    val store = new ParquetResultStore(spark, s"$outPath/results", "token", "win_start")
+    val store = new ParquetResultStore(spark, s"$outPath/results", "key", "win_start")
     StoreSink.publishWindow(store,
-      counts.withColumn("win_start",
-        lit(java.sql.Timestamp.from(window.start))),
+      StoreSink.windowKeyed(counts.withColumn("win_start",
+        lit(java.sql.Timestamp.from(window.start))), "win_start"),
       window.start, window.end)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.DataFrame
 
 /** Driver-run benchmark: one JSON line on stdout.
   *
@@ -69,26 +71,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // r18 (guide §3.1/§9): let the planner pick shuffled-hash joins
-      // when its size conditions hold — SMJ's sort adds a pass both
-      // sides pay and spills gracefully only when memory is actually
-      // short; SHJ builds the smaller per-partition side. Scale-safe,
-      // not a local[32] tune: AQE skew splitting stays on and the
-      // planner's own per-partition size checks gate the choice, so a
-      // skewed 100 TB partition still gets SMJ/skew-split. Measured
-      // 5-15% on the join-heavy suite members (OPTIMIZATION_r18.md);
-      // SPARK_GRAFT_PREFER_SMJ=true restores the old planner bias.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     def run(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -113,17 +96,19 @@ object Bench {
     // SPARK_GRAFT_ONLY subset excludes them — a cold pass-1 probe reads
     // as fake 3x "contention" (measured) when it is just codegen + JIT
     val calProbeNames = Seq("q_top10_tokens", "q_bpe_encode")
-    val calProbeFns = calProbeNames.map(n => n -> SparkEntry.queries(n))
     val toWarm = selected ++ calProbeNames.filterNot(selected.contains)
       .map(n => n -> SparkEntry.queries(n))
-    toWarm.foreach { case (_, fn) =>
-      try run(fn(spark, warmDir)) catch { case _: Throwable => () }
+    // a failing query is recorded as -1; its cause goes to stderr
+    def report(name: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+    toWarm.foreach { case (name, fn) =>
+      try run(fn(spark, warmDir)) catch { case NonFatal(e) => report(name, e) }
       spark.catalog.clearCache()
     }
-    def timeOne(fn: (SparkSession, String) => DataFrame): Double = {
+    def timeOne(name: String): Double = {
       val t0 = System.nanoTime()
-      val ok = try { run(fn(spark, sfDir)); true }
-        catch { case _: Throwable => false }
+      val ok = try { run(SparkEntry.queries(name)(spark, sfDir)); true }
+        catch { case NonFatal(e) => report(name, e); false }
       val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache() // release operator-persisted intermediates
       if (ok) dt else -1.0
@@ -145,7 +130,6 @@ object Bench {
     //      is proportional to observed contention, not suite size.
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
     val sortedNames = selected.toSeq.sortBy(_._1).map(_._1)
-    val byName = selected.toMap
     // Environment-drift sentinel (r13 verdict item 1): the r13 driver
     // sweep shipped numbers up to 13.7x off steady-state on a contended
     // box, and nothing in the emitted JSON could distinguish "code got
@@ -189,12 +173,12 @@ object Bench {
     // showed the resulting pass-1 probe reading 4.7x off on a provably
     // quiet box — a standing false "contention suspected" WARN that
     // halved the sentinel's evidence at the default 2 passes
-    calProbeFns.foreach { case (_, fn) => timeOne(fn) }
+    calProbeNames.foreach(timeOne)
     val calReadings = Array.fill[Seq[(String, Double)]](passes)(Seq.empty)
     val passTimes: Seq[Map[String, Double]] = (0 until passes).map { p =>
-      calReadings(p) = calProbeFns.map { case (n, fn) => n -> timeOne(fn) }
+      calReadings(p) = calProbeNames.map(n => n -> timeOne(n))
       val order = new scala.util.Random(42L + p).shuffle(sortedNames)
-      order.map(n => n -> timeOne(byName(n))).toMap
+      order.map(n => n -> timeOne(n)).toMap
     }
     // graded per probe, not summed (r14 verdict item 2 — see gradePass)
     val calGrades: Seq[Option[(Seq[(String, Double)], Double, Boolean)]] =
@@ -222,7 +206,7 @@ object Bench {
       val ds = passTimes.map(_(name))
       val ok = ds.filter(_ >= 0)
       val noisy = ok.size >= 2 && ok.min > 0.05 && ok.max / ok.min > 1.5
-      val all = if (noisy) ds :+ timeOne(byName(name)) else ds
+      val all = if (noisy) ds :+ timeOne(name) else ds
       name -> minOk(all)
     }
     val flagship = results.toMap.getOrElse("q_top10_tokens", -1.0)

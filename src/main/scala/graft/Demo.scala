@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
@@ -20,13 +19,7 @@ import graft.streaming.StoreSink
 object Demo {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     // 1. land the event stream in the hive-partitioned hour layout
     val events = Tables.load(spark, sfDir, "events")
@@ -48,9 +41,10 @@ object Demo {
 
     // 4. reference sinks: header'd CSV + serving store publish
     Sinks.csv(top, s"$outDir/top10")
-    val store = new ParquetResultStore(spark, s"$outDir/results", "token", "published_at")
+    val store = new ParquetResultStore(spark, s"$outDir/results", "key", "published_at")
     StoreSink.publishWindow(store,
-      top.withColumn("published_at", lit("2024-01-15 00:00:00").cast("timestamp")),
+      StoreSink.windowKeyed(top.withColumn("published_at",
+        lit("2024-01-15 00:00:00").cast("timestamp")), "published_at"),
       win.start, win.end)
     println(s"demo: store rows = ${store.read().count()}")
     println(s"demo: top10 = " + top.collect()

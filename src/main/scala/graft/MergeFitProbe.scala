@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.sources.VersionedTable
@@ -34,15 +33,7 @@ object MergeFitProbe {
       .split(',').map(_.trim.toInt).toSeq
     val deltas = (if (args.length > 2) args(2) else "1,100,10000")
       .split(',').map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
 
     val base = spark.read.parquet(s"$sfDir/customer.parquet")
       .select(col("c_custkey").as("key"), col("c_acctbal").as("bal"),

@@ -4,9 +4,7 @@ import graft.functions.Vectors
 import graft.operators.Dedup
 object NativeBench {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8").config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     val d = "/root/testdata/sf0.1"
     val emb = Tables.load(spark, d, "embeddings").cache(); emb.count()
     def time(label: String)(f: => Long): Unit = {

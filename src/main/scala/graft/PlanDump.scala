@@ -9,11 +9,7 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     val names = Seq(
       "q_top10_tokens", "q_filter_pushdown", "q_star_join", "q_asof_join",
       "q_range_join", "q_group_topk", "q_pack_sequences", "q_dedup_minhash",

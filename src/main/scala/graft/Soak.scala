@@ -245,15 +245,7 @@ object Soak {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val repl = sys.env.getOrElse("SPARK_GRAFT_SOAK_REPL", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     // SPARK_GRAFT_SOAK_ONLY=a,b,c restricts to named families (local triage)
     val only = sys.env.get("SPARK_GRAFT_SOAK_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)

@@ -1,28 +1,26 @@
 package graft
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.collection.mutable
+import scala.util.control.NonFatal
+
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Empirical decomposition (guide §1.1): run a query warm and print
   * every JOB with its wall time plus the sum of its stages' task
   * times, so the expensive piece of a multi-job operator is visible
-  * without the UI. Usage: runMain graft.StageProbe q_x [q_y ...]
+  * without the UI, then the query's initial formatted plan and the
+  * final adaptive plan of the timed run. Usage:
+  *
+  *   SPARK_GRAFT_SF_DIR=<sfDir> runMain graft.StageProbe q_x [q_y ...]
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = if (args.nonEmpty) args.toSeq else Seq("q_top10_tokens")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     def run(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
     case class JobRec(id: Int, desc: String, start: Long, var end: Long = 0,
@@ -70,16 +68,30 @@ object StageProbe {
           }
         }
     }
+    // the noop write's own QueryExecution: its executed plan after the
+    // run is the FINAL adaptive plan (AQE join rewrites and coalesced
+    // shuffle reads are runtime decisions the initial plan cannot show)
+    @volatile var finalPlan: Option[String] = None
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        finalPlan = Some(qe.executedPlan.toString)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    })
     for (n <- names) {
       val fn = SparkEntry.queries(n)
       // warm run: codegen/JIT out of the measurement
-      try run(fn(spark, sfDir)) catch { case _: Throwable => () }
+      try run(fn(spark, sfDir)) catch { case NonFatal(_) => () }
       spark.catalog.clearCache()
       jobs.clear(); stages.clear(); stageToJob.clear()
+      finalPlan = None
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      run(fn(spark, sfDir))
+      val df = fn(spark, sfDir)
+      run(df)
       val wall = (System.nanoTime() - t0) / 1e9
+      val initialPlan = df.queryExecution.explainString(FormattedMode)
       spark.catalog.clearCache()
       Thread.sleep(300) // let listener events drain
       spark.sparkContext.removeSparkListener(listener)
@@ -96,6 +108,10 @@ object StageProbe {
         println(f"  stage ${s.id}%3d wall ${s.wallMs / 1e3}%6.2fs tasks=${s.tasks}%4d " +
           f"taskTime=${s.taskMs / 1e3}%7.2fs  ${s.name.take(100)}")
       }
+      println("  -- initial plan --")
+      println(initialPlan)
+      println("  -- final adaptive plan of the timed run --")
+      println(finalPlan.getOrElse("(not captured)"))
     }
     spark.stop()
   }

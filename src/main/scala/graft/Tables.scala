@@ -16,22 +16,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** InferFiltersFromGenerate turns every `explode(f(x))` into a
-    * pushed-down filter `size(f(x)) > 0 AND isnotnull(f(x))` — filter
-    * pushdown then re-evaluates the ENTIRE array expression (tokenize/
-    * shingle/distinct) a second time below the exchange, in the scan
-    * stage. Measured here: q_contamination 7.5s → sub-second once
-    * excluded. The generate handles empty arrays itself, so the
-    * inferred filter only ever duplicates compute — at 100 TB that is
-    * a second full tokenization of the corpus inside the scan stage. */
-  private def excludeGenerateFilterInference(spark: SparkSession): Unit = {
-    val key = "spark.sql.optimizer.excludedRules"
-    val rule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-    val cur = spark.conf.getOption(key).filter(_.nonEmpty)
-    if (!cur.exists(_.contains(rule)))
-      spark.conf.set(key, cur.map(_ + "," + rule).getOrElse(rule))
-  }
-
   /** Per-(session, dir, table) memo of the LAZY source plan — a
     * catalog-style metadata cache (r18, guide §6: repeated listing/
     * schema inference is driver work every query pays again). A
@@ -56,7 +40,6 @@ object Tables {
     // with integer division — `ts div 1000`, NOT `/ 1000` which would go
     // through double and lose precision above 2^53 nanos.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    excludeGenerateFilterInference(spark)
     val df = spark.read.parquet(s"$sfDir/$name.parquet")
     if (df.schema.exists(f => f.name == "ts" && f.dataType == LongType))
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))

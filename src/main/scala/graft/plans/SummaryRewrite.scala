@@ -35,6 +35,15 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * modifiers, non-attribute group keys, or a Filter between the agg
   * and the base is left untouched (a dims-only filter is safe in
   * principle — not implemented, keep the rule conservative).
+  *
+  * A LIVE summary — a view that reads the base's own source, such as
+  * an unmaterialized aggregate DataFrame over the fact — is never a
+  * rewrite target. Substituting it saves no scan, and it cannot be
+  * made safe: the rule runs inside the operator-optimization fixpoint,
+  * where column pruning trims the substituted copy of the view into an
+  * aggregate that no longer matches the registered one, the rule
+  * rewrites that copy again, and the plan nests one level deeper per
+  * iteration until the stack overflows.
   */
 object SummaryRewrite extends Rule[LogicalPlan] {
 
@@ -47,13 +56,20 @@ object SummaryRewrite extends Rule[LogicalPlan] {
 
   private val registry = new java.util.concurrent.CopyOnWriteArrayList[Summary]()
 
+  /** Registers `summary` as a rewrite target for aggregates over
+    * `base`; a live summary (see above) is ignored. */
   def register(base: DataFrame, summary: DataFrame, dims: Seq[String],
                sums: Map[String, String] = Map.empty,
                cnt: Option[String] = None,
                mins: Map[String, String] = Map.empty,
-               maxs: Map[String, String] = Map.empty): Unit =
-    registry.add(Summary(strip(base.queryExecution.analyzed),
-      summary.queryExecution.analyzed, dims.toSet, sums, cnt, mins, maxs))
+               maxs: Map[String, String] = Map.empty): Unit = {
+    val basePlan = strip(base.queryExecution.analyzed)
+    val view = summary.queryExecution.analyzed
+    val baseLeaves = basePlan.collectLeaves()
+    val live = view.collectLeaves().exists(l => baseLeaves.exists(_.sameResult(l)))
+    if (!live)
+      registry.add(Summary(basePlan, view, dims.toSet, sums, cnt, mins, maxs))
+  }
 
   def clear(): Unit = registry.clear()
 
@@ -72,10 +88,6 @@ object SummaryRewrite extends Rule[LogicalPlan] {
 
   private def rewrite(agg: Aggregate, s: Summary): Option[Aggregate] = {
     if (!strip(agg.child).sameResult(s.base)) return None
-    // never rewrite the view's own defining aggregate (a summary
-    // registered as a live aggregate df would otherwise self-reference
-    // and the fixpoint optimizer would grow the plan forever)
-    if (agg.sameResult(strip(s.view))) return None
     val viewAttr: Map[String, Attribute] =
       s.view.output.map(a => a.name -> a).toMap
 

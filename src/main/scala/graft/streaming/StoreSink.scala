@@ -3,6 +3,7 @@ package graft.streaming
 import java.time.Instant
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, concat_ws}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
@@ -42,4 +43,11 @@ object StoreSink {
     store.rangeDelete(from, to)
     store.upsert(authoritative)
   }
+
+  /** Adds the store key `key` = `<tsCol in epoch seconds>|<token>`.
+    * A token's rows of different windows are different rows; keyed on
+    * the token alone, publishing window H+1 would evict window H's row
+    * of every token the two windows share. */
+  def windowKeyed(rows: DataFrame, tsCol: String): DataFrame =
+    rows.withColumn("key", concat_ws("|", col(tsCol).cast("long"), col("token")))
 }

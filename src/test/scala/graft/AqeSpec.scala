@@ -69,4 +69,16 @@ class AqeSpec extends SparkSpec {
       assert(plan.toString.contains("AQEShuffleRead coalesced"), plan.toString)
     }
   }
+
+  test("a fresh GraftSession carries the posture before any table load") {
+    // a new session on the suite's context: its conf comes from what
+    // GraftSession set at build time, untouched by other tests and by
+    // any Tables.load
+    val fresh = spark.newSession()
+    assert(fresh.sql("SELECT graft_cosine(array(1.0D, 0.0D), array(1.0D, 0.0D))")
+      .head().getDouble(0) === 1.0)
+    assert(fresh.conf.get("spark.sql.join.preferSortMergeJoin") === "false")
+    assert(fresh.conf.get("spark.sql.optimizer.excludedRules")
+      .contains("InferFiltersFromGenerate"))
+  }
 }

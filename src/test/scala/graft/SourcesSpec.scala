@@ -372,8 +372,30 @@ class SourcesSpec extends SparkSpec {
     val lines = scala.io.Source.fromFile(csv.head).getLines().toSeq
     assert(lines.head === "token,cnt")
     assert(lines.size > 1)
-    val store = new ParquetResultStore(spark, s"$dir/out/results", "token", "win_start")
+    val store = new ParquetResultStore(spark, s"$dir/out/results", "key", "win_start")
     assert(store.read().count() === lines.size - 1)
+  }
+
+  test("BatchJob: publishing consecutive hours keeps both hours' rows") {
+    val dir = tmpDir("batchjob2")
+    Sinks.partitionedByHour(table("events"), "ts", s"$dir/hours")
+    val hours = Seq(TimeWindow.hour(2024, 1, 1, 0), TimeWindow.hour(2024, 1, 1, 1))
+    val published = hours.map { w =>
+      BatchJob.run(spark, s"$dir/hours", s"$dir/out", w)
+      val csv = new java.io.File(s"$dir/out/top10")
+        .listFiles.filter(_.getName.endsWith(".csv")).head
+      val src = scala.io.Source.fromFile(csv)
+      try w.start -> src.getLines().drop(1).map(_.split(",")(0)).toSet
+      finally src.close()
+    }
+    // the hours share a token: keyed on the token alone, publishing
+    // the second hour would evict the first hour's row for it
+    assert(published(0)._2.intersect(published(1)._2).nonEmpty, published)
+    val stored = new ParquetResultStore(spark, s"$dir/out/results", "key", "win_start")
+      .read().collect()
+      .map(r => r.getAs[java.sql.Timestamp]("win_start").toInstant -> r.getAs[String]("token"))
+    assert(stored.toSet === published.flatMap { case (w, ts) => ts.map(w -> _) }.toSet)
+    assert(stored.length === stored.toSet.size)
   }
 
   test("ParquetResultStore range-delete + upsert semantics") {

@@ -3,16 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all specs (one JVM-wide session keeps the
-  * suite fast; tests must not mutate global conf). */
+/** Shared local session for all specs, built with graft's engine
+  * posture (GraftSession) so the tests run the plans Verify checks and
+  * Bench times. One JVM-wide session keeps the suite fast; tests must
+  * not mutate global conf. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .getOrCreate()

@@ -853,8 +853,7 @@ class StreamingSpec extends SparkSpec {
       .option("checkpointLocation", s"$dir/ckpt").start()
     q.awaitTermination()
 
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved :+ graft.plans.SummaryRewrite
+    // SummaryRewrite comes with the session's GraftExtensions
     try {
       val fact = spark.read.parquet(s"$dir/in")
       graft.plans.SummaryRewrite.register(fact,
@@ -879,10 +878,7 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r =>
           (r.getString(0), math.round(r.getDouble(1) * 100), r.getLong(2))).toSet
       assert(got === want)
-    } finally {
-      spark.experimental.extraOptimizations = saved
-      graft.plans.SummaryRewrite.clear()
-    }
+    } finally graft.plans.SummaryRewrite.clear()
   }
 
   test("streaming-maintained metric grid serves the calibration-family head via SummaryRewrite") {
@@ -908,8 +904,7 @@ class StreamingSpec extends SparkSpec {
       .option("checkpointLocation", s"$dir/ckpt").start()
     mq.awaitTermination()
 
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved :+ graft.plans.SummaryRewrite
+    // SummaryRewrite comes with the session's GraftExtensions
     try {
       val fact = spark.read.parquet(s"$dir/in")
       graft.plans.SummaryRewrite.register(fact,
@@ -961,10 +956,7 @@ class StreamingSpec extends SparkSpec {
       assert(gotBinned === wantBinned)
       assert(gotBinned.nonEmpty && gotHist.size > gotBinned.size,
         "grid must be finer than its bin rollup")
-    } finally {
-      spark.experimental.extraOptimizations = saved
-      graft.plans.SummaryRewrite.clear()
-    }
+    } finally graft.plans.SummaryRewrite.clear()
   }
 
   test("observe surfaces per-batch gate metrics in streaming progress") {

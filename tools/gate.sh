@@ -34,7 +34,10 @@ done
 OPENS="$OPENS --add-opens=java.base/sun.nio.ch=ALL-UNNAMED"
 OPENS="$OPENS --add-opens=java.base/sun.nio.cs=ALL-UNNAMED"
 OPENS="$OPENS --add-opens=java.base/sun.security.action=ALL-UNNAMED"
-run_jvm() { java -Xmx100g -cp "$CP" $OPENS "$@"; }
+# Heap sized to the box the way the Tier-1 test command sizes it: half
+# of MemTotal, clamped to 2-8 GB. SPARK_DRIVER_MEM overrides it.
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
+run_jvm() { java -Xmx"$HEAP" -cp "$CP" $OPENS "$@"; }
 
 echo "== gate: compile + test =="
 sbt -batch compile test
