@@ -11276,10 +11276,9 @@ object SparkEntry {
       """WITH t AS (SELECT
         |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
         |  FROM documents),
-        |bg AS (SELECT
-        |    string_split(p, chr(1))[1] AS w1, string_split(p, chr(1))[2] AS w2
+        |bg AS (SELECT p.w1 AS w1, p.w2 AS w2
         |  FROM (SELECT unnest(list_transform(range(1, len(tk)),
-        |      i -> tk[i] || chr(1) || tk[i+1])) AS p
+        |      i -> struct_pack(w1 := tk[i], w2 := tk[i+1]))) AS p
         |    FROM t WHERE len(tk) >= 2)),
         |cxy AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS cxy
         |  FROM bg GROUP BY 1, 2),
@@ -11298,10 +11297,9 @@ object SparkEntry {
       """WITH t AS (SELECT source,
         |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
         |  FROM documents),
-        |bg AS (SELECT source,
-        |    string_split(p, chr(1))[1] AS w1, string_split(p, chr(1))[2] AS w2
+        |bg AS (SELECT source, p.w1 AS w1, p.w2 AS w2
         |  FROM (SELECT source, unnest(list_transform(range(1, len(tk)),
-        |      i -> tk[i] || chr(1) || tk[i+1])) AS p
+        |      i -> struct_pack(w1 := tk[i], w2 := tk[i+1]))) AS p
         |    FROM t WHERE len(tk) >= 2)),
         |cxy AS (SELECT source, w1, w2, CAST(count(*) AS BIGINT) AS cxy
         |  FROM bg GROUP BY 1, 2, 3),

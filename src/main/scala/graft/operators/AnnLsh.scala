@@ -135,42 +135,21 @@ object AnnLsh {
     cosineNearDupsGrouped(df, idCol, vecCol, theta,
       reps => bucketedExact(reps, "id", "vec", numPlanes, tables, dim))
 
-  /** r19 (guide §8): bucket keys, the per-pair cosine, and the theta
-    * verdict are all functions of the VECTOR alone, so rows with
-    * bit-identical vectors are interchangeable — yet verbatim
+  /** r19: the bucket join and cosine verify run over one
+    * representative per bit-identical vector (ContentGroups); verbatim
     * duplicates collide in every LSH table and square the per-bucket
-    * self-join. Group ids by vector (one narrow window pass), run the
-    * bucket join + cosine verify over one representative per distinct
-    * vector, and expand members afterwards; within-group member pairs
-    * score cosine(v, v) — computed on the group's own vector, so the
-    * value (and any theta decision on it) is bit-identical to the
-    * ungrouped join's. On a duplicate-free corpus the grouping
-    * degenerates to the window pass. */
+    * self-join. */
   private def cosineNearDupsGrouped(df: DataFrame, idCol: String,
                                     vecCol: String, theta: Double,
                                     bucketer: DataFrame => DataFrame): DataFrame = {
     import graft.Materialize._
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("vec"))
-    val mem = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .select(col("id"), col("vec"), min(col("id")).over(w).as("sid"),
-        count(lit(1)).over(w).as("cnt"))
-      .eagerCheckpoint() // (id, vec, sid, cnt): reps + expansions
-    val reps = mem.filter(col("id") === col("sid")).select(col("id"), col("vec"))
-    val repPairs = cosineNearDupsFrom(bucketer(reps), theta)
+    val mem = ContentGroups.members(
+        df.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec")
+      .eagerCheckpoint() // (id, sid, cnt, vec): reps + expansions
+    val repPairs = cosineNearDupsFrom(bucketer(ContentGroups.reps(mem)), theta)
       .select(col("i").as("sa"), col("j").as("sb"), col("sim"))
-    val cross = repPairs
-      .join(mem.select(col("sid").as("sa"), col("id").as("ia")), "sa")
-      .join(mem.select(col("sid").as("sb"), col("id").as("ib")), "sb")
-      .select(least(col("ia"), col("ib")).as("i"),
-        greatest(col("ia"), col("ib")).as("j"), col("sim"))
-    val dup = mem.filter(col("cnt") > 1)
-    val within = dup.select(col("sid"), col("id").as("i"), col("vec"))
-      .join(dup.select(col("sid"), col("id").as("j")), "sid")
-      .filter(col("i") < col("j"))
-      .select(col("i"), col("j"),
-        Vectors.cosine(col("vec"), col("vec")).as("sim"))
-      .filter(col("sim") >= theta)
-    cross.unionByName(within)
+    ContentGroups.pairs(mem, "vec", repPairs, directed = false)(
+      (a, b) => Seq(Vectors.cosine(a, b).as("sim")), col("sim") >= theta)
   }
 
   private def cosineNearDupsFrom(b: DataFrame, theta: Double): DataFrame = {

@@ -173,31 +173,17 @@ object Dedup {
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => xxhash64(slice(col("sig"), b * lit(rowsPerBand) + 1,
             lit(rowsPerBand))))).as(Seq("band", "bhash")))
-    // r19 (guide §8): the signature, every band key, and the verify
-    // jaccard are functions of the shingle SET alone, so docs with
-    // identical sets are interchangeable — yet verbatim duplicates
-    // land in the same bucket in all 16 bands, SQUARE the bucket
-    // self-join, and re-pay the exact-jaccard verify per copy (the r14
-    // sf3 fit's 0.059·n² term is exactly this). On the exhaustive path,
-    // group ids by set identity (md5 over the sorted gram list, one
-    // narrow window pass), run banding + candidate join + verify over
-    // one representative per distinct set, and expand members
-    // afterwards; within-group member pairs share the whole set
-    // (jaccard = |A|/|A| = exactly 1.0) and are emitted directly. On a
-    // duplicate-free corpus the grouping degenerates to the window
-    // pass. The capped (maxBucket) path keeps the per-member bucket
-    // semantics below, untouched.
+    // r19: on the exhaustive path, banding, the candidate join and the
+    // verify run over one representative per distinct shingle set
+    // (ContentGroups). Verbatim duplicates land in the same bucket in
+    // all 16 bands and square the bucket self-join — the r14 sf3 fit's
+    // 0.059·n² term is exactly this. The capped (maxBucket) path keeps
+    // the per-member bucket semantics below, untouched.
     if (maxBucket == Int.MaxValue) {
-      val w = Window.partitionBy(col("_k"))
-      val mem = sh
-        .select(col("id"),
-          md5(concat_ws("\u0001", array_sort(col("sh")))).as("_k"))
-        .select(col("id"), min(col("id")).over(w).as("sid"),
-          count(lit(1)).over(w).as("cnt"))
+      val mem = ContentGroups.members(
+          sh.select(col("id"), array_sort(col("sh")).as("sh")), "sh")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val reps = sh
-        .join(mem.filter(col("id") === col("sid")).select("id"), "id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val reps = ContentGroups.reps(mem)
       val banded = bandsOf(reps)
       val repCands = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bhash") === col("b.bhash") &&
@@ -211,24 +197,9 @@ object Dedup {
           .hint("shuffle_hash"), "sb")
         .select(col("sa"), col("sb"), jaccard(col("sh_a"), col("sh_b")).as("jac"))
         .filter(col("jac") >= theta)
-      // cross-group expansion: jaccard(i, j) = jaccard(rep_i, rep_j);
-      // groups are disjoint, least/greatest restores the i < j contract
-      val cross = repPairs
-        .join(mem.select(col("sid").as("sa"), col("id").as("ia")), "sa")
-        .join(mem.select(col("sid").as("sb"), col("id").as("ib")), "sb")
-        .select(least(col("ia"), col("ib")).as("i"),
-          greatest(col("ia"), col("ib")).as("j"), col("jac"))
-      val out =
-        if (1.0 < theta) cross
-        else {
-          val dup = mem.filter(col("cnt") > 1)
-          val within = dup.select(col("sid"), col("id").as("i"))
-            .join(dup.select(col("sid"), col("id").as("j")), "sid")
-            .filter(col("i") < col("j"))
-            .select(col("i"), col("j"), lit(1.0).as("jac"))
-          cross.unionByName(within)
-        }
-      return (out, Seq(sh0, mem, reps))
+      val out = ContentGroups.pairs(mem, "sh", repPairs, directed = false)(
+        (a, b) => Seq(jaccard(a, b).as("jac")), col("jac") >= theta)
+      return (out, Seq(sh0, mem))
     }
     val banded = bandsOf(sh)
     // Opt-in candidate-pair budget (default OFF = Int.MaxValue, so the
@@ -367,33 +338,20 @@ object Dedup {
         .filter(col("containment") >= minContainment)
       return (out, Seq(sh0))
     }
-    // Exhaustive path, r19 (guide §8: decide on proxies, pay the
-    // quadratic work once per DISTINCT content). shared(i, j) and both
-    // set sizes are functions of the shingle SETS alone, so docs with
-    // identical sets are interchangeable in every pair — yet the gram
-    // self-join pays for each copy separately, and on a corpus with
-    // verbatim duplicates the join input (Σ_g df²) and the pre-filter
-    // pair count SQUARE in the copy count (measured at sf1: 279 M join
-    // rows → 227 M distinct (i, j) pairs, of which 0.22% survive the
-    // threshold). Group docs by set identity (md5 over the sorted gram
-    // list — the CurationPipeline exact-dedup convention), run the
-    // count join over one representative per group, and expand the
-    // qualifying rep pairs back to member pairs afterwards: the
-    // quadratic stage shrinks by the square of the mean group size,
-    // while the expansion step is sized by the true OUTPUT. On a
-    // duplicate-free corpus the grouping degenerates to one narrow
-    // window pass (every doc its own rep) and nothing else changes.
-    val w = Window.partitionBy(col("_k"))
-    val mem = sh
-      .select(col("id"),
-        md5(concat_ws("\u0001", array_sort(col("sh")))).as("_k"))
-      .select(col("id"), min(col("id")).over(w).as("sid"),
-        count(lit(1)).over(w).as("cnt"))
-      // (id, sid, cnt): consumed by reps + both expansions; a lazy
-      // persist (not a checkpoint) so the loan variant can release it
+    // Exhaustive path, r19: the gram self-join runs over one
+    // representative per distinct shingle set (ContentGroups). On a
+    // corpus with verbatim duplicates its input (Σ_g df²) and the
+    // pre-filter pair count square in the copy count (measured at sf1:
+    // 279 M join rows → 227 M distinct (i, j) pairs, of which 0.22%
+    // survive the threshold). Containment is directed, so the member
+    // expansion keeps both orders.
+    val mem = ContentGroups.members(
+        sh.select(col("id"), array_sort(col("sh")).as("sh")), "sh")
+      // consumed by reps + both expansions; a lazy persist (not a
+      // checkpoint) so the loan variant can release it
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val reps = sh.join(mem.filter(col("id") === col("sid")).select("id"), "id")
-    val rsizes = reps.select(col("id").as("si"), size(col("sh")).as("size_i"))
+    val reps = ContentGroups.reps(mem)
+    val rsizes = reps.select(col("id").as("sa"), size(col("sh")).as("size_i"))
     val rex = reps.select(col("id"), explode(col("sh")).as("g"))
     // stream-and-shuffle both sides on the gram: the planner's estimate
     // for the exploded cached side is the raw scan size, so it would
@@ -403,35 +361,20 @@ object Dedup {
     val repPairs = rex.as("a").hint("shuffle_hash")
       .join(rex.as("b").hint("shuffle_hash"),
         col("a.g") === col("b.g") && col("a.id") =!= col("b.id"))
-      .groupBy(col("a.id").as("si"), col("b.id").as("sj"))
+      .groupBy(col("a.id").as("sa"), col("b.id").as("sb"))
       .agg(count(lit(1)).as("shared"))
-      .join(rsizes, "si")
-      .select(col("si"), col("sj"), col("shared"),
+      .join(rsizes, "sa")
+      .select(col("sa"), col("sb"), col("shared"),
         (col("shared").cast("double") / col("size_i").cast("double"))
           .as("containment"))
       .filter(col("containment") >= minContainment)
-    // cross-group expansion: containment(i→j) = containment(rep_i→rep_j)
-    // for every i in rep_i's group, j in rep_j's group (disjoint groups
-    // ⇒ i ≠ j holds by construction)
-    val cross = repPairs
-      .join(mem.select(col("sid").as("si"), col("id").as("i")), "si")
-      .join(mem.select(col("sid").as("sj"), col("id").as("j")), "sj")
-      .select(col("i"), col("j"), col("shared"), col("containment"))
-    // within-group pairs share the WHOLE set: shared = |A|, containment
-    // = |A|/|A| = exactly 1.0 — emitted only when 1.0 clears the
-    // threshold, for every ordered pair of distinct members
-    val out =
-      if (1.0 < minContainment) cross
-      else {
-        val m = mem.filter(col("cnt") > 1)
-        val within = m.select(col("sid"), col("id").as("i"))
-          .join(m.select(col("sid"), col("id").as("j")), "sid")
-          .filter(col("i") =!= col("j"))
-          .join(rsizes.select(col("si").as("sid"), col("size_i")), "sid")
-          .select(col("i"), col("j"), col("size_i").cast("long").as("shared"),
-            lit(1.0).as("containment"))
-        cross.unionByName(within)
-      }
+    def shared(a: Column, b: Column): Column =
+      size(array_intersect(a, b)).cast("long")
+    val out = ContentGroups.pairs(mem, "sh", repPairs, directed = true)(
+      (a, b) => Seq(shared(a, b).as("shared"),
+        (shared(a, b).cast("double") / size(a).cast("double"))
+          .as("containment")),
+      col("containment") >= minContainment)
     (out, Seq(sh0, mem))
   }
 
@@ -741,27 +684,13 @@ object Dedup {
     val keyBlocks = 2
     val blocks = maxHamming + keyBlocks
     require(blocks <= 64, s"maxHamming $maxHamming too large for 64-bit simhash")
-    // r19 (guide §8): every quantity downstream — the C(b, 2) block
-    // keys, the hamming distance, the radius verdict — is a function of
-    // the 64-bit SIGNATURE alone, so docs with identical signatures are
-    // interchangeable, yet the block join paid for each copy separately
-    // in all 36 tables (verbatim duplicates square the per-key bucket
-    // sizes AND are rediscovered once per table before the distinct —
-    // measured at sf1: 163 s of task time). Group ids by signature (an
-    // exact 8-byte key, one narrow window pass), run the pigeonhole
-    // join over one representative per distinct signature, and expand
-    // members afterwards. Within-group member pairs are hamming-0 true
-    // duplicates (bit_count(s ^ s) = 0 ≤ maxHamming always) and are
-    // emitted directly — their quadratic count is the OUTPUT size. On a
-    // duplicate-free corpus the grouping is a no-op window pass.
-    val w = Window.partitionBy(col("sig"))
-    val mem = sigs
-      .select(col("id"), col("sig"), min(col("id")).over(w).as("sid"),
-        count(lit(1)).over(w).as("cnt"))
-      .eagerCheckpoint() // (id, sig, sid, cnt): reps + both expansions
-    val reps = mem.filter(col("id") === col("sid"))
-      .select(col("id"), col("sig"))
-    val keyed = reps
+    // r19: the block join runs over one representative per distinct
+    // signature (ContentGroups). Verbatim duplicates square the per-key
+    // bucket sizes AND are rediscovered once per table before the
+    // distinct — measured at sf1: 163 s of task time.
+    val mem = ContentGroups.members(sigs, "sig")
+      .eagerCheckpoint() // (id, sid, cnt, sig): reps + both expansions
+    val keyed = ContentGroups.reps(mem)
       .select(col("id"), col("sig"),
         posexplode(graft.functions.NativeExpressions.simHashBlockKeys(
           col("sig"), blocks, keyBlocks)).as(Seq("tbl", "key")))
@@ -772,19 +701,7 @@ object Dedup {
         hamming(col("a.sig"), col("b.sig")).as("ham"))
       .filter(col("ham") <= maxHamming)
       .distinct()
-    // cross-group: ham(i, j) = ham(rep_i, rep_j) for every member pair;
-    // groups are disjoint so least/greatest restores the i < j contract
-    val cross = repPairs
-      .join(mem.select(col("sid").as("sa"), col("id").as("ia")), "sa")
-      .join(mem.select(col("sid").as("sb"), col("id").as("ib")), "sb")
-      .select(least(col("ia"), col("ib")).as("i"),
-        greatest(col("ia"), col("ib")).as("j"), col("ham"))
-    val dup = mem.filter(col("cnt") > 1)
-    val within = dup.select(col("sid"), col("id").as("i"), col("sig"))
-      .join(dup.select(col("sid"), col("id").as("j")), "sid")
-      .filter(col("i") < col("j"))
-      .select(col("i"), col("j"),
-        hamming(col("sig"), col("sig")).as("ham"))
-    cross.unionByName(within)
+    ContentGroups.pairs(mem, "sig", repPairs, directed = false)(
+      (a, b) => Seq(hamming(a, b).as("ham")), col("ham") <= maxHamming)
   }
 }

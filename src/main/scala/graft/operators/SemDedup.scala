@@ -90,34 +90,26 @@ object SemDedup {
 
   /** (vec_id, cell) for every KEPT vector; `cell` is the coarse cid.
     *
-    * r19 (guide §8): the cell id, the refined key and every pairwise
-    * cosine are functions of the VECTOR alone, so rows with
-    * bit-identical vectors are interchangeable — yet verbatim
+    * r19: the guarded assignment and the cell self-join run over one
+    * representative per bit-identical vector (ContentGroups) — verbatim
     * duplicates all land in one refined cell and square its self-join
     * (measured at sf1: 13.4 s of cosine task time squeezed onto 3
-    * AQE-coalesced tasks, the per-row work being invisible to
-    * byte-based coalescing). Group ids by vector, run the guarded
-    * assignment and the cell self-join over one representative per
-    * distinct vector (cell sizes weighted by group counts, so the
-    * maxCell skew guard sees the TRUE sizes), and decide members
-    * arithmetically: j is dropped iff some same-cell candidate i < j
-    * with cos ≥ theta exists, i.e. iff
+    * AQE-coalesced tasks). Cell sizes are weighted by group counts, so
+    * the maxCell skew guard sees the TRUE sizes, and members are
+    * decided arithmetically: j is dropped iff some same-cell candidate
+    * i < j with cos ≥ theta exists, i.e. iff
     *   min(sid over qualifying OTHER groups) < j, or
     *   its own group self-qualifies (cos(v, v) ≥ theta — computed, not
     *   assumed, so any theta is honored bitwise) and j is not the
-    *   group's minimum id.
-    * On a duplicate-free corpus the grouping degenerates to one narrow
-    * window pass over (id, vec). */
+    *   group's minimum id. */
   def kept(embs: DataFrame, idCol: String, vecCol: String,
            nlist: Int = 16, theta: Double = 0.4,
            maxCell: Int = 0, subBits: Int = 4): DataFrame = {
     val dim = 64
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("vec"))
-    val mem = embs.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .select(col("id"), col("vec"), min(col("id")).over(w).as("sid"),
-        count(lit(1)).over(w).as("cnt"))
-      .eagerCheckpoint() // (id, vec, sid, cnt)
-    val repsBase = mem.filter(col("id") === col("sid"))
+    val mem = ContentGroups.members(
+        embs.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec")
+      .eagerCheckpoint() // (id, sid, cnt, vec)
+    val repsBase = ContentGroups.reps(mem)
     // centroids come from the FULL corpus (stride-init is a function of
     // every vec_id), only the assignment scan shrinks to the reps
     val centroids = AnnIvf.fit(embs, idCol, vecCol, nlist, iters = 0)

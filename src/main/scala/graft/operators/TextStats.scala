@@ -354,37 +354,25 @@ object TextStats {
     val pairDocs = docs.join(ids, docs(idCol) === ids("_pid"), "left_semi")
     val tkAll = pairDocs.select(col(idCol).as("id"),
       TextAnalysis.tokens(col(textCol)).as("tk"))
-    // r19 (guide §8): every score is a function of the two TOKEN
-    // SEQUENCES alone, so pairs between verbatim copies — which a
-    // near-dup pair report is largely MADE OF on a duplicated corpus
-    // (pairs square in the copy count) — recompute identical scores,
-    // and the Σ_pairs len(i) overlap expand pays for each copy
+    // r19: the gram build and the overlap expand run over one
+    // representative pair per distinct (token sequence, token sequence)
+    // combination (ContentGroups) — a near-dup pair report on a
+    // duplicated corpus is largely pairs between verbatim copies
     // (measured at sf1: ~175 M expand rows for ~1 M pairs over ~1 k
-    // distinct texts). Group pair-member ids by token-sequence
-    // identity (md5 over the delimiter-joined tokens, one narrow
-    // window pass), score one representative pair per distinct
-    // (tid_i, tid_j) combination, and re-attach scores to the original
-    // pairs by that key afterwards — the gram build and the expand
-    // shrink to the distinct-text level while every input pair still
-    // emits its own row (the retention contract). A pair id with no
-    // doc row keeps itself as its own group (coalesce), reproducing
-    // the old left-join + zero-fill behavior. On a duplicate-free
-    // corpus the grouping degenerates to the window pass.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("_k"))
-    val mem = tkAll
-      .select(col("id"), md5(concat_ws("\u0001", col("tk"))).as("_k"))
-      .select(col("id"), min(col("id")).over(w).as("tid"))
-      .eagerCheckpoint() // narrow (id, tid)
+    // distinct texts). `reattach` then copies the scores back, so every
+    // input pair still emits its own row (the retention contract). A
+    // pair id with no doc row is its own group (coalesce) and scores
+    // as an empty doc through the callers' left joins and zero-fills.
+    val mem = ContentGroups.members(tkAll, "tk")
+      .eagerCheckpoint() // (id, sid, cnt, tk)
     val pReps = p
-      .join(mem.select(col("id").as("i"), col("tid").as("ti")), Seq("i"), "left")
-      .join(mem.select(col("id").as("j"), col("tid").as("tj")), Seq("j"), "left")
+      .join(mem.select(col("id").as("i"), col("sid").as("ti")), Seq("i"), "left")
+      .join(mem.select(col("id").as("j"), col("sid").as("tj")), Seq("j"), "left")
       .select(col("i"), col("j"),
         coalesce(col("ti"), col("i")).as("ti"),
         coalesce(col("tj"), col("j")).as("tj"))
     val repP = pReps.select(col("ti").as("i"), col("tj").as("j")).distinct()
-    val repTk = tkAll
-      .join(mem.filter(col("id") === col("tid")).select("id"), "id")
-      .eagerCheckpoint()
+    val repTk = ContentGroups.reps(mem).select(col("id"), col("tk"))
     (pReps, repP, repTk)
   }
 

@@ -179,18 +179,35 @@ class DedupSpec extends SparkSpec {
     Dedup.withIncrementalNearDups(half, other, "doc_id", "text")(_.count())
     assert(cachedIds === before, "withIncrementalNearDups leaked cached blocks")
 
-    val n3 = Dedup.withContainmentPairs(docs.filter(col("doc_id") < 50),
-      "doc_id", "text")(_.count())
-    assert(n3 >= 0)
+    def containmentRows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r =>
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    val few = docs.filter(col("doc_id") < 50)
+    val loanedC = Dedup.withContainmentPairs(few, "doc_id", "text")(containmentRows)
     assert(cachedIds === before, "withContainmentPairs leaked cached blocks")
 
-    // and the loaned result matches the plain variant's rows
+    // and the loaned results match the plain variants' rows
     val loaned = Dedup.withMinHashNearDups(docs, "doc_id", "text", theta = 0.8)(
       _.select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     val plain = Dedup.minHashNearDups(docs, "doc_id", "text", theta = 0.8)
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(loaned === plain)
+    assert(loanedC === containmentRows(Dedup.containmentPairs(few, "doc_id", "text")))
     spark.catalog.clearCache() // drop the plain variant's session cache
+  }
+
+  test("a token holding U+0001 is not the two tokens it separates") {
+    import SparkSpec.spark.implicits._
+    // "x\u0001y" is ONE token (the tokenizer splits on ASCII whitespace
+    // only), so the unigram sets {x\u0001y} and {x, y} share nothing —
+    // yet joined with a U+0001 separator they spell the same string
+    val d = Seq((1L, "x\u0001y"), (2L, "x y")).toDF("doc_id", "text")
+    val minhash = Dedup.minHashNearDups(d, "doc_id", "text", theta = 0.8,
+      shingleN = 1).collect().toSeq
+    val containment = Dedup.containmentPairs(d, "doc_id", "text", shingleN = 1,
+      minContainment = 0.5).collect().toSeq
+    assert(minhash.isEmpty && containment.isEmpty,
+      s"minhash: $minhash, containment: $containment")
   }
 
   test("leakage-safe split: no near-dup edge straddles folds; doc-keyed folds do") {

@@ -178,6 +178,33 @@ class TextStatsSpec extends SparkSpec {
     assert(f2 === 0.5)                    // 2·1/(3+1)
   }
 
+  test("pair metrics: a pair scores the same whatever else is in the report") {
+    // doc 1's single token "x\u0001y" and doc 2's tokens "x", "y" are
+    // different sequences that join to one string under a U+0001
+    // separator; grouping must not score (2,3) as if it were (1,3)
+    val docs = Seq((1L, "x\u0001y"), (2L, "x y"), (3L, "x z"))
+      .toDF("doc_id", "text")
+    val both = Seq((1L, 3L), (2L, 3L)).toDF("i", "j")
+    val alone = Seq((2L, 3L)).toDF("i", "j")
+    type Metric = (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
+      String, String, Int) => org.apache.spark.sql.DataFrame
+    val metrics = Seq[(String, Metric)](
+      "rouge" -> (TextStats.rougePairs _), "bleu" -> (TextStats.bleuPairs _),
+      "chrf" -> (TextStats.chrfPairs _))
+    val differing = metrics.flatMap { case (name, metric) =>
+      def row23(pairs: org.apache.spark.sql.DataFrame): Row =
+        metric(docs, pairs, "doc_id", "text", TextStats.MaxPairReport)
+          .filter(col("i") === 2L && col("j") === 3L).head()
+      val (b, a) = (row23(both), row23(alone))
+      if (b == a) None else Some(s"$name: $b with doc 1 vs $a without")
+    }
+    assert(differing.isEmpty, differing.mkString("; "))
+    // the hand value: "x y" vs "x z" share one of two unigrams each
+    val r = TextStats.rougePairs(docs, both, "doc_id", "text")
+      .filter(col("i") === 2L).select("rouge1_f").head().getDouble(0)
+    assert(r === 0.5)
+  }
+
   test("rougePairs: zero-overlap and degenerate docs score 0.0, never drop") {
     val docs = Seq(
       (1L, "a b"), (2L, "b a"),       // shared unigrams, NO shared bigram

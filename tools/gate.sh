@@ -5,8 +5,10 @@
 # exists so the gate is never partially run again).
 #
 #   tools/gate.sh             # full: compile + tests + both corpora
-#   tools/gate.sh --changed   # incremental Spark side (plan-hash manifest
-#                             # in target/verify_inc), full oracle compare
+#   tools/gate.sh --changed   # incremental Spark side on both corpora
+#                             # (plan-hash manifests in target/verify_inc
+#                             # and target/verify_inc_adv), full oracle
+#                             # compare
 #
 # Exits non-zero on the first failing stage. The final idle-round
 # guard is STRICT BY DEFAULT (r13 verdict item 7): an idle round —
@@ -42,11 +44,22 @@ run_jvm() { java -Xmx"$HEAP" -cp "$CP" $OPENS "$@"; }
 echo "== gate: compile + test =="
 sbt -batch compile test
 
+# advdata/ is generated (gitignored) — a fresh checkout doesn't have
+# it, and running Verify against the missing dir fails every query.
+[ -d "$ADV" ] || python3 tools/make_advdata.py "$(dirname "$SF")/sf0.001" "$ADV"
+
 if [ "$MODE" = "--changed" ]; then
   echo "== gate: incremental Verify (sf0.01) =="
   run_jvm graft.Verify "$SF" target/verify_inc --changed
   echo "== gate: oracle compare (sf0.01, full matrix) =="
   python3 tools/oracle_check.py "$SF" target/verify_inc
+  # the hostile corpus too: an operator change must meet it before the
+  # full gate. The plan hash does not see the data, so after editing
+  # make_advdata.py delete advdata/ and target/verify_inc_adv together.
+  echo "== gate: incremental Verify (adversarial corpus) =="
+  run_jvm graft.Verify "$ADV" target/verify_inc_adv --changed
+  echo "== gate: oracle compare (adversarial corpus, full matrix) =="
+  python3 tools/oracle_check.py "$ADV" target/verify_inc_adv
   ORACLE_JSON=target/verify_inc/oracle_sql.json
 else
   echo "== gate: full Verify (sf0.01) =="
@@ -54,9 +67,6 @@ else
   echo "== gate: oracle compare (sf0.01) =="
   python3 tools/oracle_check.py "$SF" /tmp/gate_sf
   echo "== gate: full Verify (adversarial corpus) =="
-  # advdata/ is generated (gitignored) — a fresh checkout doesn't have
-  # it, and running Verify against the missing dir fails every query.
-  [ -d "$ADV" ] || python3 tools/make_advdata.py /root/testdata/sf0.001 "$ADV"
   rm -rf /tmp/gate_adv && run_jvm graft.Verify "$ADV" /tmp/gate_adv
   echo "== gate: oracle compare (adversarial corpus) =="
   python3 tools/oracle_check.py "$ADV" /tmp/gate_adv

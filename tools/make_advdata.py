@@ -102,6 +102,16 @@ for i, t in enumerate(NASTY):
 # exact duplicate pair (exact dedup + near-dup families)
 docs["text"][130] = docs["text"][101]
 docs["n_chars"][130] = len(docs["text"][101])
+# separator twin: a long doc with ONE inter-token space replaced by
+# U+0001. The two tokens around it become one token, so the twin stays
+# a 3-shingle Jaccard ~0.93 near-dup of its source (it enters the
+# minhash pair report the pair metrics score), yet its token sequence
+# differs — a grouping key that joins tokens with U+0001 would wrongly
+# score the pair as identical.
+twin_src = docs["text"][406]
+cut = twin_src.index(" ", len(twin_src) // 2)
+docs["text"][140] = twin_src[:cut] + "\u0001" + twin_src[cut + 1:]
+docs["n_chars"][140] = len(docs["text"][140])
 
 schema = pa.schema([pa.field("doc_id", pa.int64()),
                     pa.field("text", pa.string()),
