@@ -98,9 +98,13 @@ object Bench {
     val calProbeNames = Seq("q_top10_tokens", "q_bpe_encode")
     val toWarm = selected ++ calProbeNames.filterNot(selected.contains)
       .map(n => n -> SparkEntry.queries(n))
-    // a failing query is recorded as -1; its cause goes to stderr
-    def report(name: String, e: Throwable): Unit =
-      System.err.println(s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+    // a failing query is recorded as -1; its cause goes to stderr and,
+    // for a query that never produced a reading, into the full record
+    val causes = scala.collection.mutable.Map[String, String]()
+    def report(name: String, e: Throwable): Unit = {
+      causes(name) = s"${e.getClass.getName}: ${e.getMessage}"
+      System.err.println(s"[bench] $name failed: ${causes(name)}")
+    }
     toWarm.foreach { case (name, fn) =>
       try run(fn(spark, warmDir)) catch { case NonFatal(e) => report(name, e) }
       spark.catalog.clearCache()
@@ -276,6 +280,7 @@ object Bench {
         s""""queries":{$qs},"soak_1x_vs_10x_sec":$soakJson$soakErrJson,""" +
         s""""soak_1x_vs_30x_sec":$soak30Json,""" +
         s""""calibration":$calJson,"contended":$contended,""" +
+        s""""failures":${JsonUtil.obj(failed.map(n => n -> causes(n)).toMap)},""" +
         s""""_total":${fmt(total)},"_n":${results.size}}"""
     }
     // SPARK_GRAFT_ONLY subsets are local-iteration runs; writing their

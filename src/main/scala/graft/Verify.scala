@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import scala.util.control.NonFatal
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -55,7 +58,7 @@ object Verify {
           .queryExecution.analyzed.canonicalized.toString
         val body = plan + "|" + SparkEntry.oracleSql.getOrElse(name, "")
         Some(org.apache.commons.codec.digest.DigestUtils.md5Hex(body))
-      } catch { case _: Throwable => None } // run it; let the run report
+      } catch { case NonFatal(_) => None } // run it; let the run report
 
     val newManifest = scala.collection.mutable.LinkedHashMap[String, String]()
     val toRun: String => Boolean =
@@ -83,8 +86,9 @@ object Verify {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           System.err.println(f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        } catch { case NonFatal(e) =>
+          System.err.println(
+            s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
           // a crashing query must NOT persist its new plan hash (drop
           // it so the next --changed pass re-runs it) and must not
           // leave an older success's parquet in a PERSISTENT outDir —

@@ -51,12 +51,6 @@ object TextAnalysis {
     length(regexp_replace(text, s"[^!-/:-@\\[-`{-~]", "")).cast("double") /
       greatest(length(text), lit(1)).cast("double")
 
-  /** Mean token length. */
-  def meanTokenLen(text: Column): Column =
-    when(tokenCount(text) === 0, lit(0.0)).otherwise(
-      aggregate(transform(tokens(text), t => length(t).cast("double")),
-        lit(0.0), (acc, x) => acc + x) / tokenCount(text).cast("double"))
-
   val StopwordsEn = Seq("the", "a", "an", "and", "or", "of", "to",
     "in", "is", "on", "for", "with", "as", "at", "by", "it", "that")
 

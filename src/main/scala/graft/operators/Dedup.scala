@@ -82,34 +82,6 @@ object Dedup {
           i => array_min(transform(col("hs"), h => xxhash64(h, i, lit(seed)))))
           .as("sig"))
 
-  /** (id, band, bhash): LSH banding — signature split into `bands`
-    * groups of numHashes/bands, each group hashed. Docs sharing any
-    * (band, bhash) become candidate pairs. */
-  def bandDf(docs: DataFrame, idCol: String, textCol: String,
-             shingleN: Int = 3, numHashes: Int = 64, bands: Int = 16,
-             seed: Long = 0x5EED): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    signatureDf(docs, idCol, textCol, shingleN, numHashes, seed)
-      .select(col("id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice(col("sig"), b * lit(rowsPerBand) + 1,
-            lit(rowsPerBand))))).as(Seq("band", "bhash")))
-  }
-
-  /** Candidate pairs (i < j) from MinHash-LSH banding. The self-join is
-    * per (band index, band hash) bucket — candidate count is O(sum of
-    * bucket²), not O(n²). */
-  def candidatePairs(docs: DataFrame, idCol: String, textCol: String,
-                     shingleN: Int = 3, numHashes: Int = 64,
-                     bands: Int = 16): DataFrame = {
-    val banded = bandDf(docs, idCol, textCol, shingleN, numHashes, bands)
-    banded.as("a").join(banded.as("b"),
-      col("a.band") === col("b.band") && col("a.bhash") === col("b.bhash") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("i"), col("b.id").as("j"))
-      .distinct()
-  }
-
   /** MinHash-LSH near-dup pairs, exact-Jaccard verified: LSH proposes,
     * a shingle-set join over ONLY the candidates confirms. At jaccard
     * ≥ 0.8 with 16 bands × 4 rows the per-pair miss probability is

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Approximate aggregates for 100 TB-scale profiling: all are one-pass,
@@ -24,8 +24,6 @@ object Sketches {
   def hllSketches(df: DataFrame, groupCols: Seq[String], valueCol: String): DataFrame =
     df.groupBy(groupCols.map(col): _*)
       .agg(hll_sketch_agg(col(valueCol)).as("sketch"))
-
-  def hllEstimate(sketch: Column): Column = hll_sketch_estimate(sketch)
 
   /** KLL-style approximate percentiles (one pass, bounded memory;
     * `accuracy` trades memory for error ~ 1/accuracy). */

@@ -23,9 +23,4 @@ object PartitionedSource {
   def readWindow(spark: SparkSession, basePath: String, w: TimeWindow): DataFrame =
     read(spark, basePath).filter(
       w.partitionFilter(col("year"), col("month"), col("day"), col("hour")))
-
-  /** The reference's default mode: previous full hour. */
-  def readPreviousHour(spark: SparkSession, basePath: String,
-                       now: java.time.Instant): DataFrame =
-    readWindow(spark, basePath, TimeWindow.previousHour(now))
 }

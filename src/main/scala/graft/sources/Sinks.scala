@@ -28,10 +28,8 @@ object Sinks {
 
   /** Avro, overwrite — the write half of the reference's read format
     * (TableLoader reads avro; reference App.java:93-95 scans *.avro).
-    * Resolves to the external spark-avro module when it's on the
-    * classpath (real clusters), else to this library's self-contained
-    * `graft-avro` datasource built on the Avro core jars Spark itself
-    * ships — the path executes either way. */
+    * Writes through Spark's built-in Avro file format
+    * ([[TableLoader.avroFormat]]), the same one the reads use. */
   def avro(df: DataFrame, path: String,
            mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).format(TableLoader.avroFormat).save(path)

@@ -7,47 +7,24 @@ import org.apache.spark.sql.types.StructType
   * `spark.read.format("avro").load(files)` (reference App.java:93-95).
   *
   * Formats are Spark datasource names, so anything on the classpath
-  * plugs in. `avro` prefers the external spark-avro module when
-  * deployed; absent that (as in this offline container), it falls back
-  * to the library's own `graft-avro` datasource
-  * ([[graft.sources.avro.GraftAvroDataSource]]) built on the Avro core
-  * jars inside Spark's classpath — the format works either way.
+  * plugs in. `avro` reads through Spark's built-in Avro file format,
+  * which ships inside spark-sql itself (see [[avroFormat]]).
   */
 object TableLoader {
 
   val SupportedFormats: Set[String] = Set("parquet", "csv", "json", "avro", "orc")
 
-  /** The avro provider to use here, most-battle-tested first:
-    *  1. a deployed datasource registering shortName "avro" (the
-    *     external spark-avro module jar);
-    *  2. Spark 4.1's built-in-but-unregistered implementation, invoked
-    *     by class name (the avro code ships inside spark-sql itself,
-    *     only the `format("avro")` registration lives in the module jar);
-    *  3. this library's self-contained [[graft.sources.avro.GraftAvroDataSource]].
-    */
-  lazy val avroFormat: String = {
-    import scala.jdk.CollectionConverters._
-    val registered =
-      try java.util.ServiceLoader
-        .load(classOf[org.apache.spark.sql.sources.DataSourceRegister])
-        .asScala.exists(r =>
-          try r.shortName() == "avro" catch { case _: Throwable => false })
-      catch { case _: Throwable => false }
-    val builtIn = "org.apache.spark.sql.avro.AvroFileFormat"
-    if (registered) "avro"
-    else if (try { Class.forName(builtIn); true } catch { case _: Throwable => false })
-      builtIn
-    else "graft-avro"
-  }
-
-  private def resolve(format: String): String =
-    if (format == "avro") avroFormat else format
+  /** The datasource behind `avro`: Spark's built-in v1 Avro file format,
+    * named by class. The spark-sql jar ships the class but registers no
+    * `avro` short name, so `format("avro")` alone fails to resolve. */
+  val avroFormat: String = "org.apache.spark.sql.avro.AvroFileFormat"
 
   def read(spark: SparkSession, format: String, path: String,
            schema: Option[StructType] = None,
            options: Map[String, String] = Map.empty): DataFrame = {
     require(SupportedFormats.contains(format), s"unsupported format: $format")
-    var base: DataFrameReader = spark.read.format(resolve(format)).options(options)
+    val provider = if (format == "avro") avroFormat else format
+    var base: DataFrameReader = spark.read.format(provider).options(options)
     // header applies with AND without an explicit schema — otherwise the
     // header line comes back as a data row
     if (format == "csv") base = base.option("header", "true")
@@ -59,11 +36,4 @@ object TableLoader {
     }(base.schema(_))
     withSchema.load(path)
   }
-
-  /** Explicit file-list variant (the reference lists *.avro files via
-    * an HDFS client before loading, App.java:59-84). Spark accepts the
-    * multi-path form natively — no manual FS listing layer needed. */
-  def readFiles(spark: SparkSession, format: String,
-                files: Seq[String]): DataFrame =
-    spark.read.format(resolve(format)).load(files: _*)
 }

@@ -24,11 +24,9 @@ object FileStream {
 
   /** Streaming ingest of the reference's actual input format
     * (App.java:93-95 reads *.avro): the same incremental file
-    * discovery over a flat avro directory. Resolves through
-    * TableLoader's tiered avro provider, so it works with the external
-    * module, Spark 4.1's built-in implementation, or not at all only
-    * when neither v1 file-format is present (graft-avro is a batch
-    * DSv2 — file-stream sources need a v1 FileFormat). */
+    * discovery over a flat avro directory, through Spark's built-in
+    * Avro file format ([[graft.sources.TableLoader.avroFormat]]); a
+    * file-stream source needs a v1 FileFormat, which it is. */
   def avro(spark: SparkSession, path: String, schema: StructType,
            maxFilesPerTrigger: Int = 1000): DataFrame =
     spark.readStream

@@ -162,9 +162,9 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("avro sink round-trips orders through TableLoader (built-in tier)") {
-    // no spark-avro module jar is deployed here, but Spark 4.1 ships
-    // the implementation inside spark-sql itself — TableLoader invokes
-    // it by class name, so the reference's input format
+    // no spark-avro module jar is deployed, but Spark 4.1 ships the
+    // Avro file format inside spark-sql itself — Sinks and TableLoader
+    // name it by class, so the reference's input format
     // (App.java:93-95) actually executes.
     val dir = tmpDir("avro-sink")
     val orders = table("orders")
@@ -180,57 +180,43 @@ class SourcesSpec extends SparkSpec {
     assert(orders.exceptAll(back).count() === 0L)
   }
 
-  test("graft-avro datasource round-trips and cross-reads with the built-in engine") {
-    val dir = tmpDir("avro-cross")
-    val orders = table("orders")
-    // our writer -> our reader
-    orders.write.format("graft-avro").mode("overwrite").save(s"$dir/g")
-    val ours = spark.read.format("graft-avro").load(s"$dir/g")
-    assert(ours.schema === orders.schema)
-    assert(ours.exceptAll(orders).count() === 0L)
-    assert(orders.exceptAll(ours).count() === 0L)
-    // cross-engine parity: our files read by Apache's implementation...
-    val builtIn = "org.apache.spark.sql.avro.AvroFileFormat"
-    val theirsRead = spark.read.format(builtIn).load(s"$dir/g")
-    assert(theirsRead.exceptAll(orders).count() === 0L)
-    assert(orders.exceptAll(theirsRead).count() === 0L)
-    // ...and Apache's files read by ours
-    orders.write.format(builtIn).mode("overwrite").save(s"$dir/b")
-    val oursRead = spark.read.format("graft-avro").load(s"$dir/b")
-    assert(oursRead.schema === orders.schema)
-    assert(oursRead.exceptAll(orders).count() === 0L)
-    assert(orders.exceptAll(oursRead).count() === 0L)
-  }
-
-  test("graft-avro read splits one file on sync markers; every row lands exactly once") {
+  test("avro read splits one coalesced file; each row lands exactly once") {
     val dir = tmpDir("avro-split")
     val li = table("lineitem")
-    li.coalesce(1).write.format("graft-avro").mode("overwrite").save(s"$dir/l")
-    // read back with a tiny split size: one physical file, many partitions
-    val back = spark.read.format("graft-avro")
-      .option("maxPartitionBytes", (32L << 10).toString).load(s"$dir/l")
-    assert(back.rdd.getNumPartitions > 1,
-      s"expected >1 split, got ${back.rdd.getNumPartitions}")
-    assert(back.count() === li.count())
-    assert(back.agg(sum(col("l_orderkey"))).head().getLong(0) ===
-      li.agg(sum(col("l_orderkey"))).head().getLong(0))
+    Sinks.avro(li.coalesce(1), s"$dir/l")
+    assert(new java.io.File(s"$dir/l").listFiles
+      .count(_.getName.endsWith(".avro")) === 1)
+    // a tiny split size: one physical file, many partitions
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, (32L << 10).toString)
+    try {
+      val back = TableLoader.read(spark, "avro", s"$dir/l")
+      assert(back.rdd.getNumPartitions > 1,
+        s"expected >1 split, got ${back.rdd.getNumPartitions}")
+      assert(back.count() === li.count())
+      assert(back.exceptAll(li).count() === 0L)
+      assert(li.exceptAll(back).count() === 0L)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  test("graft-avro scan prunes columns down to the required schema") {
+  test("avro scan decodes only the selected column; count() stays exact") {
     val dir = tmpDir("avro-prune")
-    table("orders").write.format("graft-avro").mode("overwrite").save(s"$dir/o")
-    val narrow = spark.read.format("graft-avro").load(s"$dir/o").select("o_orderkey")
-    val scanOutput = narrow.queryExecution.executedPlan.collectLeaves()
-      .head.output.map(_.name)
-    assert(scanOutput === Seq("o_orderkey"), s"scan decodes $scanOutput")
+    Sinks.avro(table("orders"), s"$dir/o")
+    val narrow = TableLoader.read(spark, "avro", s"$dir/o").select("o_orderkey")
+    val scan = narrow.queryExecution.executedPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.get
+    assert(scan.requiredSchema.fieldNames.toSeq === Seq("o_orderkey"),
+      s"scan decodes ${scan.requiredSchema.simpleString}")
     assert(narrow.agg(sum(col("o_orderkey"))).head().getLong(0) ===
       table("orders").agg(sum(col("o_orderkey"))).head().getLong(0))
     // zero-column scan (count(*) shape) still counts rows correctly
-    assert(spark.read.format("graft-avro").load(s"$dir/o").count() ===
+    assert(TableLoader.read(spark, "avro", s"$dir/o").count() ===
       table("orders").count())
   }
 
-  test("graft-avro round-trips nested/complex types: arrays, structs, maps, decimal, nulls") {
+  test("avro round-trips complex types: arrays, structs, maps, nulls") {
     val dir = tmpDir("avro-complex")
     val df = spark.sql(
       """SELECT id,
@@ -242,9 +228,11 @@ class SourcesSpec extends SparkSpec {
         |  to_date(date_add(date'2024-01-01', cast(id AS int))) AS d,
         |  unbase64('3q2+7w==') AS bin
         |FROM range(0, 100)""".stripMargin)
-    df.write.format("graft-avro").mode("overwrite").save(s"$dir/c")
-    val back = spark.read.format("graft-avro").load(s"$dir/c")
-    assert(back.schema === df.schema)
+    Sinks.avro(df, s"$dir/c")
+    val back = TableLoader.read(spark, "avro", s"$dir/c")
+    // names and types round-trip exactly; a file scan reads every
+    // column back as nullable, so compare nullability-blind
+    assert(back.schema.catalogString === df.schema.catalogString)
     assert(back.count() === 100L)
     // set-ops reject MAP columns: canonicalize the map to sorted entries
     def cmp(d: org.apache.spark.sql.DataFrame) =
@@ -253,20 +241,32 @@ class SourcesSpec extends SparkSpec {
     assert(cmp(df).exceptAll(cmp(back)).count() === 0L)
     // embeddings: the real array<float> testdata table round-trips too
     val e = table("embeddings")
-    e.write.format("graft-avro").mode("overwrite").save(s"$dir/e")
-    val eBack = spark.read.format("graft-avro").load(s"$dir/e")
+    Sinks.avro(e, s"$dir/e")
+    val eBack = TableLoader.read(spark, "avro", s"$dir/e")
     assert(eBack.schema === e.schema)
     assert(eBack.exceptAll(e).count() === 0L)
   }
 
-  test("graft-avro append mode accumulates; overwrite replaces the previous generation") {
+  test("avro append mode accumulates; overwrite replaces it") {
     val dir = tmpDir("avro-modes")
     val o = table("orders").select("o_orderkey")
-    o.write.format("graft-avro").mode("overwrite").save(s"$dir/t")
-    o.write.format("graft-avro").mode("append").save(s"$dir/t")
-    assert(spark.read.format("graft-avro").load(s"$dir/t").count() === 2 * o.count())
-    o.write.format("graft-avro").mode("overwrite").save(s"$dir/t")
-    assert(spark.read.format("graft-avro").load(s"$dir/t").count() === o.count())
+    Sinks.avro(o, s"$dir/t")
+    Sinks.avro(o, s"$dir/t", mode = org.apache.spark.sql.SaveMode.Append)
+    assert(TableLoader.read(spark, "avro", s"$dir/t").count() === 2 * o.count())
+    Sinks.avro(o, s"$dir/t")
+    assert(TableLoader.read(spark, "avro", s"$dir/t").count() === o.count())
+  }
+
+  test("service registrations load; graft registers only graft-table") {
+    // ServiceLoader instantiates each provider line: a line naming a
+    // deleted class throws here instead of breaking every later
+    // format() lookup in the session
+    import scala.jdk.CollectionConverters._
+    val providers = java.util.ServiceLoader
+      .load(classOf[org.apache.spark.sql.sources.DataSourceRegister])
+      .asScala.toList
+    val ours = providers.filter(_.getClass.getName.startsWith("graft."))
+    assert(ours.map(_.shortName()) === List("graft-table"))
   }
 
   test("recoverCompact heals a swap torn between the two renames") {
