@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.Materialize._
 import graft.functions.TextAnalysis
 import graft.operators.TopK
 import graft.sources._
@@ -38,6 +39,7 @@ object Demo {
     val docs = Tables.load(spark, sfDir, "documents")
     val top = TopK.topKeys(
       docs.select(TextAnalysis.tokens(col("text")).as("toks")), "toks", 10)
+      .eagerCheckpoint() // three actions below read these 10 rows
 
     // 4. reference sinks: header'd CSV + serving store publish
     Sinks.csv(top, s"$outDir/top10")

@@ -13,8 +13,9 @@ import org.apache.spark.sql.Dataset
   * query (retry = full re-run).
   *
   * The 100 TB posture (r18 verdict item on localCheckpoint durability):
-  * set `spark.graft.checkpointDir` on the session — or the
-  * `SPARK_GRAFT_CHECKPOINT_DIR` environment variable — and every site
+  * set `spark.graft.checkpointDir` on the session (`--conf` under
+  * spark-submit, or `-Dspark.graft.checkpointDir=…` on a bare JVM, which
+  * GraftSession's builder picks up) and every site
   * upgrades to a RELIABLE `checkpoint(eager = true)` into that
   * directory: blocks survive executor loss, so a lost node costs a
   * re-fetch, not a failed query. One config point, zero call-site
@@ -32,9 +33,7 @@ object Materialize {
       * configured (see [[Materialize]]). */
     def eagerCheckpoint(): Dataset[T] = {
       val spark = ds.sparkSession
-      val dir = spark.conf.getOption(ConfKey)
-        .orElse(sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR"))
-        .filter(_.nonEmpty)
+      val dir = spark.conf.getOption(ConfKey).filter(_.nonEmpty)
       dir match {
         case Some(d) =>
           val sc = spark.sparkContext

@@ -99,7 +99,7 @@ object Tables {
     *     same double everywhere.
     *
     * The DuckDB oracle uses the identical derivation as a CTE
-    * (SparkEntry.PartsuppCte), which also makes the table exist on ANY
+    * (queries.Tpch.PartsuppCte), which also makes the table exist on ANY
     * corpus the gate runs (sf0.01, sf0.1, advdata) with zero setup. In
     * production partsupp would be a real parquet dim; the derivation
     * costs one 2-column lineitem projection + a keyed distinct
@@ -123,7 +123,7 @@ object Tables {
     * DuckDB oracle share one table namespace. The derived `partsupp`
     * registers alongside the parquet tables (Spark-side only — the
     * oracle inlines the identical derivation as a CTE,
-    * SparkEntry.PartsuppCte, because DuckDB sees only the parquet). */
+    * queries.Tpch.PartsuppCte, because DuckDB sees only the parquet). */
   def registerAll(spark: SparkSession, sfDir: String): Unit = {
     names.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
     partsupp(spark, sfDir).createOrReplaceTempView("partsupp")

@@ -14,7 +14,7 @@ import scala.util.control.NonFatal
   *     the manifest stored in <outDir>/verify_manifest.json, plus a fixed
   *     smoke set. Plan hashing is engine-level change detection — an edit to
   *     a shared operator re-runs every query whose plan it shifts, which a
-  *     git-line-range diff of SparkEntry.scala would miss. Use a PERSISTENT
+  *     diff of the query's own source lines would miss. Use a PERSISTENT
   *     outDir so unchanged queries keep their previous parquet (the full
   *     oracle_sql.json is always written, so oracle_check still compares
   *     the whole matrix — only the Spark re-execution is skipped).
@@ -56,7 +56,7 @@ object Verify {
       try {
         val plan = SparkEntry.queries(name)(spark, sfDir)
           .queryExecution.analyzed.canonicalized.toString
-        val body = plan + "|" + SparkEntry.oracleSql.getOrElse(name, "")
+        val body = plan + "|" + SparkEntry.oracleSql(name)
         Some(org.apache.commons.codec.digest.DigestUtils.md5Hex(body))
       } catch { case NonFatal(_) => None } // run it; let the run report
 

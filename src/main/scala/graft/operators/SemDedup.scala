@@ -12,7 +12,7 @@ import graft.functions.Vectors
   * dedup that only compares WITHIN coarse clusters — the trick that
   * makes semantic dedup tractable at corpus scale. Pairs across cells
   * are deliberately never examined (the quantizer's recall loss is the
-  * accepted trade, exactly as in the paper; [[SparkEntry]]'s
+  * accepted trade, exactly as in the paper; [[graft.queries.Retrieval]]'s
   * `q_semdedup_recall` measures that miss rate against the exact
   * all-pairs ground truth).
   *

@@ -2,6 +2,9 @@ package graft
 
 import java.time.Instant
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.sources._
@@ -374,6 +377,48 @@ class SourcesSpec extends SparkSpec {
     assert(lines.size > 1)
     val store = new ParquetResultStore(spark, s"$dir/out/results", "key", "win_start")
     assert(store.read().count() === lines.size - 1)
+  }
+
+  test("BatchJob scans its window once for both sinks") {
+    val dir = tmpDir("batchjob_once")
+    Sinks.partitionedByHour(table("events"), "ts", s"$dir/hours")
+    val w = TimeWindow.day(2024, 1, 15)
+    val windowRows = PartitionedSource.readWindow(spark, s"$dir/hours", w).count()
+    assert(windowRows > 0)
+    // records read by file-scan tasks of this test's jobs only: reads of
+    // the materialized top-10 rows are not file scans
+    val group = "batchjob-scans-once"
+    val scanStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          e.stageInfos.filter(_.rddInfos.exists(_.name.contains("FileScanRDD")))
+            .foreach(si => scanStages.add(si.stageId))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m =>
+          reads.add(e.stageId -> m.inputMetrics.recordsRead))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "BatchJob.run")
+      try BatchJob.run(spark, s"$dir/hours", s"$dir/out", w)
+      finally sc.clearJobGroup()
+      // events reach a listener in order: once it has seen this job end,
+      // it has seen every task of BatchJob.run
+      sc.setJobGroup(s"$group-drain", "drain")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val drain = sc.statusTracker.getJobIdsForGroup(s"$group-drain").max
+      val deadline = System.currentTimeMillis() + 30000
+      while (!ended.contains(drain) && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(ended.contains(drain))
+    } finally sc.removeSparkListener(listener)
+    val scanned = reads.asScala.collect { case (st, n) if scanStages.contains(st) => n }.sum
+    assert(scanned === windowRows, s"window of $windowRows rows read $scanned records")
   }
 
   test("BatchJob: publishing consecutive hours keeps both hours' rows") {

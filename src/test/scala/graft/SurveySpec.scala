@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.QueryDef
+
 /** SURVEY.md §2 ↔ `SparkEntry.queries` bijection guard.
   *
   * The coverage bar is defined over SURVEY §2; round 8 shipped three
@@ -41,33 +43,41 @@ class SurveySpec extends AnyFunSuite {
   }
 
   test("no duplicate query keys in the SparkEntry source") {
-    // A Scala Map literal silently keeps the LAST binding for a
-    // repeated key — a new query accidentally reusing an existing name
-    // would shadow one of the two with no compile error and no runtime
-    // signal (caught live in r9: five added queries collided with
-    // existing ones and vanished). Guard at the SOURCE level: every
-    // `"name" ->` key may appear at most twice (once in `queries`,
-    // once in `oracleSql`).
-    val text = {
-      val src = scala.io.Source.fromFile(
-        "src/main/scala/graft/SparkEntry.scala", "UTF-8")
-      try src.mkString finally src.close()
-    }
-    val counts = "\"(q_[a-z0-9_]+|q1_agg)\" ->".r.findAllMatchIn(text)
-      .map(_.group(1)).toSeq.groupBy(identity).view.mapValues(_.size)
-    val dups = counts.filter(_._2 > 2).keys.toSeq.sorted
+    // A repeated name must fail when the registry is built, not leave
+    // one definition silently replacing the other.
+    val d = QueryDef("q_dup", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      QueryDef.index(Seq(d, d.copy(oracle = "SELECT 2"))))
+    assert(e.getMessage.contains("q_dup"))
+    // And at the source level: every query name is defined exactly once
+    // across the family objects under graft.queries.
+    val dir = new java.io.File("src/main/scala/graft/queries")
+    val names = dir.listFiles().toSeq.filter(_.getName.endsWith(".scala"))
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        val text = try src.mkString finally src.close()
+        "QueryDef(?:\\.sql)?\\(\"(q_[a-z0-9_]+|q1_agg)\"".r
+          .findAllMatchIn(text).map(_.group(1)).toSeq
+      }
+    val dups = names.groupBy(identity).collect {
+      case (n, ns) if ns.size > 1 => n
+    }.toSeq.sorted
     assert(dups.isEmpty,
-      s"query keys bound more than twice in SparkEntry.scala (map " +
-        s"last-wins shadowing): ${dups.mkString(", ")}")
+      s"query names defined more than once under graft.queries: ${dups.mkString(", ")}")
+    assert(names.toSet === queryKeys)
+    assert(queryKeys.size === 311)
   }
 
   test("every query key has an oracle or a documented rows-only check") {
-    // Every key in `queries` should either carry an oracle or be a
-    // deliberate rows-only entry. Today every q_* key is oracled;
-    // guard that invariant so a future key can't silently ship
-    // without its correctness contract.
+    // Every query carries its oracle in its QueryDef; guard that none
+    // ships with a blank one and that the two views agree.
     val unoracled = queryKeys -- SparkEntry.oracleSql.keySet
     assert(unoracled.isEmpty,
       s"queries without oracle SQL: ${unoracled.toSeq.sorted.mkString(", ")}")
+    val blank = SparkEntry.oracleSql.collect {
+      case (n, sql) if sql.trim.isEmpty => n
+    }.toSeq.sorted
+    assert(blank.isEmpty, s"queries with blank oracle SQL: ${blank.mkString(", ")}")
+    assert(queryKeys === SparkEntry.oracleSql.keySet)
   }
 }

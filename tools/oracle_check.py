@@ -18,9 +18,12 @@ HUGEINT/UHUGEINT output columns (plan-only, costs nothing), and
 driver sees it. np.allclose is gone; do not bring it back.
 
 Each oracle runs under a per-query wall-clock timeout (default 180 s —
-the slowest legitimate oracle, q_bpe_encode's 8-stage materialized
-merge chain, runs ~35 s idle and must survive a contended box): a hanging
-oracle (e.g. an exponentially-inlined CTE chain) produces ONE printed
+the three slowest legitimate oracles must survive a contended box. On
+sf0.01, 8 workers, an otherwise idle 4-core box: q_kcore's bounded
+peeling rounds 58 s, q_bpe_encode's 8-stage materialized merge chain
+57 s, q_bpe_merges' unrolled merge rounds 56 s. With 4 workers while a
+test run shared the box: 135, 140 and 135 s): a hanging oracle (e.g.
+an exponentially-inlined CTE chain) produces ONE printed
 FAIL and the worker moves on with a fresh connection — it can never
 zero out the whole run. check_one is fully exception-boxed, the pool
 iterates submit/as_completed, and a worker-process DEATH (segfault/
@@ -303,7 +306,9 @@ def main():
         f"{n}={w:.1f}s" for n, (_, _, w) in slowest))
     # The q_mmr lesson: a quadratic oracle replay must be visible
     # in-repo before the driver sees it. Known-slow-but-legitimate:
-    # q_bpe_encode (~35 s, 8 materialized merge stages). Anything
+    # q_kcore (bounded peeling rounds), q_bpe_encode (8 materialized
+    # merge stages) and q_bpe_merges (unrolled merge rounds), each near
+    # or past 60 s on sf0.01 (timings in the docstring). Anything
     # else past 60 s deserves a look before round-end (the near-dup
     # family replays are inverted-index joins since r10 — sub-second;
     # a reappearing 30 s+ Jaccard oracle means someone reintroduced
