@@ -4,6 +4,7 @@ import java.time.Instant
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Pluggable serving-layer result store with the reference's
   * Elasticsearch semantics re-expressed engine-neutrally: the batch
@@ -18,7 +19,8 @@ import org.apache.spark.sql.functions._
 trait ResultStore {
   /** Delete rows with tsCol in [from, to) — retire speed-layer output. */
   def rangeDelete(from: Instant, to: Instant): Unit
-  /** Insert-or-replace by key column. */
+  /** Insert-or-replace by key column. `rows` is read more than once;
+    * a caller that hands in an expensive plan persists it first. */
   def upsert(rows: DataFrame): Unit
   def read(): DataFrame
 }
@@ -27,6 +29,19 @@ trait ResultStore {
   * transform → overwrite staging → swap); fine for serving-sized
   * result tables, which are top-k aggregates, not raw data. The
   * key/timestamp column names are fixed at construction.
+  *
+  * Spark jobs per call, on a store that exists:
+  *   - `read()`: none while the store is as this instance last saw
+  *     it. The store keeps the schema it last wrote, or last inferred,
+  *     with the store directory's modification time, and scans with
+  *     it. A read that finds a different time (the first read, or one
+  *     after another writer's rewrite) infers the schema again in one
+  *     job;
+  *   - `rangeDelete`: one write job;
+  *   - `upsert`: one job to find whether the store is empty, one to
+  *     broadcast the incoming keys for the anti-join, one write job.
+  *     An empty store skips the broadcast; an absent one is only
+  *     written.
   */
 final class ParquetResultStore(spark: SparkSession, path: String,
                                keyCol: String, tsCol: String) extends ResultStore {
@@ -34,11 +49,31 @@ final class ParquetResultStore(spark: SparkSession, path: String,
   private val fs = org.apache.hadoop.fs.FileSystem.get(
     new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
 
-  private def exists: Boolean = fs.exists(new org.apache.hadoop.fs.Path(path))
+  private val target = new org.apache.hadoop.fs.Path(path)
 
-  override def read(): DataFrame =
-    if (exists) spark.read.parquet(path)
-    else spark.emptyDataFrame
+  /** The schema of the files at `path`, with the store directory's
+    * modification time when it was taken; each rewrite's rename
+    * installs a new directory, so another writer's rewrite changes the
+    * time. Always the store's schema, never an incoming frame's: an
+    * upsert whose columns do not match the store fails in
+    * `unionByName`. */
+  @volatile private var schema: Option[(Long, StructType)] = None
+
+  /** The store directory's modification time; None when it is absent. */
+  private def modified: Option[Long] =
+    try Some(fs.getFileStatus(target).getModificationTime)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  override def read(): DataFrame = modified match {
+    case None => spark.emptyDataFrame
+    case Some(t) => schema match {
+      case Some((`t`, s)) => spark.read.schema(s).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schema = Some(t -> df.schema)
+        df
+    }
+  }
 
   /** Read-modify-overwrite through a staging dir: parquet can't
     * overwrite a path while reading it, and a failed rewrite must not
@@ -46,13 +81,13 @@ final class ParquetResultStore(spark: SparkSession, path: String,
   private def rewrite(df: DataFrame): Unit = {
     val staging = path + ".staging"
     df.write.mode(SaveMode.Overwrite).parquet(staging)
-    val target = new org.apache.hadoop.fs.Path(path)
     fs.delete(target, true)
     fs.rename(new org.apache.hadoop.fs.Path(staging), target)
+    schema = modified.map(_ -> df.schema)
   }
 
   override def rangeDelete(from: Instant, to: Instant): Unit = {
-    if (exists) {
+    if (modified.isDefined) {
       val ts = col(tsCol)
       rewrite(read().filter(
         ts < lit(java.sql.Timestamp.from(from)) ||

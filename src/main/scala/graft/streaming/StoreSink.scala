@@ -22,15 +22,20 @@ import graft.sources.ResultStore
   */
 object StoreSink {
 
-  /** Streaming side: keyed upsert per micro-batch. */
+  /** Streaming side: keyed upsert per micro-batch. The body runs
+    * several actions on the batch (the emptiness check, then the
+    * upsert's own; see [[graft.sources.ParquetResultStore]] for what
+    * each costs), and each would run the stateful aggregate again, so
+    * the batch is persisted ([[MicroBatch.persisted]]) and the
+    * aggregate runs once per trigger. */
   def writer(counts: DataFrame, store: ResultStore,
              checkpointDir: String): DataStreamWriter[Row] =
     counts.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch(MicroBatch.persisted { (batch, _) =>
         if (!batch.isEmpty) store.upsert(batch)
-      }
+      })
 
   def start(counts: DataFrame, store: ResultStore, checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =

@@ -104,11 +104,14 @@ object StreamOps {
     * Exactly-once note: foreachBatch can replay a batch after a
     * failure, so the append must be idempotent — the id anti-join
     * against the corpus drops any doc a half-completed earlier attempt
-    * already wrote before the near-dup check runs. */
+    * already wrote before the near-dup check runs.
+    *
+    * The shingle cache lives only as long as the batch's check
+    * (`withIncrementalNearDups`); tables the caller cached stay cached. */
   def nearDupIngest(incoming: DataFrame, idCol: String, textCol: String,
                     corpusPath: String, theta: Double = 0.8)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    incoming.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    incoming.writeStream.foreachBatch(MicroBatch.persisted { (batch, _) =>
       val spark = batch.sparkSession
       val existing: DataFrame =
         try spark.read.parquet(corpusPath)
@@ -117,15 +120,13 @@ object StreamOps {
             .filter(lit(false)) }
       // replay guard: drop docs whose id is already accepted
       val fresh = batch.join(existing.select(col(idCol)), Seq(idCol), "left_anti")
-      val dupPairs = graft.operators.Dedup
-        .incrementalNearDups(existing, fresh, idCol, textCol, theta)
-      val novel = fresh.join(dupPairs.select(col("j").as(idCol)).distinct(),
-        Seq(idCol), "left_anti")
-      novel.select(col(idCol), col(textCol))
-        .write.mode("append").parquet(corpusPath)
-      spark.catalog.clearCache() // incrementalNearDups persists shingles
-      ()
-    }
+      graft.operators.Dedup.withIncrementalNearDups(existing, fresh, idCol, textCol,
+          theta) { dupPairs =>
+        fresh.join(dupPairs.select(col("j").as(idCol)).distinct(), Seq(idCol), "left_anti")
+          .select(col(idCol), col(textCol))
+          .write.mode("append").parquet(corpusPath)
+      }
+    })
   }
 
   /** Streaming CDC apply — the SPEED-LAYER twin of `Sinks.merge` (the
@@ -156,16 +157,16 @@ object StreamOps {
                orderCols: Seq[String], opCol: String = "op",
                deleteOp: String = "D")
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    changes.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    changes.writeStream.foreachBatch(MicroBatch.persisted { (batch, _) =>
       val spark = batch.sparkSession
       val nonKey = batch.columns.filterNot(keys.contains).toSeq
       val last = batch.groupBy(keys.map(col): _*)
         .agg(max_by(struct(nonKey.map(col): _*),
           struct(orderCols.map(col): _*)).as("_l"))
         .select(keys.map(col) ++ nonKey.map(c => col(s"_l.$c").as(c)): _*)
+      val table = new org.apache.hadoop.fs.Path(tablePath)
       val tableExists =
-        try { spark.read.parquet(tablePath); true }
-        catch { case _: org.apache.spark.sql.AnalysisException => false }
+        table.getFileSystem(spark.sessionState.newHadoopConf()).exists(table)
       if (tableExists) {
         // an empty replayed batch must not rewrite the table for nothing
         if (!last.isEmpty)
@@ -179,8 +180,7 @@ object StreamOps {
             .select(payload.map(col): _*)
             .write.parquet(tablePath)
       }
-      ()
-    }
+    })
   }
 
   /** Drift-triggered index maintenance — the closed loop between the
@@ -317,7 +317,7 @@ object StreamOps {
                         mergeSchema: Boolean = false,
                         autoCompactFiles: Int = 0, vacuumKeep: Int = 0)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    changes.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    changes.writeStream.foreachBatch(MicroBatch.persisted { (batch, _) =>
       val spark = batch.sparkSession
       val nonKey = batch.columns.filterNot(keys.contains).toSeq
       val last = batch.groupBy(keys.map(col): _*)
@@ -343,8 +343,7 @@ object StreamOps {
             clusterBy = keys)
         }
       }
-      ()
-    }
+    })
   }
 
   /** Streaming MMR retrieval serving — the speed-layer twin of
@@ -370,7 +369,7 @@ object StreamOps {
                vecCol: String, k: Int, nCand: Int, outPath: String,
                lambda: Double = 0.7)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    queryStream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    queryStream.writeStream.foreachBatch(MicroBatch.persisted { (batch, _) =>
       val spark = batch.sparkSession
       val served: DataFrame =
         try spark.read.parquet(outPath).select(col("q_id")).distinct()
@@ -382,8 +381,7 @@ object StreamOps {
       if (!fresh.isEmpty)
         graft.operators.Ann.mmrTopK(corpus, fresh, idCol, vecCol, k, nCand, lambda)
           .write.mode("append").parquet(outPath)
-      ()
-    }
+    })
   }
 
   /** Streaming per-key EWMA — the truly-recursive smoothing the batch

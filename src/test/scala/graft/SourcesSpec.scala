@@ -4,7 +4,7 @@ import java.time.Instant
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 import graft.sources._
@@ -389,34 +389,22 @@ class SourcesSpec extends SparkSpec {
     // the materialized top-10 rows are not file scans
     val group = "batchjob-scans-once"
     val scanStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val reads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
           e.stageInfos.filter(_.rddInfos.exists(_.name.contains("FileScanRDD")))
             .foreach(si => scanStages.add(si.stageId))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         Option(e.taskMetrics).foreach(m =>
           reads.add(e.stageId -> m.inputMetrics.recordsRead))
     }
     val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
+    listening(listener) {
       sc.setJobGroup(group, "BatchJob.run")
       try BatchJob.run(spark, s"$dir/hours", s"$dir/out", w)
       finally sc.clearJobGroup()
-      // events reach a listener in order: once it has seen this job end,
-      // it has seen every task of BatchJob.run
-      sc.setJobGroup(s"$group-drain", "drain")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val drain = sc.statusTracker.getJobIdsForGroup(s"$group-drain").max
-      val deadline = System.currentTimeMillis() + 30000
-      while (!ended.contains(drain) && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-      assert(ended.contains(drain))
-    } finally sc.removeSparkListener(listener)
+    }
     val scanned = reads.asScala.collect { case (st, n) if scanStages.contains(st) => n }.sum
     assert(scanned === windowRows, s"window of $windowRows rows read $scanned records")
   }
@@ -443,21 +431,24 @@ class SourcesSpec extends SparkSpec {
     assert(stored.length === stored.toSet.size)
   }
 
+  /** Store rows (k, ts, cnt) from (key, timestamp text, count). */
+  private def storeRows(s: Seq[(String, String, Long)]) = {
+    import SparkSpec.spark.implicits._
+    s.toDF("k", "tsRaw", "cnt")
+      .select(col("k"), col("tsRaw").cast("timestamp").as("ts"), col("cnt"))
+  }
+
   test("ParquetResultStore range-delete + upsert semantics") {
     val dir = tmpDir("store") + "/results"
     val store = new ParquetResultStore(spark, dir, "k", "ts")
-    import SparkSpec.spark.implicits._
-    def rows(s: Seq[(String, String, Long)]) =
-      s.toDF("k", "tsRaw", "cnt")
-        .select(col("k"), col("tsRaw").cast("timestamp").as("ts"), col("cnt"))
 
-    store.upsert(rows(Seq(
+    store.upsert(storeRows(Seq(
       ("a", "2024-01-01 00:10:00", 1L),
       ("b", "2024-01-01 01:10:00", 2L))))
     assert(store.read().count() === 2)
 
     // upsert replaces by key
-    store.upsert(rows(Seq(("a", "2024-01-01 00:20:00", 9L))))
+    store.upsert(storeRows(Seq(("a", "2024-01-01 00:20:00", 9L))))
     val after = store.read()
     assert(after.count() === 2)
     assert(after.filter(col("k") === "a").select("cnt").head().getLong(0) === 9L)
@@ -468,6 +459,74 @@ class SourcesSpec extends SparkSpec {
     val kept = store.read()
     assert(kept.count() === 1)
     assert(kept.select("k").head().getString(0) === "b")
+  }
+
+  test("ParquetResultStore runs no schema-inference job after its first access") {
+    val store = new ParquetResultStore(spark, tmpDir("store_jobs") + "/results", "k", "ts")
+    store.upsert(storeRows(Seq(("a", "2024-01-01 00:10:00", 1L), ("b", "2024-01-01 01:10:00", 2L))))
+    // the stage names of each job this test's group starts; a stage is
+    // named after the API call that launched it, and reading parquet
+    // launches a job only to infer the schema
+    val group = "store-upsert"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(e.stageInfos.map(_.name))
+    }
+    val sc = spark.sparkContext
+    listening(listener) {
+      sc.setJobGroup(group, "ParquetResultStore.upsert")
+      try {
+        store.upsert(storeRows(Seq(("a", "2024-01-01 00:20:00", 9L))))
+        store.read().schema
+      } finally sc.clearJobGroup()
+    }
+    val all = jobs.asScala.toSeq
+    assert(!all.exists(_.exists(_.startsWith("parquet at "))), all)
+    // the is-empty check, the broadcast of the incoming keys, the write
+    assert(all.size === 3, all)
+    assert(store.read().collect().map(r => r.getString(0) -> r.getLong(2)).toMap ===
+      Map("a" -> 9L, "b" -> 2L))
+  }
+
+  test("a second ParquetResultStore on an existing path reads it correctly") {
+    val dir = tmpDir("store_reopen") + "/results"
+    val first = new ParquetResultStore(spark, dir, "k", "ts")
+    first.upsert(storeRows(Seq(("a", "2024-01-01 00:10:00", 1L), ("b", "2024-01-01 01:10:00", 2L))))
+    val second = new ParquetResultStore(spark, dir, "k", "ts")
+    assert(second.read().schema === first.read().schema)
+    assert(second.read().collect().toSet === first.read().collect().toSet)
+    second.upsert(storeRows(Seq(("a", "2024-01-01 00:20:00", 9L))))
+    assert(first.read().collect().map(r => r.getString(0) -> r.getLong(2)).toMap ===
+      Map("a" -> 9L, "b" -> 2L))
+    // the kept schema is the store's: an upsert whose columns do not
+    // match it still fails
+    intercept[org.apache.spark.sql.AnalysisException] {
+      second.upsert(storeRows(Seq(("c", "2024-01-01 00:30:00", 3L))).withColumn("extra", lit(1)))
+    }
+    assert(second.read().count() === 2)
+  }
+
+  test("a ParquetResultStore reads the columns another writer's rewrite installed") {
+    val dir = tmpDir("store_writers") + "/results"
+    val a = new ParquetResultStore(spark, dir, "k", "ts")
+    a.upsert(storeRows(Seq(("a", "2024-01-01 00:10:00", 1L))))
+    assert(a.read().columns.toSeq === Seq("k", "ts", "cnt"))
+    // b empties the store, so its next upsert installs its rows' columns
+    val b = new ParquetResultStore(spark, dir, "k", "ts")
+    b.rangeDelete(Instant.parse("2024-01-01T00:00:00Z"), Instant.parse("2024-01-02T00:00:00Z"))
+    b.upsert(storeRows(Seq(("b", "2024-01-01 01:10:00", 2L))).withColumn("extra", lit(7)))
+    val seen = a.read()
+    assert(seen.columns.toSeq === Seq("k", "ts", "cnt", "extra"))
+    assert(seen.select("k", "extra").collect().map(r => r.getString(0) -> r.getInt(1)).toSeq ===
+      Seq("b" -> 7))
+    // a's rows lack the new column: its upsert fails instead of
+    // rewriting the store without it
+    intercept[org.apache.spark.sql.AnalysisException] {
+      a.upsert(storeRows(Seq(("c", "2024-01-01 00:30:00", 3L))))
+    }
+    assert(b.read().columns.toSeq === Seq("k", "ts", "cnt", "extra"))
   }
 
   test("TableLoader roundtrips orc") {

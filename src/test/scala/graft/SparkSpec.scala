@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,4 +27,33 @@ trait SparkSpec extends AnyFunSuite {
   def table(name: String) = Tables.load(spark, sf, name)
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `body` with `listener` registered and returns once the
+    * listener has seen every event `body` caused. Listener events are
+    * delivered in order, so once a marker registered after `listener`
+    * sees a later job end, `listener` has seen everything before it. */
+  def listening[A](listener: SparkListener)(body: => A): A = {
+    val sc = spark.sparkContext
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val marker = new SparkListener {
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    sc.addSparkListener(marker)
+    try {
+      val out = body
+      val group = s"drain-${java.util.UUID.randomUUID}"
+      sc.setJobGroup(group, "drain")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val drain = sc.statusTracker.getJobIdsForGroup(group).max
+      val deadline = System.currentTimeMillis() + 30000
+      while (!ended.contains(drain) && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(ended.contains(drain), "listener events did not drain")
+      out
+    } finally {
+      sc.removeSparkListener(marker)
+      sc.removeSparkListener(listener)
+    }
+  }
 }

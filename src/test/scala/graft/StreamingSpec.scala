@@ -2,6 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -700,6 +702,48 @@ class StreamingSpec extends SparkSpec {
     assert(r3.values.toSeq === Seq(4L))
   }
 
+  test("a StoreSink micro-batch runs its stateful stage once") {
+    // Every stage of a job on the batch frame lists the aggregate's
+    // StateStoreRDD among its RDDs, including the stages that read the
+    // persisted batch. A stage RAN the aggregate when its tasks opened a
+    // state store, which the operator reports in this metric.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+    val stateMetric = "number of state store instances"
+    val statefulStages = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val ranState = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        for (props <- Option(e.properties);
+             batch <- Option(props.getProperty("streaming.sql.batchId"))
+             if e.stageInfo.rddInfos.exists(_.name == "StateStoreRDD"))
+          statefulStages.put(e.stageInfo.stageId, batch)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskInfo.accumulables.exists(_.name.contains(stateMetric)))
+          ranState.add(e.stageId)
+    }
+    val dir = tmpDir("storesink_once")
+    val store = new ParquetResultStore(spark, s"$dir/results", "k", "win_start")
+    val in = MemoryStream[(Timestamp, String)]
+    val counts = StreamingTopK.windowedCounts(
+      in.toDF().toDF("ts", "token"), "ts", "token", "1 hour", "10 minutes")
+      .withColumn("k", concat_ws("|", col("win_start").cast("long"), col("token")))
+    listening(listener) {
+      // the first batch creates the store, the second upserts into it
+      in.addData((ts("2024-01-01 00:05:00"), "spark"), (ts("2024-01-01 00:07:00"), "storm"))
+      StoreSink.start(counts, store, s"$dir/ckpt").awaitTermination()
+      in.addData((ts("2024-01-01 00:08:00"), "spark"), (ts("2024-01-01 00:09:00"), "flink"))
+      StoreSink.start(counts, store, s"$dir/ckpt").awaitTermination()
+    }
+    val runs = statefulStages.asScala.toSeq.collect {
+      case (stage, batch) if ranState.contains(stage) => batch
+    }.groupBy(identity).view.mapValues(_.size).toMap
+    assert(runs.size >= 2, s"stateful stage runs by batch: $runs")
+    assert(runs.values.forall(_ == 1), s"stateful stage runs by batch: $runs")
+    val stored = store.read().collect()
+      .map(r => r.getAs[String]("k").split('|')(1) -> r.getAs[Long]("cnt")).toMap
+    assert(stored === Map("spark" -> 2L, "storm" -> 1L, "flink" -> 1L))
+  }
+
   test("lambda handoff: batch recompute retires the speed layer for its window, idempotently") {
     // The reference's raison d'être end-to-end (App.java:104-127): the
     // speed layer serves provisional per-window counts; the batch layer
@@ -1054,6 +1098,24 @@ class StreamingSpec extends SparkSpec {
     } finally {
       q.stop()
       org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
+  }
+
+  test("nearDupIngest leaves the caller's cached frames cached") {
+    val dir = tmpDir("ndi_cache")
+    val pinned = spark.range(10).toDF("x").cache()
+    pinned.count()
+    val in = MemoryStream[(Long, String)]
+    val q = StreamOps.nearDupIngest(
+      in.toDF().toDF("doc_id", "text"), "doc_id", "text", s"$dir/corpus").start()
+    try {
+      in.addData((1L, "alpha beta gamma delta epsilon zeta"))
+      q.processAllAvailable()
+      assert(spark.read.parquet(s"$dir/corpus").count() === 1)
+      assert(pinned.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally {
+      q.stop()
+      pinned.unpersist()
     }
   }
 
