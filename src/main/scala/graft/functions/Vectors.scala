@@ -22,12 +22,9 @@ object Vectors {
   def l2norm(a: Column): Column = sqrt(normSq(a))
 
   /** Cosine similarity in double precision — the codegen'd native
-    * expression (one fused loop per row). Value-identical to cosineHof:
-    * same per-element double accumulation order. */
+    * expression (one fused loop per row). Value-identical to the
+    * test-scope HofReference.cosineHof: same per-element double
+    * accumulation order. */
   def cosine(a: Column, b: Column): Column =
     NativeExpressions.cosine(a, b)
-
-  /** HOF reference implementation, kept as the parity oracle. */
-  def cosineHof(a: Column, b: Column): Column =
-    dot(a, b) / (l2norm(a) * l2norm(b))
 }

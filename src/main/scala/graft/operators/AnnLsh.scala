@@ -62,14 +62,6 @@ object AnnLsh {
         quantized(col(vecCol)), planes)).as(Seq("table", "bucket")))
   }
 
-  /** Sign-bit bucket key: bit i = [v · planeᵢ > 0]. HOF reference
-    * implementation, kept as the parity oracle for the native
-    * expression used by `bucketed`. */
-  def bucketKey(vec: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      when(Vectors.dot(vec, typedlit(p)) > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** (id, table, bucket) exploded across `tables` independent LSH
     * tables (different seeds). All tables' bucket keys come from one
     * fused codegen'd pass over the vector (NativeExpressions

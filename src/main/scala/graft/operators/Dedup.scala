@@ -39,17 +39,6 @@ object Dedup {
       graft.functions.NativeExpressions
         .wordNGrams(col(textCol), n, distinct = true).as("sh"))
 
-  /** The HOF formulation shingleDf replaced — kept as the parity
-    * reference (NativeExprSpec asserts element-identical output). */
-  def shingleDfHof(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    docs
-      .select(col(idCol).as("id"), TextAnalysis.tokens(col(textCol)).as("tk"))
-      .select(col("id"),
-        when(size(col("tk")) >= n,
-          array_distinct(transform(sequence(lit(1), size(col("tk")) - lit(n - 1)),
-            i => concat_ws(" ", slice(col("tk"), i, lit(n))))))
-          .otherwise(array().cast("array<string>")).as("sh"))
-
   /** Exact Jaccard between two pre-distinct shingle arrays — integer
     * set-size division, bit-identical across engines. */
   def jaccard(a: Column, b: Column): Column =
@@ -60,27 +49,13 @@ object Dedup {
 
   /** (id, sig): MinHash signature (array<long> length numHashes) via
     * the one-pass codegen'd native expression (hash-identical to
-    * signatureDfHof, asserted in NativeExprSpec). */
+    * HofReference.signatureDfHof, asserted in NativeExprSpec). */
   def signatureDf(docs: DataFrame, idCol: String, textCol: String,
                   shingleN: Int = 3, numHashes: Int = 64,
                   seed: Long = 0x5EED): DataFrame =
     shingleDf(docs, idCol, textCol, shingleN)
       .select(col("id"),
         graft.functions.NativeExpressions.minHashSig(col("sh"), numHashes, seed).as("sig"))
-
-  /** HOF reference implementation of signatureDf: one builtin xxhash64
-    * per shingle, then numHashes seeded rehashes xxhash64(h, i, seed)
-    * with array_min — ANSI-safe, arrays staged, but interpreted. Kept
-    * as the parity oracle for the native expression. */
-  def signatureDfHof(docs: DataFrame, idCol: String, textCol: String,
-                     shingleN: Int = 3, numHashes: Int = 64,
-                     seed: Long = 0x5EED): DataFrame =
-    shingleDf(docs, idCol, textCol, shingleN)
-      .select(col("id"), transform(col("sh"), s => xxhash64(s)).as("hs"))
-      .select(col("id"),
-        transform(sequence(lit(0), lit(numHashes - 1)),
-          i => array_min(transform(col("hs"), h => xxhash64(h, i, lit(seed)))))
-          .as("sig"))
 
   /** MinHash-LSH near-dup pairs, exact-Jaccard verified: LSH proposes,
     * a shingle-set join over ONLY the candidates confirms. At jaccard
@@ -561,35 +536,15 @@ object Dedup {
 
   // -------------------------------------------------------------- simhash
 
-  private val BitMasks: Seq[Long] = (0 until 64).map(1L << _)
-
   /** (id, sig): 64-bit SimHash over lowercase whitespace tokens via the
     * one-pass codegen'd native expression (bit-identical to
-    * simHashDfHof, asserted in NativeExprSpec). */
+    * HofReference.simHashDfHof, asserted in NativeExprSpec). */
   def simHashDf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs
       .select(col(idCol).as("id"),
         TextAnalysis.tokens(lower(col(textCol))).as("tk"))
       .select(col("id"),
         graft.functions.NativeExpressions.simHash64(col("tk")).as("sig"))
-
-  /** HOF reference implementation of simHashDf — per-bit weighted vote
-    * of token xxhash64 bits packed into one long, 64 interpreted passes
-    * over the staged hash array. Kept as the parity oracle. */
-  def simHashDfHof(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val masks = typedlit(BitMasks)
-    docs
-      .select(col(idCol).as("id"),
-        TextAnalysis.tokens(lower(col(textCol))).as("tk"))
-      .select(col("id"), transform(col("tk"), t => xxhash64(t)).as("hs"))
-      .select(col("id"),
-        aggregate(sequence(lit(0), lit(63)), lit(0L), (acc, j) => {
-          val mask = element_at(masks, j + 1)
-          val vote = aggregate(col("hs"), lit(0L),
-            (a, h) => a + when(h.bitwiseAND(mask) =!= 0L, lit(1L)).otherwise(lit(-1L)))
-          acc + when(vote > 0, mask).otherwise(lit(0L))
-        }).as("sig"))
-  }
 
   /** Hamming distance between two packed 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

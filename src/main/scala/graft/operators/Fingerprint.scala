@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
 object Fingerprint {
 
   /** (id, fps): winnowed fingerprint set, distinct + sorted, via the
-    * one-pass native expression (hash-identical to fingerprintDfHof,
-    * asserted in NativeExprSpec). */
+    * one-pass native expression (hash-identical to
+    * HofReference.fingerprintDfHof, asserted in NativeExprSpec). */
   def fingerprintDf(docs: DataFrame, idCol: String, textCol: String,
                     k: Int = 8, w: Int = 4): DataFrame =
     docs.select(col(idCol).as("id"),
@@ -32,24 +32,6 @@ object Fingerprint {
                        k: Int = 8, w: Int = 4): DataFrame =
     docs.select(col(idCol).as("id"),
       graft.functions.NativeExpressions.winnow(col(textCol), k, w, md5 = true).as("fps"))
-
-  /** HOF reference implementation, kept as the parity oracle for the
-    * native expression. */
-  def fingerprintDfHof(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int = 8, w: Int = 4): DataFrame =
-    docs
-      .select(col(idCol).as("id"), col(textCol).as("t"))
-      .select(col("id"),
-        when(length(col("t")) >= k,
-          transform(sequence(lit(1), length(col("t")) - lit(k - 1)),
-            i => xxhash64(substr(col("t"), i, lit(k)))))
-          .otherwise(array().cast("array<bigint>")).as("g"))
-      .select(col("id"),
-        when(size(col("g")) - lit(w - 1) >= 1,
-          array_sort(array_distinct(transform(
-            sequence(lit(1), size(col("g")) - lit(w - 1)),
-            i => array_min(slice(col("g"), i, lit(w)))))))
-          .otherwise(array_sort(array_distinct(col("g")))).as("fps"))
 
   /** (id, fp) exploded pairs for overlap joins. */
   def fingerprints(docs: DataFrame, idCol: String, textCol: String,

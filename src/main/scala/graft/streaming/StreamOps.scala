@@ -148,7 +148,8 @@ object StreamOps {
     * failure. Replay is safe by construction here — merging the SAME
     * collapsed change set twice is a fixpoint (SourcesSpec pins the
     * idempotent-replay property), and a swap torn mid-crash is healed
-    * by recoverCompact at the next merge. Cross-batch ordering stays
+    * by recoverCompact at the start of the next batch, before the
+    * bootstrap-or-merge choice. Cross-batch ordering stays
     * the caller's contract (the fold-family rule): a change arriving
     * in a LATER batch wins regardless of orderCols, so deliver
     * key-partitioned in order for last-writer semantics across
@@ -164,6 +165,9 @@ object StreamOps {
         .agg(max_by(struct(nonKey.map(col): _*),
           struct(orderCols.map(col): _*)).as("_l"))
         .select(keys.map(col) ++ nonKey.map(c => col(s"_l.$c").as(c)): _*)
+      // heal a torn swap first: with the live path missing, the table
+      // sits in .compact.old and a bootstrap would shadow every row of it
+      graft.sources.Sinks.recoverCompact(tablePath)
       val table = new org.apache.hadoop.fs.Path(tablePath)
       val tableExists =
         table.getFileSystem(spark.sessionState.newHadoopConf()).exists(table)

@@ -143,7 +143,7 @@ class BpeSpec extends SparkSpec {
     val (sequential, tS) = timed(1)
     assert(batched === sequential)
     // the scale claim behind batching: cost tracks PASSES, not merges —
-    // record the measured ratio for the PLANS.md learn-cost curve
+    // report the measured ratio alongside the test result
     info(f"256 merges: batched(64) ${tB}%.1f s vs sequential ${tS}%.1f s")
   }
 

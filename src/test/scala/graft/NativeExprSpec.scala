@@ -16,7 +16,7 @@ class NativeExprSpec extends SparkSpec {
         col("i") === col("j") - 250)
     val diffs = pairs.select(
       (Vectors.cosine(col("va"), col("vb")) -
-        Vectors.cosineHof(col("va"), col("vb"))).as("d"))
+        HofReference.cosineHof(col("va"), col("vb"))).as("d"))
       .agg(max(abs(col("d")))).head().getDouble(0)
     assert(diffs === 0.0)
   }
@@ -25,7 +25,7 @@ class NativeExprSpec extends SparkSpec {
     for (n <- Seq(2, 3, 5)) {
       val native = Dedup.shingleDf(docs, "doc_id", "text", n)
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-      val hof = Dedup.shingleDfHof(docs, "doc_id", "text", n)
+      val hof = HofReference.shingleDfHof(docs, "doc_id", "text", n)
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
       assert(native.keySet === hof.keySet)
       native.foreach { case (id, sh) =>
@@ -48,7 +48,7 @@ class NativeExprSpec extends SparkSpec {
   test("native minhash signature is hash-identical to the HOF pipeline") {
     val native = Dedup.signatureDf(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val hof = Dedup.signatureDfHof(docs, "doc_id", "text")
+    val hof = HofReference.signatureDfHof(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(native.keySet === hof.keySet)
     native.foreach { case (id, sig) => assert(sig === hof(id), s"doc $id") }
@@ -57,7 +57,7 @@ class NativeExprSpec extends SparkSpec {
   test("native simhash is bit-identical to the HOF pipeline") {
     val native = Dedup.simHashDf(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val hof = Dedup.simHashDfHof(docs, "doc_id", "text")
+    val hof = HofReference.simHashDfHof(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native === hof)
   }
@@ -106,7 +106,7 @@ class NativeExprSpec extends SparkSpec {
         col("embedding").cast("array<double>"), planes).as("ks"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val hof = emb.select(col("vec_id"),
-      array(planes.map(p => AnnLsh.bucketKey(col("embedding"), p)): _*).as("ks"))
+      array(planes.map(p => HofReference.bucketKey(col("embedding"), p)): _*).as("ks"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(native === hof)
   }
@@ -115,7 +115,7 @@ class NativeExprSpec extends SparkSpec {
     import graft.operators.Fingerprint
     val native = Fingerprint.fingerprintDf(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val hof = Fingerprint.fingerprintDfHof(docs, "doc_id", "text")
+    val hof = HofReference.fingerprintDfHof(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(native.keySet === hof.keySet)
     native.foreach { case (id, fps) => assert(fps === hof(id), s"doc $id") }

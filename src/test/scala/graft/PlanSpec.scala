@@ -476,8 +476,8 @@ class PlanSpec extends SparkSpec {
 
   test("q_bootstrap_ci: fused hash in codegen, map-side partials, no cartesian") {
     val p = plan("q_bootstrap_ci")
-    // the B×n Poisson draw rides the native graft_md5_60 (the 1.5×
-    // NativeBench win); replicate sums must combine before the exchange
+    // the B×n Poisson draw rides the native graft_md5_60 expression;
+    // replicate sums must combine before the exchange
     assert(p.contains("graft_md5_60("), p)
     assert(p.contains("partial_sum"), p)
     assert(!p.contains("CartesianProduct"), p)

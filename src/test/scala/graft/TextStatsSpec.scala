@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.functions.Vectors
 import graft.operators.TextStats
 
 /** TextStats (entropy / surprisal / PMI) + the round-3 SQL-surface
@@ -65,7 +64,7 @@ class TextStatsSpec extends SparkSpec {
     val a = e.select(col("vec_id").as("i"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("j"), col("embedding").as("eb"))
     val want = a.join(b, col("i") < col("j"))
-      .filter(Vectors.cosineHof(col("ea"), col("eb")) >= 0.4)
+      .filter(HofReference.cosineHof(col("ea"), col("eb")) >= 0.4)
       .select("i", "j")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === want)
