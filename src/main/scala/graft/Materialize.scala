@@ -45,4 +45,16 @@ object Materialize {
       }
     }
   }
+
+  /** Release an eager checkpoint's blocks now: they stay pinned until
+    * the driver GCs the RDD reference, which inside an iterative loop
+    * means one pinned copy PER PASS. The checkpoint RDD sits behind a
+    * `LogicalRDD` leaf, so unpersist it directly; any other frame is
+    * left alone. */
+  def dropCheckpointBlocks(ds: Dataset[_]): Unit =
+    ds.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        l.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }

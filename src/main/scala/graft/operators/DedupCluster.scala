@@ -42,17 +42,6 @@ object DedupCluster {
       .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
   }
 
-  /** Eagerly-localCheckpointed datasets pin their RDD blocks until the
-    * driver GCs the RDD reference; inside the propagation loop that
-    * means one pinned label table PER PASS. The checkpoint RDD sits
-    * behind a `LogicalRDD` leaf, so unpersist it directly. */
-  private def dropCheckpointBlocks(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** Components over ONLY the nodes present in the edge list.
     *
     * Loop mechanics (why this isn't a plain persist loop): each pass

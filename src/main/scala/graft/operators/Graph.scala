@@ -21,15 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** See DedupCluster.dropCheckpointBlocks — the checkpoint RDD sits
-    * behind a LogicalRDD leaf; unpersist it directly. */
-  private def dropCheckpointBlocks(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   /** (node, dist): minimum hop count (≤ maxHops) from any seed, seeds
     * at dist 0. `seeds` needs a `node` column; unreachable nodes are
     * absent. Early-exits when a frontier empties. */

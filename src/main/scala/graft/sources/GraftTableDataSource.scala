@@ -6,11 +6,11 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL/DataFrame-API surface for [[VersionedTable]] —
   * `spark.read.format("graft-table")` with time travel:
@@ -49,11 +49,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * `VersionedTable.merge` prunes its rewrite candidates with — a
   * point lookup on a clustered 64k-file table PLANS ~1 file instead
   * of listing all 64k and leaning on footer pruning after the fact.
-  * Pruning is a conservative superset (a file is kept unless its
-  * stats PROVE no row can match), so it is performance-only; files
-  * without stats on a referenced column are always kept. The same
-  * index backs `VersionedTable.read`, so the Scala API prunes
-  * identically.
+  * One evaluator, [[GraftManifestFileIndex.mayMatch]], decides for
+  * both: it decodes the stat strings with `VersionedTable.statValue`
+  * (the one stat decoder) and compares them under Spark's own
+  * interpreted ordering for the column's type. Pruning is a
+  * conservative superset (a file is kept unless its stats PROVE no
+  * row can match), so it is performance-only; files without stats on
+  * a referenced column are always kept. The same index backs
+  * `VersionedTable.read`, so the Scala API prunes identically.
   */
 class GraftTableDataSource extends RelationProvider
     with CreatableRelationProvider with DataSourceRegister {
@@ -165,8 +168,11 @@ private[sources] class ComputedRelation(
   * Spark's planner with the version's immutable file list, pruned by
   * the manifest's per-file min/max stats against the query's data
   * filters. Stats live driver-side in the already-parsed manifest, so
-  * pruning is O(files × predicate terms) driver work with zero IO —
-  * the read-path dual of `merge`'s `pruneCandidateFiles`. */
+  * pruning is O(files × predicate terms) driver work with zero IO.
+  * The companion's `mayMatch` is also what `merge`'s
+  * `pruneCandidateFiles` calls in its range-only fallback, so reads
+  * and merges prune through one evaluator on one decoder
+  * (`VersionedTable.statValue`). */
 private[sources] class GraftManifestFileIndex(
     spark: SparkSession, tablePath: String,
     m: VersionedTable.ManifestData) extends FileIndex {
@@ -211,104 +217,67 @@ private[sources] object GraftManifestFileIndex {
   /** Can any row of `f` satisfy `e`? Conservative three-valued logic
     * collapsed to binary: TRUE unless the file's stats PROVE the
     * predicate unsatisfiable — unknown expressions, columns without
-    * stats, and null-sensitive predicates all keep the file (stats
-    * carry no null counts, so IsNull/IsNotNull never prune). Only
-    * And/Or compose; Not is NOT recursed (¬(may-match) is not
-    * (may-match ¬) under interval semantics). */
+    * stats, null literals, literals of another type than the column,
+    * and null-sensitive predicates all keep the file (stats carry no
+    * null counts, so IsNull/IsNotNull never prune). Only And/Or
+    * compose; Not is NOT recursed (¬(may-match) is not (may-match ¬)
+    * under interval semantics). The read path's file index and
+    * `VersionedTable.merge`'s range-only candidate search both prune
+    * through here. */
   private[sources] def mayMatch(m: VersionedTable.ManifestData,
                                 f: VersionedTable.FileEntry,
                                 e: Expression): Boolean = e match {
     case And(l, r) => mayMatch(m, f, l) && mayMatch(m, f, r)
     case Or(l, r) => mayMatch(m, f, l) || mayMatch(m, f, r)
-    case EqualTo(a: AttributeReference, Literal(v, _)) => inRange(f, a, v, v)
-    case EqualTo(Literal(v, _), a: AttributeReference) => inRange(f, a, v, v)
-    case EqualNullSafe(a: AttributeReference, Literal(v, _)) =>
-      v == null || inRange(f, a, v, v)
-    case EqualNullSafe(Literal(v, _), a: AttributeReference) =>
-      v == null || inRange(f, a, v, v)
-    case GreaterThan(a: AttributeReference, Literal(v, _)) =>
-      bound(f, a).forall { case (_, mx) => cmpAny(a.dataType, mx, v) > 0 }
-    case GreaterThan(Literal(v, _), a: AttributeReference) =>
-      bound(f, a).forall { case (mn, _) => cmpAny(a.dataType, mn, v) < 0 }
-    case GreaterThanOrEqual(a: AttributeReference, Literal(v, _)) =>
-      bound(f, a).forall { case (_, mx) => cmpAny(a.dataType, mx, v) >= 0 }
-    case GreaterThanOrEqual(Literal(v, _), a: AttributeReference) =>
-      bound(f, a).forall { case (mn, _) => cmpAny(a.dataType, mn, v) <= 0 }
-    case LessThan(a: AttributeReference, Literal(v, _)) =>
-      bound(f, a).forall { case (mn, _) => cmpAny(a.dataType, mn, v) < 0 }
-    case LessThan(Literal(v, _), a: AttributeReference) =>
-      bound(f, a).forall { case (_, mx) => cmpAny(a.dataType, mx, v) > 0 }
-    case LessThanOrEqual(a: AttributeReference, Literal(v, _)) =>
-      bound(f, a).forall { case (mn, _) => cmpAny(a.dataType, mn, v) <= 0 }
-    case LessThanOrEqual(Literal(v, _), a: AttributeReference) =>
-      bound(f, a).forall { case (_, mx) => cmpAny(a.dataType, mx, v) >= 0 }
+    case EqualTo(a: AttributeReference, Literal(v, t)) => inRange(f, a, t, v)
+    case EqualTo(Literal(v, t), a: AttributeReference) => inRange(f, a, t, v)
+    case EqualNullSafe(a: AttributeReference, Literal(v, t)) => inRange(f, a, t, v)
+    case EqualNullSafe(Literal(v, t), a: AttributeReference) => inRange(f, a, t, v)
+    case GreaterThan(a: AttributeReference, Literal(v, t)) =>
+      bound(f, a, t, v) { (_, mx, o) => o.gt(mx, v) }
+    case GreaterThan(Literal(v, t), a: AttributeReference) =>
+      bound(f, a, t, v) { (mn, _, o) => o.lt(mn, v) }
+    case GreaterThanOrEqual(a: AttributeReference, Literal(v, t)) =>
+      bound(f, a, t, v) { (_, mx, o) => o.gteq(mx, v) }
+    case GreaterThanOrEqual(Literal(v, t), a: AttributeReference) =>
+      bound(f, a, t, v) { (mn, _, o) => o.lteq(mn, v) }
+    case LessThan(a: AttributeReference, Literal(v, t)) =>
+      bound(f, a, t, v) { (mn, _, o) => o.lt(mn, v) }
+    case LessThan(Literal(v, t), a: AttributeReference) =>
+      bound(f, a, t, v) { (_, mx, o) => o.gt(mx, v) }
+    case LessThanOrEqual(a: AttributeReference, Literal(v, t)) =>
+      bound(f, a, t, v) { (mn, _, o) => o.lteq(mn, v) }
+    case LessThanOrEqual(Literal(v, t), a: AttributeReference) =>
+      bound(f, a, t, v) { (_, mx, o) => o.gteq(mx, v) }
     case In(a: AttributeReference, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-      vs.exists { case Literal(v, _) => inRange(f, a, v, v) }
+      vs.exists { case Literal(v, t) => inRange(f, a, t, v) }
     case InSet(a: AttributeReference, vs) =>
-      vs.exists(v => inRange(f, a, v, v))
+      vs.exists(v => inRange(f, a, a.dataType, v))
+    // the optimizer rewrites `b = true` / `b = false` to `b` / `NOT b`
+    case a: AttributeReference if a.dataType == BooleanType =>
+      inRange(f, a, BooleanType, true)
+    case Not(a: AttributeReference) if a.dataType == BooleanType =>
+      inRange(f, a, BooleanType, false)
     case _ => true
   }
 
-  /** The file's (min, max) for the attribute, decoded from the stat
-    * strings into the literal's INTERNAL representation domain —
-    * None when the file carries no stats for the column (pre-stats
-    * file, unstatable type, or all-null column), which always keeps
-    * the file. */
-  private def bound(f: VersionedTable.FileEntry,
-                    a: AttributeReference): Option[(Any, Any)] =
-    f.stats.get(a.name).flatMap { case (mn, mx) =>
-      try Some((statInternal(a.dataType, mn), statInternal(a.dataType, mx)))
-      catch { case _: Exception => None } // unparseable stat: keep
+  /** `p(min, max, ordering)` on the file's stats for `a`, decoded by
+    * `VersionedTable.statValue` and ordered by Spark's interpreted
+    * ordering for the column's type — TRUE (keep) when the literal is
+    * null or not of the column's type, or the file carries no
+    * decodable stats for the column (pre-stats file, unstatable type,
+    * all-null column). */
+  private def bound(f: VersionedTable.FileEntry, a: AttributeReference,
+                    t: DataType, v: Any)
+                   (p: (Any, Any, Ordering[Any]) => Boolean): Boolean =
+    v == null || t != a.dataType || f.stats.get(a.name).forall { case (mn, mx) =>
+      val decoded =
+        try Some((VersionedTable.statValue(t, mn), VersionedTable.statValue(t, mx)))
+        catch { case _: Exception => None } // unparseable stat: keep
+      decoded.forall { case (lo, hi) => p(lo, hi, TypeUtils.getInterpretedOrdering(t)) }
     }
 
   private def inRange(f: VersionedTable.FileEntry, a: AttributeReference,
-                      lo: Any, hi: Any): Boolean = {
-    if (lo == null) return true // null literal: no interval claim
-    bound(f, a).forall { case (mn, mx) =>
-      cmpAny(a.dataType, mx, lo) >= 0 && cmpAny(a.dataType, mn, hi) <= 0
-    }
-  }
-
-  /** Stat string → the catalyst INTERNAL value domain for `dt` (the
-    * domain `Literal.value` uses): integrals widen to Long, strings
-    * are UTF8String (binary-ordered, matching how min/max were
-    * computed), dates are epoch days, timestamps epoch micros (the
-    * TZ-free [[VersionedTable]] stat encoding). */
-  private def statInternal(dt: DataType, s: String): Any = dt match {
-    case ByteType | ShortType | IntegerType | LongType => s.toLong
-    case StringType => UTF8String.fromString(s)
-    case DateType => java.time.LocalDate.parse(s).toEpochDay
-    case TimestampType => s.toLong
-    case _: DecimalType => new java.math.BigDecimal(s)
-    case BooleanType => s.toBoolean
-    case other => throw new IllegalArgumentException(s"unstatable $other")
-  }
-
-  /** Ordered comparison in the internal-value domain; `b` comes from
-    * `Literal.value`, `a` from [[statInternal]]. */
-  private def cmpAny(dt: DataType, a: Any, b: Any): Int = (dt, a, b) match {
-    case (ByteType | ShortType | IntegerType | LongType | TimestampType |
-          DateType, _, _) =>
-      java.lang.Long.compare(toLong(a), toLong(b))
-    case (StringType, x: UTF8String, y: UTF8String) => x.compareTo(y)
-    case (_: DecimalType, _, _) => toBig(a).compareTo(toBig(b))
-    case (BooleanType, x: java.lang.Boolean, y: java.lang.Boolean) =>
-      x.compareTo(y)
-    case other => throw new IllegalArgumentException(s"uncomparable $other")
-  }
-
-  private def toLong(v: Any): Long = v match {
-    case b: Byte => b.toLong
-    case s: Short => s.toLong
-    case i: Int => i.toLong
-    case l: Long => l
-    case other => throw new IllegalArgumentException(s"non-integral $other")
-  }
-
-  private def toBig(v: Any): java.math.BigDecimal = v match {
-    case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
-    case b: java.math.BigDecimal => b
-    case b: BigDecimal => b.bigDecimal
-    case other => throw new IllegalArgumentException(s"non-decimal $other")
-  }
+                      t: DataType, v: Any): Boolean =
+    bound(f, a, t, v) { (mn, mx, o) => o.lteq(mn, v) && o.gteq(mx, v) }
 }

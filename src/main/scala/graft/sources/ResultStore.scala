@@ -26,9 +26,15 @@ trait ResultStore {
 }
 
 /** Parquet-backed ResultStore. Rewrites are full-snapshot (read →
-  * transform → overwrite staging → swap); fine for serving-sized
-  * result tables, which are top-k aggregates, not raw data. The
-  * key/timestamp column names are fixed at construction.
+  * transform → write `.compact.tmp` → [[Sinks.swapIn]]); fine for
+  * serving-sized result tables, which are top-k aggregates, not raw
+  * data. The key/timestamp column names are fixed at construction.
+  *
+  * Crash safety is Sinks' swap: a rewrite torn between its two renames
+  * leaves the store under `.compact.old` (or a finished `.compact.tmp`),
+  * and every call first runs [[Sinks.recoverCompact]], so the next
+  * instance rolls the store back (or forward) instead of reading it as
+  * absent and overwriting it with one batch.
   *
   * Spark jobs per call, on a store that exists:
   *   - `read()`: none while the store is as this instance last saw
@@ -59,10 +65,13 @@ final class ParquetResultStore(spark: SparkSession, path: String,
     * `unionByName`. */
   @volatile private var schema: Option[(Long, StructType)] = None
 
-  /** The store directory's modification time; None when it is absent. */
-  private def modified: Option[Long] =
+  /** The store directory's modification time, after healing a torn
+    * swap; None when it is absent. */
+  private def modified: Option[Long] = {
+    Sinks.recoverCompact(path)
     try Some(fs.getFileStatus(target).getModificationTime)
     catch { case _: java.io.FileNotFoundException => None }
+  }
 
   override def read(): DataFrame = modified match {
     case None => spark.emptyDataFrame
@@ -75,14 +84,11 @@ final class ParquetResultStore(spark: SparkSession, path: String,
     }
   }
 
-  /** Read-modify-overwrite through a staging dir: parquet can't
-    * overwrite a path while reading it, and a failed rewrite must not
-    * destroy the store. */
+  /** Read-modify-write through Sinks' swap: parquet can't overwrite a
+    * path while reading it, and a failed rewrite must not destroy the
+    * store. */
   private def rewrite(df: DataFrame): Unit = {
-    val staging = path + ".staging"
-    df.write.mode(SaveMode.Overwrite).parquet(staging)
-    fs.delete(target, true)
-    fs.rename(new org.apache.hadoop.fs.Path(staging), target)
+    Sinks.swapIn(path)(tmp => df.write.mode(SaveMode.Overwrite).parquet(tmp))
     schema = modified.map(_ -> df.schema)
   }
 

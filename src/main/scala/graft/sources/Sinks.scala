@@ -92,9 +92,9 @@ object Sinks {
     * The swap is two sequential renames, NOT atomic: between
     * rename(path → .compact.old) and rename(.compact.tmp → path) the
     * live path does not exist, and a crash in that window strands the
-    * data under `.compact.old` (java.io.File has no exchange-style
-    * rename; a real deployment swaps a manifest/symlink instead —
-    * Iceberg/Delta solve exactly this). [[recoverCompact]] closes the
+    * data under `.compact.old` (a Hadoop FileSystem has no
+    * exchange-style rename; a real deployment swaps a manifest/symlink
+    * instead — Iceberg/Delta solve exactly this). [[recoverCompact]] closes the
     * gap on restart: call it before reading a compactable path — it
     * rolls a torn swap forward (tmp finished: `_SUCCESS` present) or
     * back (tmp incomplete), and compact() itself invokes it first so a
@@ -113,20 +113,34 @@ object Sinks {
     n
   }
 
-  /** The snapshot-swap protocol shared by [[compact]] and [[merge]]:
-    * write the replacement under `.compact.tmp`, then two renames.
-    * One debris naming scheme means ONE recovery routine
-    * ([[recoverCompact]]) heals a torn swap from either maintenance
-    * pass — a reader restarted mid-crash doesn't need to know which
-    * writer died. */
-  private def swapIn(path: String)(write: String => Unit): Unit = {
-    val tmp = path.stripSuffix("/") + ".compact.tmp"
-    write(tmp)
-    val old = new java.io.File(path)
-    val bak = new java.io.File(path.stripSuffix("/") + ".compact.old")
-    require(old.renameTo(bak), s"rename $path -> $bak failed")
-    require(new java.io.File(tmp).renameTo(old), s"rename $tmp -> $path failed")
-    org.apache.commons.io.FileUtils.deleteDirectory(bak)
+  /** The snapshot-swap protocol shared by [[compact]], [[merge]] and
+    * [[ParquetResultStore]]: write the replacement under `.compact.tmp`,
+    * then two renames on the path's Hadoop `FileSystem` (a path that
+    * does not exist yet is simply renamed into place). One debris
+    * naming scheme means ONE recovery routine ([[recoverCompact]])
+    * heals a torn swap from any of them — a reader restarted
+    * mid-crash doesn't need to know which writer died. */
+  private[sources] def swapIn(path: String)(write: String => Unit): Unit = {
+    val (fs, live, tmp, bak) = swapPaths(path)
+    write(tmp.toString)
+    if (fs.exists(live)) {
+      if (fs.exists(bak)) fs.delete(bak, true)
+      require(fs.rename(live, bak), s"rename $live -> $bak failed")
+    }
+    require(fs.rename(tmp, live), s"rename $tmp -> $live failed")
+    fs.delete(bak, true)
+  }
+
+  /** (file system, live, `.compact.tmp`, `.compact.old`) for `path`,
+    * resolved against the active session's Hadoop configuration. */
+  private def swapPaths(path: String) = {
+    import org.apache.hadoop.fs.Path
+    val conf = org.apache.spark.sql.SparkSession.getActiveSession
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+    val live = new Path(path.stripSuffix("/"))
+    (live.getFileSystem(conf), live, live.suffix(".compact.tmp"),
+      live.suffix(".compact.old"))
   }
 
   /** MERGE INTO-shaped upsert against a keyed parquet table — the
@@ -228,18 +242,16 @@ object Sinks {
     * missing, tmp incomplete → roll back to `.compact.old`. Idempotent;
     * no-op when no compaction debris exists. */
   def recoverCompact(path: String): Unit = {
-    val live = new java.io.File(path.stripSuffix("/"))
-    val tmp = new java.io.File(path.stripSuffix("/") + ".compact.tmp")
-    val bak = new java.io.File(path.stripSuffix("/") + ".compact.old")
-    if (live.exists()) { // swap completed (or never started): clear debris
-      if (bak.exists()) org.apache.commons.io.FileUtils.deleteDirectory(bak)
-      if (tmp.exists()) org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-    } else if (tmp.exists() && new java.io.File(tmp, "_SUCCESS").exists()) {
-      require(tmp.renameTo(live), s"roll-forward $tmp -> $live failed")
-      if (bak.exists()) org.apache.commons.io.FileUtils.deleteDirectory(bak)
-    } else if (bak.exists()) {
-      require(bak.renameTo(live), s"roll-back $bak -> $live failed")
-      if (tmp.exists()) org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+    val (fs, live, tmp, bak) = swapPaths(path)
+    if (fs.exists(live)) { // swap completed (or never started): clear debris
+      if (fs.exists(bak)) fs.delete(bak, true)
+      if (fs.exists(tmp)) fs.delete(tmp, true)
+    } else if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
+      require(fs.rename(tmp, live), s"roll-forward $tmp -> $live failed")
+      fs.delete(bak, true)
+    } else if (fs.exists(bak)) {
+      require(fs.rename(bak, live), s"roll-back $bak -> $live failed")
+      fs.delete(tmp, true)
     }
   }
 }

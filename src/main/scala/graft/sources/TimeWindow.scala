@@ -25,6 +25,10 @@ final case class TimeWindow(start: Instant, end: Instant) {
   /** Equivalent predicate over hive-style partition columns — matches
     * only whole hours, so `start`/`end` must be hour-aligned. */
   def partitionFilter(year: Column, month: Column, day: Column, hour: Column): Column = {
+    require(start.truncatedTo(ChronoUnit.HOURS) == start &&
+      end.truncatedTo(ChronoUnit.HOURS) == end,
+      s"partitionFilter matches whole hours only: window [$start, $end) " +
+        "is not hour-aligned")
     def key(y: Column, mo: Column, d: Column, h: Column): Column =
       ((y * 100 + mo) * 100 + d) * 100 + h
     val s = ZonedDateTime.ofInstant(start, ZoneOffset.UTC)

@@ -4,8 +4,12 @@ import java.io.File
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference,
+  GreaterThanOrEqual, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.JsonUtil
 
@@ -74,7 +78,10 @@ import graft.JsonUtil
   * Scale shape: per merge, one stats-pruning pass (source's distinct
   * keys × the broadcast file-stats table — delta × file-count, never
   * data-sized, with a range-only O(files) fallback past the
-  * comparison budget), one key-shuffled (or AQE-broadcast) merge join
+  * comparison budget that prunes through the read path's
+  * `GraftManifestFileIndex.mayMatch`; every driver-side stat
+  * comparison decodes with [[statValue]] and orders with Spark's
+  * interpreted ordering), one key-shuffled (or AQE-broadcast) merge join
   * over ONLY the candidate files + the source, one delta-sized write,
   * one manifest link. Reads add one manifest parse. Nothing is
   * table-sized except the first merge after an unclustered [[init]]
@@ -170,6 +177,29 @@ object VersionedTable {
 
   private[graft] case class FileEntry(path: String, rows: Long, bytes: Long,
                                         stats: Map[String, (String, String)])
+
+  /** THE driver-side decoder of a [[statStr]] string: Catalyst's
+    * internal value for `dt` (the domain `Literal.value` uses), so
+    * decoded stats compare with `TypeUtils.getInterpretedOrdering(dt)`
+    * against each other and against query literals. Longs and
+    * timestamps (epoch micros) are Long, dates Int epoch days
+    * (`LocalDate.parse` keeps extended and BCE years), strings
+    * UTF8String (UTF-8 byte order, the order Spark's min/max produced),
+    * decimals Decimal, and byte/short/int/boolean their exact boxed
+    * type. Throws on an unstatable type or an unparseable string;
+    * every caller treats that as "no stats" and keeps the file. */
+  private[graft] def statValue(dt: DataType, s: String): Any = dt match {
+    case ByteType => s.toByte
+    case ShortType => s.toShort
+    case IntegerType => s.toInt
+    case LongType | TimestampType => s.toLong
+    case DateType => Math.toIntExact(java.time.LocalDate.parse(s).toEpochDay)
+    case StringType => UTF8String.fromString(s)
+    case _: DecimalType => Decimal(new java.math.BigDecimal(s))
+    case BooleanType => s.toBoolean
+    case other => throw new IllegalArgumentException(s"unstatable $other")
+  }
+
   private[graft] case class ManifestData(version: Long, base: Long,
                                            schema: StructType,
                                            files: Seq[FileEntry],
@@ -365,8 +395,9 @@ object VersionedTable {
         }
         if (perBlock.nonEmpty && perBlock.forall(_.isDefined)) {
           val pairs = perBlock.flatten
-          val mn = pairs.map(_._1).reduce((a, b) => if (cmp(dt, a, b) <= 0) a else b)
-          val mx = pairs.map(_._2).reduce((a, b) => if (cmp(dt, a, b) >= 0) a else b)
+          val ord = TypeUtils.getInterpretedOrdering(dt)
+          val mn = pairs.map(_._1).minBy(statValue(dt, _))(ord)
+          val mx = pairs.map(_._2).maxBy(statValue(dt, _))(ord)
           Some(k -> ((mn, mx)))
         } else None
       }.toMap
@@ -488,7 +519,9 @@ object VersionedTable {
     * Past this budget (a huge delta against a many-file table — the
     * regime where most files are getting rewritten anyway) pruning
     * falls back to RANGE-ONLY: one delta-sized min/max aggregate of
-    * the source keys, intersected with each file's stats driver-side.
+    * the source keys, as a `k >= min AND k <= max` predicate that
+    * `GraftManifestFileIndex.mayMatch` tests against each file's stats
+    * driver-side.
     * Both paths are conservative supersets of the truly-matched
     * files, so the choice is performance-only. */
   private val MaxPruneComparisons: Long = 2L << 30
@@ -532,7 +565,8 @@ object VersionedTable {
       m.files.partition(f => needed(f.path))
     } else {
       // range-only fallback: the source's global per-column key range
-      // (one delta-sized aggregate) intersected with file stats on the
+      // (one delta-sized aggregate) as the predicate k >= srcMin AND
+      // k <= srcMax per key, pruned by the read path's evaluator on the
       // driver — O(files) work regardless of delta size
       val aggs = keys.flatMap { k =>
         val dt = m.schema(k).dataType
@@ -540,63 +574,15 @@ object VersionedTable {
           statStr(max(col(k)), dt).as(s"__mx_$k"))
       }
       val r = srcKeys.agg(aggs.head, aggs.tail: _*).collect().head
-      def overlaps(f: FileEntry): Boolean = keys.forall { k =>
-        f.stats.get(k) match {
-          case None => true // no stats: conservative candidate
-          case Some((fmn, fmx)) =>
-            val smn = r.getAs[String](s"__mn_$k")
-            val smx = r.getAs[String](s"__mx_$k")
-            if (smn == null || smx == null) true
-            else {
-              val dt = m.schema(k).dataType
-              // string round trips are exact for every statable type;
-              // compare in the COLUMN's ordering by parsing both sides
-              cmp(dt, fmn, smx) <= 0 && cmp(dt, smn, fmx) <= 0
-            }
-        }
-      }
-      m.files.partition(overlaps)
+      val range = keys.filter(k => statable(m.schema(k).dataType)).flatMap { k =>
+        val a = AttributeReference(k, m.schema(k).dataType)()
+        def bound(c: String) = Literal(statValue(a.dataType, r.getAs[String](c)), a.dataType)
+        if (r.getAs[String](s"__mn_$k") == null) Nil // all-null source keys
+        else Seq(GreaterThanOrEqual(a, bound(s"__mn_$k")), LessThanOrEqual(a, bound(s"__mx_$k")))
+      }.reduceOption(And)
+      m.files.partition(f =>
+        range.forall(GraftManifestFileIndex.mayMatch(m, f, _)))
     }
-  }
-
-  /** Driver-side ordered comparison of two stat strings under the
-    * column's type ordering (the same semantics the column comparison
-    * in the per-key path uses). Strings compare as UTF-8 BYTES, not
-    * java.lang.String.compareTo: Spark's min/max order strings by
-    * UTF-8 binary (code-point) order while compareTo uses UTF-16
-    * code units, and the two disagree for supplementary characters
-    * (U+F000 sorts above U+1F600 in UTF-16 but below in UTF-8) — a
-    * mismatched ordering could report no-overlap for a file that truly
-    * overlaps, breaking the conservative-superset invariant. */
-  private[sources] def cmp(dt: DataType, a: String, b: String): Int = dt match {
-    case ByteType | ShortType | IntegerType | LongType | TimestampType =>
-      // timestamps are stored as epoch micros (statStr)
-      java.lang.Long.compare(a.toLong, b.toLong)
-    case _: DecimalType => new java.math.BigDecimal(a)
-      .compareTo(new java.math.BigDecimal(b))
-    case BooleanType => java.lang.Boolean.compare(a.toBoolean, b.toBoolean)
-    case DateType =>
-      // ISO form; parse rather than compare text so extended years
-      // ("+10000-01-01") and BCE ("-0044-03-15") order correctly
-      java.lang.Long.compare(java.time.LocalDate.parse(a).toEpochDay,
-        java.time.LocalDate.parse(b).toEpochDay)
-    case StringType => utf8Cmp(a, b)
-    case _ => a.compareTo(b)
-  }
-
-  /** Lexicographic compare of the UTF-8 encodings — matches
-    * UTF8String.compareTo, the ordering Spark's min/max produced the
-    * stats under. */
-  private def utf8Cmp(a: String, b: String): Int = {
-    val x = a.getBytes(UTF_8); val y = b.getBytes(UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    x.length - y.length
   }
 
   /** MERGE INTO the current version, committing the result as a new
@@ -690,17 +676,8 @@ object VersionedTable {
     val counts @ (_, nKeys) = Sinks.sourceKeyCounts(src, keys)
     try mergeLoop(spark, path, src, keys, deleteWhen, numFiles,
       mergeSchema, maxPruneComparisons, counts, nKeys)(beforePublish)
-    finally dropCheckpointBlocks(src)
+    finally graft.Materialize.dropCheckpointBlocks(src)
   }
-
-  /** Eagerly-checkpointed frames pin RDD blocks until a driver GC;
-    * drop them as soon as the commit returns (the DedupCluster rule). */
-  private def dropCheckpointBlocks(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   private def mergeLoop(spark: SparkSession, path: String,
                         source: DataFrame, keys: Seq[String],

@@ -17,6 +17,16 @@ class SourcesSpec extends SparkSpec {
     assert(w.end === Instant.parse("2024-01-15T10:00:00Z"))
   }
 
+  test("TimeWindow.partitionFilter rejects a window that is not hour-aligned") {
+    val w = TimeWindow(Instant.parse("2024-01-01T00:30:00Z"), Instant.parse("2024-01-01T01:30:00Z"))
+    val e = intercept[IllegalArgumentException] {
+      w.partitionFilter(col("year"), col("month"), col("day"), col("hour"))
+    }
+    assert(e.getMessage.contains("2024-01-01T00:30:00Z"), e.getMessage)
+    // aligned windows still build
+    TimeWindow.hour(2024, 1, 1, 0).partitionFilter(col("year"), col("month"), col("day"), col("hour"))
+  }
+
   test("TableLoader roundtrips csv and json with schema") {
     val dir = tmpDir("loader")
     val src = table("nation")
@@ -506,6 +516,21 @@ class SourcesSpec extends SparkSpec {
       second.upsert(storeRows(Seq(("c", "2024-01-01 00:30:00", 3L))).withColumn("extra", lit(1)))
     }
     assert(second.read().count() === 2)
+  }
+
+  test("a ParquetResultStore torn between its swap's renames loses no row") {
+    val dir = tmpDir("store_torn") + "/results"
+    new ParquetResultStore(spark, dir, "k", "ts")
+      .upsert(storeRows(Seq(("a", "2024-01-01 00:10:00", 1L), ("b", "2024-01-01 01:10:00", 2L))))
+    // a crash after rename(results -> .compact.old), before the new copy landed
+    assert(new java.io.File(dir).renameTo(new java.io.File(s"$dir.compact.old")))
+    val fresh = new ParquetResultStore(spark, dir, "k", "ts")
+    assert(fresh.read().collect().map(r => r.getString(0) -> r.getLong(2)).toMap ===
+      Map("a" -> 1L, "b" -> 2L))
+    fresh.upsert(storeRows(Seq(("c", "2024-01-01 02:10:00", 3L))))
+    assert(fresh.read().collect().map(r => r.getString(0) -> r.getLong(2)).toMap ===
+      Map("a" -> 1L, "b" -> 2L, "c" -> 3L))
+    assert(!new java.io.File(s"$dir.compact.old").exists())
   }
 
   test("a ParquetResultStore reads the columns another writer's rewrite installed") {

@@ -648,4 +648,70 @@ class VersionedTableSpec extends SparkSpec {
       new java.io.File(vd, "123456789.json").toPath, "{}".getBytes("UTF-8"))
     assert(VersionedTable.versions(p) === Seq(1L, 123456789L))
   }
+
+  test("every statable type: the decoded stats are Spark's min/max, a " +
+      "point read plans the one containing file, and a range-fallback " +
+      "merge updates the key") {
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.TypeUtils
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    def ids(n: Long, k: org.apache.spark.sql.Column) =
+      ss.range(0L, n).select(k.as("k"), col("id").as("p"))
+    def indexed[T](vs: Seq[T])(implicit e: org.apache.spark.sql.Encoder[T]) =
+      vs.toDF("k").withColumn("p", monotonically_increasing_id())
+    val cases = Seq(
+      "byte" -> ids(8, (col("id") - 3).cast("byte")),
+      "short" -> ids(8, (col("id") * 1000 - 3000).cast("short")),
+      "int" -> ids(8, (col("id") * 300000000L - 1000000000L).cast("int")),
+      "long" -> ids(8, col("id") * 4000000000000L - 9000000000000L),
+      "string" -> indexed(Seq("", "a", "z", "\u00e9", "\uF000", "\uD83D\uDE00")),
+      "boolean" -> indexed(Seq(false, true)),
+      "date" -> indexed(Seq("+10000-01-01", "-0044-03-15", "1970-01-01",
+        "2024-02-29").map(java.time.LocalDate.parse)),
+      "timestamp" -> ids(8, timestamp_micros((col("id") - 3) * 400000000000000L)),
+      "decimal(9,2)" -> ids(8, ((col("id") - 5) * 12.25).cast("decimal(9,2)")),
+      "decimal(18,4)" -> ids(8, ((col("id") - 5) * 1e9 + 0.125).cast("decimal(18,4)")),
+      "decimal(25,3)" -> ids(8, ((col("id") - 5) * 1e20 + 0.5).cast("decimal(25,3)")))
+    val prevTz = ss.conf.get("spark.sql.session.timeZone")
+    ss.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try for ((name, df) <- cases) {
+      val p = s"${tmpDir("vt-stat")}/t"
+      VersionedTable.init(ss, p, df, clusterBy = Seq("k"), numFiles = 4)
+      val dt = df.schema("k").dataType
+      val ord = TypeUtils.getInterpretedOrdering(dt)
+      val files = VersionedTable.readManifest(p, 1L).files
+      assert(files.size >= 2, s"$name: clustered init lays out several files")
+      // each file's decoded (min, max) is Spark's own min/max of its rows
+      val bounds = files.map { f =>
+        val (mn, mx) = f.stats.getOrElse("k", fail(s"$name: ${f.path} has no stats"))
+        val want = ss.read.parquet(new java.io.File(p, f.path).getPath)
+          .agg(min("k"), max("k")).queryExecution.toRdd.map(_.copy()).collect().head
+        val got = (VersionedTable.statValue(dt, mn), VersionedTable.statValue(dt, mx))
+        assert(ord.equiv(got._1, want.get(0, dt)) && ord.equiv(got._2, want.get(1, dt)),
+          s"$name: ${f.path} stats ($mn, $mx) vs Spark's ${want.toSeq(Seq(dt, dt))}")
+        got
+      }
+      // a point filter on a value of the middle file plans that file alone
+      val f = files(files.size / 2)
+      val v = bounds(files.size / 2)._1
+      val key = GraftBridge.column(Literal(v, dt))
+      val point = VersionedTable.read(ss, p).filter(col("k") === key)
+      val scan = point.queryExecution.sparkPlan.collectFirst {
+        case s: FileSourceScanExec => s }.get
+      val planned = scan.relation.location
+        .listFiles(scan.partitionFilters, scan.dataFilters).flatMap(_.files)
+        .map(_.getPath.getName)
+      assert(planned === Seq(new java.io.File(f.path).getName), name)
+      val hits = point.count()
+      assert(hits >= 1L, name)
+      // the range-only fallback finds that file too: an update, not an insert
+      val n = VersionedTable.read(ss, p).count()
+      VersionedTable.mergeWithHook(ss, p,
+        ss.range(1).select(key.as("k"), lit(-1L).as("p")), Seq("k"),
+        lit(false), 0, maxPruneComparisons = 0L)(() => ())
+      assert(VersionedTable.read(ss, p).count() === n, s"$name: duplicate key")
+      assert(VersionedTable.read(ss, p).filter(col("p") === -1L).count() === hits, name)
+    } finally ss.conf.set("spark.sql.session.timeZone", prevTz)
+  }
 }
