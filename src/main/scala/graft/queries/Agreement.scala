@@ -3,7 +3,7 @@ package queries
 
 import graft.Materialize._
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,6 +14,60 @@ import Shared._
 
 /** Agreement, paired-classifier and contingency-table statistics. */
 object Agreement {
+
+  /** The lang × source contingency entropies q_mutual_info and
+    * q_theil_u read, as one row (smi, shx, shy, nn): smi = Σ p·ln(p/pxpy)
+    * over the cells, shx and shy = Σ p·ln p over each marginal — every
+    * ln term round(9) into a DECIMAL sum (order-free). The contingency
+    * table feeds cx, cy, tot and mi, so it is checkpointed once
+    * (9 documents scans → 1). */
+  private def langSourceEntropies(s: SparkSession, dir: String): DataFrame = {
+    val cxy = t(s, dir, "documents")
+      .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("c"))
+      .eagerCheckpoint()
+    val cx = cxy.groupBy(col("lang")).agg(sum(col("c")).as("nx"))
+    val cy = cxy.groupBy(col("source")).agg(sum(col("c")).as("ny"))
+    val tot = cxy.agg(sum(col("c")).cast("long").as("nn"))
+    def nd(c: Column) = c.cast("double")
+    val mi = cxy.join(broadcast(cx), "lang")
+      .join(broadcast(cy), "source")
+      .crossJoin(broadcast(tot))
+      .select(round(nd(col("c")) / nd(col("nn")) *
+          log(nd(col("c")) * nd(col("nn")) /
+            (nd(col("nx")) * nd(col("ny")))), 9)
+        .cast("decimal(28,9)").as("tmi"))
+      .agg(sum(col("tmi")).as("smi"))
+    val hx = cx.crossJoin(broadcast(tot))
+      .select(round(nd(col("nx")) / nd(col("nn")) *
+          log(nd(col("nx")) / nd(col("nn"))), 9)
+        .cast("decimal(28,9)").as("th"))
+      .agg(sum(col("th")).as("shx"))
+    val hy = cy.crossJoin(broadcast(tot))
+      .select(round(nd(col("ny")) / nd(col("nn")) *
+          log(nd(col("ny")) / nd(col("nn"))), 9)
+        .cast("decimal(28,9)").as("th"))
+      .agg(sum(col("th")).as("shy"))
+    mi.crossJoin(broadcast(hx)).crossJoin(broadcast(hy))
+      .crossJoin(broadcast(tot))
+  }
+
+  /** langSourceEntropies' oracle: WITH cxy … hy, no trailing comma. */
+  private val LangSourceEntropySql =
+    """WITH cxy AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS c
+      |  FROM documents GROUP BY 1, 2),
+      |cx AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS nx FROM cxy GROUP BY lang),
+      |cy AS (SELECT source, CAST(SUM(c) AS BIGINT) AS ny FROM cxy GROUP BY source),
+      |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS nn FROM cxy),
+      |mi AS (SELECT SUM(CAST(ROUND(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE)
+      |    * ln(CAST(c AS DOUBLE) * CAST(nn AS DOUBLE)
+      |      / (CAST(nx AS DOUBLE) * CAST(ny AS DOUBLE))), 9) AS DECIMAL(28,9))) AS smi
+      |  FROM cxy JOIN cx USING (lang) JOIN cy USING (source) CROSS JOIN tot),
+      |hx AS (SELECT SUM(CAST(ROUND(CAST(nx AS DOUBLE) / CAST(nn AS DOUBLE)
+      |    * ln(CAST(nx AS DOUBLE) / CAST(nn AS DOUBLE)), 9) AS DECIMAL(28,9))) AS shx
+      |  FROM cx CROSS JOIN tot),
+      |hy AS (SELECT SUM(CAST(ROUND(CAST(ny AS DOUBLE) / CAST(nn AS DOUBLE)
+      |    * ln(CAST(ny AS DOUBLE) / CAST(nn AS DOUBLE)), 9) AS DECIMAL(28,9))) AS shy
+      |  FROM cy CROSS JOIN tot)""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -110,8 +164,8 @@ object Agreement {
             (lit(1.0) - nd(col("pe_n")) / (nd(col("nn")) * nd(col("nn")))), 9)
             .as("kappa"))
     },
-      ("""WITH b AS (SELECT doc_id,
-        |  list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS toks
+      (raw"""WITH b AS (SELECT doc_id,
+        |  ${tokensSql("lower(text)")} AS toks
         |  FROM documents),
         |sc AS (SELECT doc_id,
         |  len(list_filter(toks, x -> x IN ('the','a','of','and','to'))) AS en,
@@ -266,17 +320,7 @@ object Agreement {
         .select(col("event_id"),
           col("value").cast("decimal(18,2)").as("v"),
           (col("event_type") === "purchase").as("y"))
-      // r18 (guide §3.3): h feeds tot and the cutpoint agg — checkpoint
-      val h = ev.groupBy(col("v")).agg(count(lit(1)).as("c"))
-        .eagerCheckpoint()
-      val wc = boundedGlobal("2-dec value histogram, |distinct values| rows")
-        .orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val tot = h.agg(sum(col("c")).cast("long").as("nn"))
-      val med = h.withColumn("cum", sum(col("c")).over(wc))
-        .crossJoin(broadcast(tot))
-        .agg(min(when(col("cum") >= expr("(nn + 1) div 2"), col("v")))
-          .as("p50"))
+      val med = ArmStats.p50Cut(ev)
       val pb = NativeExpressions.md5Prefix60(
         concat(lit("mcn:"), col("event_id"))) % 2 === 0
       val cm = ev.crossJoin(broadcast(med))
@@ -296,13 +340,10 @@ object Agreement {
 
       // paired-classifier discordant counts; the md5-parity coin replays
       // via the same hex-prefix composition NativeExprSpec pins
-      """WITH ev AS (SELECT event_id, CAST(value AS DECIMAL(18,2)) AS v,
+      s"""WITH ev AS (SELECT event_id, CAST(value AS DECIMAL(18,2)) AS v,
         |    event_type = 'purchase' AS y FROM events),
-        |h AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM ev GROUP BY v),
-        |cc AS (SELECT v, CAST(SUM(c) OVER (ORDER BY v
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM h),
-        |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS nn FROM h),
-        |med AS (SELECT MIN(CASE WHEN cum >= (nn + 1) // 2 THEN v END) AS p50
+        |${ArmStats.valueHistogramSql("ev")}
+        |med AS (SELECT ${ArmStats.P50Sql}
         |  FROM cc CROSS JOIN tot),
         |cl AS (SELECT (v >= p50) AS pa,
         |    (('0x' || substring(md5('mcn:' || CAST(event_id AS VARCHAR)), 1, 15))::BIGINT
@@ -329,34 +370,8 @@ object Agreement {
     // ln term is round(9) into a DECIMAL sum (order-free), the four
     // outputs close in round(6) per the transcendental rule.
     QueryDef("q_mutual_info", (s, dir) => {
-      // r18 (guide §3.3): same contingency-checkpoint as q_theil_u
-      val cxy = t(s, dir, "documents")
-        .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("c"))
-        .eagerCheckpoint()
-      val cx = cxy.groupBy(col("lang")).agg(sum(col("c")).as("nx"))
-      val cy = cxy.groupBy(col("source")).agg(sum(col("c")).as("ny"))
-      val tot = cxy.agg(sum(col("c")).cast("long").as("nn"))
       def nd(c: Column) = c.cast("double")
-      val mi = cxy.join(broadcast(cx), "lang")
-        .join(broadcast(cy), "source")
-        .crossJoin(broadcast(tot))
-        .select(round(nd(col("c")) / nd(col("nn")) *
-            log(nd(col("c")) * nd(col("nn")) /
-              (nd(col("nx")) * nd(col("ny")))), 9)
-          .cast("decimal(28,9)").as("tmi"))
-        .agg(sum(col("tmi")).as("smi"))
-      val hx = cx.crossJoin(broadcast(tot))
-        .select(round(nd(col("nx")) / nd(col("nn")) *
-            log(nd(col("nx")) / nd(col("nn"))), 9)
-          .cast("decimal(28,9)").as("th"))
-        .agg(sum(col("th")).as("shx"))
-      val hy = cy.crossJoin(broadcast(tot))
-        .select(round(nd(col("ny")) / nd(col("nn")) *
-            log(nd(col("ny")) / nd(col("nn"))), 9)
-          .cast("decimal(28,9)").as("th"))
-        .agg(sum(col("th")).as("shy"))
-      mi.crossJoin(broadcast(hx)).crossJoin(broadcast(hy))
-        .crossJoin(broadcast(tot))
+      langSourceEntropies(s, dir)
         .select(col("nn"),
           round(nd(col("smi")), 6).as("mi"),
           round(-nd(col("shx")), 6).as("h_lang"),
@@ -372,21 +387,7 @@ object Agreement {
     },
 
       // ln terms round(9) into DECIMAL sums; mi/h/nmi close round(6)
-      """WITH cxy AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS c
-        |  FROM documents GROUP BY 1, 2),
-        |cx AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS nx FROM cxy GROUP BY lang),
-        |cy AS (SELECT source, CAST(SUM(c) AS BIGINT) AS ny FROM cxy GROUP BY source),
-        |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS nn FROM cxy),
-        |mi AS (SELECT SUM(CAST(ROUND(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE)
-        |    * ln(CAST(c AS DOUBLE) * CAST(nn AS DOUBLE)
-        |      / (CAST(nx AS DOUBLE) * CAST(ny AS DOUBLE))), 9) AS DECIMAL(28,9))) AS smi
-        |  FROM cxy JOIN cx USING (lang) JOIN cy USING (source) CROSS JOIN tot),
-        |hx AS (SELECT SUM(CAST(ROUND(CAST(nx AS DOUBLE) / CAST(nn AS DOUBLE)
-        |    * ln(CAST(nx AS DOUBLE) / CAST(nn AS DOUBLE)), 9) AS DECIMAL(28,9))) AS shx
-        |  FROM cx CROSS JOIN tot),
-        |hy AS (SELECT SUM(CAST(ROUND(CAST(ny AS DOUBLE) / CAST(nn AS DOUBLE)
-        |    * ln(CAST(ny AS DOUBLE) / CAST(nn AS DOUBLE)), 9) AS DECIMAL(28,9))) AS shy
-        |  FROM cy CROSS JOIN tot)
+      s"""$LangSourceEntropySql
         |SELECT nn, ROUND(CAST(smi AS DOUBLE), 6) AS mi,
         |  ROUND(-CAST(shx AS DOUBLE), 6) AS h_lang,
         |  ROUND(-CAST(shy AS DOUBLE), 6) AS h_source,
@@ -482,56 +483,15 @@ object Agreement {
     // round(9)-term DECIMAL sums as q_mutual_info; each U is one
     // division of those sums, round(6).
     QueryDef("q_theil_u", (s, dir) => {
-      // r18 (guide §3.3): the lang×source contingency feeds cx, cy,
-      // tot and mi — checkpoint it once (PlanAudit: 9 scans → 1)
-      val cxy = t(s, dir, "documents")
-        .groupBy(col("lang"), col("source")).agg(count(lit(1)).as("c"))
-        .eagerCheckpoint()
-      val cx = cxy.groupBy(col("lang")).agg(sum(col("c")).as("nx"))
-      val cy = cxy.groupBy(col("source")).agg(sum(col("c")).as("ny"))
-      val tot = cxy.agg(sum(col("c")).cast("long").as("nn"))
       def nd(c: Column) = c.cast("double")
-      val mi = cxy.join(broadcast(cx), "lang")
-        .join(broadcast(cy), "source")
-        .crossJoin(broadcast(tot))
-        .select(round(nd(col("c")) / nd(col("nn")) *
-            log(nd(col("c")) * nd(col("nn")) /
-              (nd(col("nx")) * nd(col("ny")))), 9)
-          .cast("decimal(28,9)").as("tmi"))
-        .agg(sum(col("tmi")).as("smi"))
-      val hx = cx.crossJoin(broadcast(tot))
-        .select(round(nd(col("nx")) / nd(col("nn")) *
-            log(nd(col("nx")) / nd(col("nn"))), 9)
-          .cast("decimal(28,9)").as("th"))
-        .agg(sum(col("th")).as("shx"))
-      val hy = cy.crossJoin(broadcast(tot))
-        .select(round(nd(col("ny")) / nd(col("nn")) *
-            log(nd(col("ny")) / nd(col("nn"))), 9)
-          .cast("decimal(28,9)").as("th"))
-        .agg(sum(col("th")).as("shy"))
-      mi.crossJoin(broadcast(hx)).crossJoin(broadcast(hy))
-        .crossJoin(broadcast(tot))
+      langSourceEntropies(s, dir)
         .select(col("nn"),
           round(nd(col("smi")) / -nd(col("shx")), 6).as("u_lang"),
           round(nd(col("smi")) / -nd(col("shy")), 6).as("u_source"))
     },
 
       // q_mutual_info's sums, one division each, round(6)
-      """WITH cxy AS (SELECT lang, source, CAST(count(*) AS BIGINT) AS c
-        |  FROM documents GROUP BY 1, 2),
-        |cx AS (SELECT lang, CAST(SUM(c) AS BIGINT) AS nx FROM cxy GROUP BY lang),
-        |cy AS (SELECT source, CAST(SUM(c) AS BIGINT) AS ny FROM cxy GROUP BY source),
-        |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS nn FROM cxy),
-        |mi AS (SELECT SUM(CAST(ROUND(CAST(c AS DOUBLE) / CAST(nn AS DOUBLE)
-        |    * ln(CAST(c AS DOUBLE) * CAST(nn AS DOUBLE)
-        |      / (CAST(nx AS DOUBLE) * CAST(ny AS DOUBLE))), 9) AS DECIMAL(28,9))) AS smi
-        |  FROM cxy JOIN cx USING (lang) JOIN cy USING (source) CROSS JOIN tot),
-        |hx AS (SELECT SUM(CAST(ROUND(CAST(nx AS DOUBLE) / CAST(nn AS DOUBLE)
-        |    * ln(CAST(nx AS DOUBLE) / CAST(nn AS DOUBLE)), 9) AS DECIMAL(28,9))) AS shx
-        |  FROM cx CROSS JOIN tot),
-        |hy AS (SELECT SUM(CAST(ROUND(CAST(ny AS DOUBLE) / CAST(nn AS DOUBLE)
-        |    * ln(CAST(ny AS DOUBLE) / CAST(nn AS DOUBLE)), 9) AS DECIMAL(28,9))) AS shy
-        |  FROM cy CROSS JOIN tot)
+      s"""$LangSourceEntropySql
         |SELECT nn,
         |  ROUND(CAST(smi AS DOUBLE) / -CAST(shx AS DOUBLE), 6) AS u_lang,
         |  ROUND(CAST(smi AS DOUBLE) / -CAST(shy AS DOUBLE), 6) AS u_source
@@ -553,18 +513,8 @@ object Agreement {
         .select(col("event_id"),
           col("value").cast("decimal(18,2)").as("v"),
           (col("event_type") === "purchase").as("y"))
-      // r18 (guide §3.3): h feeds tot and the cutpoint agg — checkpoint
-      val h = ev.groupBy(col("v")).agg(count(lit(1)).as("c"))
-        .eagerCheckpoint()
-      val wc = boundedGlobal("2-dec value histogram, |distinct values| rows")
-        .orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val tot = h.agg(sum(col("c")).cast("long").as("nn"))
-      val cuts = h.withColumn("cum", sum(col("c")).over(wc))
-        .crossJoin(broadcast(tot))
-        .agg(min(when(col("cum") >= expr("(nn + 1) div 2"), col("v")))
-            .as("p50"),
-          min(when(col("cum") * 4 >= col("nn") + 1, col("v"))).as("p25"))
+      val cuts = ArmStats.p50Cut(ev,
+        min(when(col("cum") * 4 >= col("nn") + 1, col("v"))).as("p25"))
       val coin = NativeExpressions.md5Prefix60(
         concat(lit("cq:"), col("event_id"))) % 2 === 0
       val rows = ev.crossJoin(broadcast(cuts))
@@ -594,13 +544,10 @@ object Agreement {
     },
 
       // three paired classifiers; all counts integer, one closing tree
-      """WITH ev AS (SELECT event_id, CAST(value AS DECIMAL(18,2)) AS v,
+      s"""WITH ev AS (SELECT event_id, CAST(value AS DECIMAL(18,2)) AS v,
         |    event_type = 'purchase' AS y FROM events),
-        |h AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM ev GROUP BY v),
-        |cc AS (SELECT v, CAST(SUM(c) OVER (ORDER BY v
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM h),
-        |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS nn FROM h),
-        |cuts AS (SELECT MIN(CASE WHEN cum >= (nn + 1) // 2 THEN v END) AS p50,
+        |${ArmStats.valueHistogramSql("ev")}
+        |cuts AS (SELECT ${ArmStats.P50Sql},
         |    MIN(CASE WHEN cum * 4 >= nn + 1 THEN v END) AS p25
         |  FROM cc CROSS JOIN tot),
         |rows_t AS (SELECT
@@ -646,15 +593,7 @@ object Agreement {
         .select(col("event_id"),
           col("value").cast("decimal(18,2)").as("v"),
           (col("event_type") === "purchase").as("y"))
-      val h = ev0.groupBy(col("v")).agg(count(lit(1)).as("c"))
-      val wc = boundedGlobal("2-dec value histogram, |distinct values| rows")
-        .orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val tot = h.agg(sum(col("c")).cast("long").as("nn"))
-      val med = h.withColumn("cum", sum(col("c")).over(wc))
-        .crossJoin(broadcast(tot))
-        .agg(min(when(col("cum") >= expr("(nn + 1) div 2"), col("v")))
-          .as("p50"))
+      val med = ArmStats.p50Cut(ev0)
       val coin = NativeExpressions.md5Prefix60(
         concat(lit("mcn:"), col("event_id"))) % 2 === 0
       val ev = ev0.crossJoin(broadcast(med))
@@ -691,13 +630,10 @@ object Agreement {
 
       // integer replicate deltas off the shared deterministic Poisson
       // weights; p(A better) is the only division
-      """WITH ev0 AS (SELECT event_id, CAST(value AS DECIMAL(18,2)) AS v,
+      s"""WITH ev0 AS (SELECT event_id, CAST(value AS DECIMAL(18,2)) AS v,
         |    event_type = 'purchase' AS y FROM events),
-        |h AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM ev0 GROUP BY v),
-        |cc AS (SELECT v, CAST(SUM(c) OVER (ORDER BY v
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM h),
-        |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS nn FROM h),
-        |med AS (SELECT MIN(CASE WHEN cum >= (nn + 1) // 2 THEN v END) AS p50
+        |${ArmStats.valueHistogramSql("ev0")}
+        |med AS (SELECT ${ArmStats.P50Sql}
         |  FROM cc CROSS JOIN tot),
         |ev AS (SELECT event_id,
         |    (CASE WHEN (v >= p50) = y THEN 1 ELSE 0 END)

@@ -109,6 +109,40 @@ object ArmStats {
     (cum, tot)
   }
 
+  /** The exact discrete p50 of `ev`'s 2-dp value column `v`: the
+    * smallest v whose cumulative count reaches (nn + 1) div 2, cut off
+    * the value histogram, so the cumulative window runs over a
+    * domain-sized table, never the scan. `moreCuts` aggregate the same
+    * (v, c, cum, nn) rows (q_cochran_q's p25). One row: p50, moreCuts.
+    * The paired-classifier tests (q_mcnemar, q_cochran_q,
+    * q_paired_bootstrap) and q_threshold_metrics cut here. */
+  private[queries] def p50Cut(ev: DataFrame, moreCuts: Column*): DataFrame = {
+    // h feeds tot and the cutpoint agg — checkpoint it once
+    val h = ev.groupBy(col("v")).agg(count(lit(1)).as("c"))
+      .eagerCheckpoint()
+    val wc = boundedGlobal("2-dec value histogram, |distinct values| rows")
+      .orderBy(col("v"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val tot = h.agg(sum(col("c")).cast("long").as("nn"))
+    h.withColumn("cum", sum(col("c")).over(wc))
+      .crossJoin(broadcast(tot))
+      .agg(min(when(col("cum") >= expr("(nn + 1) div 2"), col("v"))).as("p50"),
+        moreCuts: _*)
+  }
+
+  /** p50Cut's oracle CTEs over the relation `ev`: h (value histogram),
+    * cc (cumulative counts) and tot (nn), with a trailing comma; the
+    * cut itself is [[P50Sql]] over `cc CROSS JOIN tot`. */
+  private[queries] def valueHistogramSql(ev: String): String =
+    s"""h AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM $ev GROUP BY v),
+       |cc AS (SELECT v, CAST(SUM(c) OVER (ORDER BY v
+       |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM h),
+       |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS nn FROM h),""".stripMargin
+
+  /** p50Cut's cut as an oracle select item. */
+  private[queries] val P50Sql =
+    "MIN(CASE WHEN cum >= (nn + 1) // 2 THEN v END) AS p50"
+
   /** Oracle-side twin of [[armCdfGrid]] — shared CTE prefix for the
     * two-sample test oracles (pre-stripped; ends after the `j` CTE
     * with no trailing comma). */
@@ -132,6 +166,26 @@ object ArmStats {
       |  FROM cum a JOIN cum b ON a.v = b.v AND a.arm < b.arm
       |  JOIN tot ta ON ta.arm = a.arm JOIN tot tb ON tb.arm = b.arm)
       |""".stripMargin)
+
+  /** Oracle-side twin of [[calibBinGrid]]: ArmCumGridSql, then the
+    * grand total nn, the pooled midrank m2 and integer decile bin per
+    * value (vb), bin sizes and score sums (bins) and per-arm positives
+    * (pos) — pre-stripped, no trailing comma. */
+  private val CalibBinGridSql =
+    ArmCumGridSql.stripSuffix("\n") +
+      """,
+        |nn AS (SELECT CAST(SUM(n) AS BIGINT) AS N FROM tot),
+        |pooled AS (SELECT v, CAST(SUM(c) AS BIGINT) AS cp,
+        |    CAST(SUM(cum) AS BIGINT) AS cumsum FROM cum GROUP BY v),
+        |vb AS (SELECT v, cp, 2 * cumsum - cp + 1 AS m2,
+        |    CAST(LEAST((10 * (2 * cumsum - cp + 1)) // (2 * N), 9) AS INT) AS bin
+        |  FROM pooled CROSS JOIN nn),
+        |bins AS (SELECT bin, CAST(SUM(cp) AS BIGINT) AS nb,
+        |    CAST(SUM(CAST(CAST(cp AS DECIMAL(19,0)) * CAST(m2 AS DECIMAL(19,0))
+        |      AS DECIMAL(28,0))) AS DECIMAL(38,0)) AS s2
+        |  FROM vb GROUP BY bin),
+        |pos AS (SELECT cum.arm, vb.bin, CAST(COALESCE(SUM(cum.c), 0) AS BIGINT) AS pos
+        |  FROM cum JOIN vb ON vb.v = cum.v GROUP BY 1, 2)""".stripMargin
 
   /** Oracle twin of q_bradley_terry: the directed doubled-win table off
     * [[ArmCdfGridSql]], then the TEN MM iterations UNROLLED as CTE
@@ -414,20 +468,8 @@ object ArmStats {
 
       // calibration's grid CTEs verbatim; per-bin REL/RES terms are the
       // identical double trees round(9) into DECIMAL sums
-      (ArmCumGridSql.stripSuffix("\n") +
+      (CalibBinGridSql +
       """,
-        |nn AS (SELECT CAST(SUM(n) AS BIGINT) AS N FROM tot),
-        |pooled AS (SELECT v, CAST(SUM(c) AS BIGINT) AS cp,
-        |    CAST(SUM(cum) AS BIGINT) AS cumsum FROM cum GROUP BY v),
-        |vb AS (SELECT v, cp, 2 * cumsum - cp + 1 AS m2,
-        |    CAST(LEAST((10 * (2 * cumsum - cp + 1)) // (2 * N), 9) AS INT) AS bin
-        |  FROM pooled CROSS JOIN nn),
-        |bins AS (SELECT bin, CAST(SUM(cp) AS BIGINT) AS nb,
-        |    CAST(SUM(CAST(CAST(cp AS DECIMAL(19,0)) * CAST(m2 AS DECIMAL(19,0))
-        |      AS DECIMAL(28,0))) AS DECIMAL(38,0)) AS s2
-        |  FROM vb GROUP BY bin),
-        |pos AS (SELECT cum.arm, vb.bin, CAST(COALESCE(SUM(cum.c), 0) AS BIGINT) AS pos
-        |  FROM cum JOIN vb ON vb.v = cum.v GROUP BY 1, 2),
         |te AS (SELECT pos.arm, tot.n, nn.N AS nt,
         |    CAST(round(CAST(nb AS DOUBLE)
         |      * (CAST(s2 AS DOUBLE) / (2.0 * CAST(nn.N AS DOUBLE) * CAST(nb AS DOUBLE))
@@ -469,20 +511,8 @@ object ArmStats {
             .as("ece_term"))
         .orderBy(col("arm"), col("bin"))
     },
-      (ArmCumGridSql.stripSuffix("\n") +
-      """,
-        |nn AS (SELECT CAST(SUM(n) AS BIGINT) AS N FROM tot),
-        |pooled AS (SELECT v, CAST(SUM(c) AS BIGINT) AS cp,
-        |    CAST(SUM(cum) AS BIGINT) AS cumsum FROM cum GROUP BY v),
-        |vb AS (SELECT v, cp, 2 * cumsum - cp + 1 AS m2,
-        |    CAST(LEAST((10 * (2 * cumsum - cp + 1)) // (2 * N), 9) AS INT) AS bin
-        |  FROM pooled CROSS JOIN nn),
-        |bins AS (SELECT bin, CAST(SUM(cp) AS BIGINT) AS nb,
-        |    CAST(SUM(CAST(CAST(cp AS DECIMAL(19,0)) * CAST(m2 AS DECIMAL(19,0))
-        |      AS DECIMAL(28,0))) AS DECIMAL(38,0)) AS s2
-        |  FROM vb GROUP BY bin),
-        |pos AS (SELECT cum.arm, vb.bin, CAST(COALESCE(SUM(cum.c), 0) AS BIGINT) AS pos
-        |  FROM cum JOIN vb ON vb.v = cum.v GROUP BY 1, 2)
+      (CalibBinGridSql +
+      """
         |SELECT pos.arm, pos.bin, bins.nb AS n_b, pos.pos AS pos_b,
         |  round(CAST(pos.pos AS DOUBLE) / CAST(bins.nb AS DOUBLE), 9) AS acc,
         |  round(CAST(bins.s2 AS DOUBLE)
@@ -1165,17 +1195,7 @@ object ArmStats {
       val ev = t(s, dir, "events")
         .select(col("value").cast("decimal(18,2)").as("v"),
           (col("event_type") === "purchase").as("y"))
-      // r18 (guide §3.3): h feeds tot and the cutpoint agg — checkpoint
-      val h = ev.groupBy(col("v")).agg(count(lit(1)).as("c"))
-        .eagerCheckpoint()
-      val wc = boundedGlobal("2-dec value histogram, |distinct values| rows")
-        .orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val tot = h.agg(sum(col("c")).cast("long").as("nn"))
-      val med = h.withColumn("cum", sum(col("c")).over(wc))
-        .crossJoin(broadcast(tot))
-        .agg(min(when(col("cum") >= expr("(nn + 1) div 2"), col("v")))
-          .as("p50"))
+      val med = p50Cut(ev)
       val cm = ev.crossJoin(broadcast(med))
         .agg(sum(when(col("y") && col("v") >= col("p50"), 1L)
             .otherwise(0L)).as("tp"),
@@ -1199,11 +1219,11 @@ object ArmStats {
             (nd(col("tn")) + nd(col("fp"))) * (nd(col("tn")) + nd(col("fn")))), 9)
           .as("mcc"))
     },
-      """WITH ev AS (SELECT CAST(value AS DECIMAL(18,2)) AS v,
+      s"""WITH ev AS (SELECT CAST(value AS DECIMAL(18,2)) AS v,
         |    event_type = 'purchase' AS y FROM events),
         |h AS (SELECT v, CAST(count(*) AS BIGINT) AS c FROM ev GROUP BY v),
         |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS nn FROM h),
-        |med AS (SELECT MIN(CASE WHEN cum >= (nn + 1) // 2 THEN v END) AS p50
+        |med AS (SELECT $P50Sql
         |  FROM (SELECT v, CAST(SUM(c) OVER (ORDER BY v
         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM h), tot),
         |cm AS (SELECT

@@ -95,8 +95,8 @@ object Curation {
       operators.Packing.binStats(d, "source", "doc_id", "nt", 512)
         .withColumn("tok_sum", col("tok_sum").cast("long"))
     },
-      """WITH t AS (SELECT doc_id, source,
-        |    len(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS nt
+      raw"""WITH t AS (SELECT doc_id, source,
+        |    len(${tokensSql("text")}) AS nt
         |  FROM documents),
         |p AS (SELECT source, nt,
         |    CAST((SUM(nt) OVER (PARTITION BY source ORDER BY doc_id
@@ -144,8 +144,8 @@ object Curation {
 
       // curriculum replay: global exclusive running sum of token counts
       // in (n_chars, doc_id) order, integer stage = cum // budget
-      """WITH d AS (SELECT doc_id, n_chars,
-        |    CAST(len(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS BIGINT) AS n_tok
+      raw"""WITH d AS (SELECT doc_id, n_chars,
+        |    CAST(len(${tokensSql("text")}) AS BIGINT) AS n_tok
         |  FROM documents),
         |c AS (SELECT doc_id, n_tok,
         |    COALESCE(SUM(n_tok) OVER (ORDER BY n_chars, doc_id
@@ -221,8 +221,8 @@ object Curation {
       // Weights exact via DECIMAL sum; the threshold expression is the
       // same IEEE tree as Sampling.temperatureMix, so T is bit-identical
       // and the hex compare replays Spark's filter verbatim.
-      """WITH s AS (SELECT source, count(*) AS n,
-        |    round(sqrt(CAST(CAST(sum(len(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> ''))) AS BIGINT) AS DOUBLE)), 6) AS w
+      raw"""WITH s AS (SELECT source, count(*) AS n,
+        |    round(sqrt(CAST(CAST(sum(len(${tokensSql("text")})) AS BIGINT) AS DOUBLE)), 6) AS w
         |  FROM documents GROUP BY source),
         |tot AS (SELECT CAST(sum(n) AS BIGINT) AS ntot, CAST(sum(CAST(w AS DECIMAL(18,6))) AS DOUBLE) AS sw FROM s),
         |thr AS (SELECT source, CAST(floor((floor(CAST(ntot AS DOUBLE) * 0.3) * w / (sw * CAST(n AS DOUBLE))) * 4294967296.0) AS BIGINT) AS t
@@ -252,13 +252,13 @@ object Curation {
       // q_dedup_cluster construction) with keep-min, the q_contamination
       // 5-gram bench join, the q_quality_score expression tree verbatim
       // for the gates, and the md5-prefix sample. Every count integer.
-      """WITH RECURSIVE corpus AS (
+      raw"""WITH RECURSIVE corpus AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id >= 10),
         |keep1 AS (SELECT min(doc_id) AS doc_id FROM corpus
         |  GROUP BY md5(regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g'))),
         |e1 AS (SELECT c.doc_id, c.text FROM corpus c JOIN keep1 USING (doc_id)),
         |t1 AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+        |    ${tokensSql("text")} AS tk
         |  FROM e1),
         |sh3 AS MATERIALIZED (SELECT doc_id,
         |    list_distinct(list_transform(range(1, len(tk) - 1),
@@ -279,7 +279,7 @@ object Curation {
         |e2 AS (SELECT e1.doc_id, e1.text FROM e1 LEFT JOIN comp ON comp.id = e1.doc_id
         |  WHERE LEAST(COALESCE(comp.mn, e1.doc_id), e1.doc_id) = e1.doc_id),
         |tb AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+        |    ${tokensSql("text")} AS tk
         |  FROM documents WHERE doc_id < 10),
         |bench5 AS (SELECT DISTINCT unnest(list_distinct(list_transform(
         |    range(1, len(tk) - 3),
@@ -287,7 +287,7 @@ object Curation {
         |      || ' ' || tk[i+4]))) AS g
         |  FROM tb WHERE len(tk) >= 5),
         |t2 AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+        |    ${tokensSql("text")} AS tk
         |  FROM e2),
         |cont AS (SELECT DISTINCT s.doc_id FROM (
         |    SELECT doc_id, unnest(list_distinct(list_transform(
@@ -300,7 +300,7 @@ object Curation {
         |  LEFT JOIN cont ON cont.doc_id = e2.doc_id WHERE cont.doc_id IS NULL),
         |q AS (SELECT doc_id, text,
         |    CAST(GREATEST(LENGTH(text), 1) AS DOUBLE) AS n,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS toks
+        |    ${tokensSql("lower(text)")} AS toks
         |  FROM e3),
         |e4 AS (SELECT doc_id, text FROM q
         |  WHERE (LEAST(CAST(LENGTH(text) AS DOUBLE) / 500.0, 1.0) * 0.25
@@ -330,8 +330,8 @@ object Curation {
 
       // DSIR replay: same md5-mod bucket ids, integer counts, shared
       // scalar log-ratio expression, round(6) on the per-doc mean
-      """WITH tk AS (SELECT doc_id, source,
-        |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'),
+      raw"""WITH tk AS (SELECT doc_id, source,
+        |    unnest(list_filter(${wsSplitSql("lower(text)")},
         |      x -> x <> '')) AS token
         |  FROM documents),
         |tb AS (SELECT doc_id, source,
@@ -402,8 +402,8 @@ object Curation {
       // whose cap 2·n exceeds its fair share fixes the uncapped share
       // (scalar-subquery star row ↔ Spark's min-over-struct agg); the
       // LEFT JOIN ON TRUE keeps every source when no rank is flagged
-      """WITH per AS (SELECT source,
-        |    CAST(SUM(len(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'),
+      raw"""WITH per AS (SELECT source,
+        |    CAST(SUM(len(list_filter(${wsSplitSql("text")},
         |      x -> x <> ''))) AS BIGINT) AS n_tokens
         |  FROM documents GROUP BY source),
         |tot AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS tot,
@@ -466,8 +466,8 @@ object Curation {
 
       // distinct 5-grams as md5-60bit keys, fold from the q_folds hash,
       // novelty = eval-fold grams with no train-fold match
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk FROM documents),
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("text")} AS tk FROM documents),
         |sh AS (SELECT doc_id,
         |    list_distinct(list_transform(range(1, len(tk) - 3),
         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' ||

@@ -474,8 +474,8 @@ object Descriptive {
 
       // Kendall tau-b replay: integer pair counts, one shared
       // sqrt/division tree round(9)
-      """WITH d AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS x,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'),
+      raw"""WITH d AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS x,
+        |    CAST(len(list_filter(${wsSplitSql("lower(text)")},
         |      t -> t <> '')) AS BIGINT) AS y
         |  FROM documents WHERE doc_id < 200),
         |p AS (SELECT a.x - b.x AS dx, a.y - b.y AS dy

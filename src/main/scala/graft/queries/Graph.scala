@@ -27,7 +27,7 @@ object Graph {
         .filter(col("src") =!= col("dst"))
       operators.PageRank.ranks(edges, 3)
     },
-      """WITH t AS (SELECT list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |bgp AS (SELECT DISTINCT unnest(list_transform(range(1, len(tk)),
         |    i -> tk[i] || ' ' || tk[i+1])) AS p
@@ -80,7 +80,7 @@ object Graph {
       val seeds = s.range(1).select(lit("spark").as("node"))
       operators.Graph.bfs(edges, seeds, 3)
     },
-      """WITH RECURSIVE t AS (SELECT list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH RECURSIVE t AS (SELECT ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |bgp AS (SELECT DISTINCT unnest(list_transform(range(1, len(tk)),
         |    i -> tk[i] || ' ' || tk[i+1])) AS p
@@ -112,7 +112,7 @@ object Graph {
         .groupBy(col("od").as("degree"))
         .agg(count(lit(1)).as("n_nodes"))
     },
-      """WITH t AS (SELECT list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |bgp AS (SELECT DISTINCT unnest(list_transform(range(1, len(tk)),
         |    i -> tk[i] || ' ' || tk[i+1])) AS p
@@ -146,7 +146,7 @@ object Graph {
         .distinct()
       graft.operators.Graph.kcore(und, k = 28, rounds = 4)
     },
-      """WITH t AS (SELECT list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |bgp AS (SELECT unnest(list_transform(range(1, len(tk)),
         |    i -> tk[i] || ' ' || tk[i+1])) AS p
@@ -201,7 +201,7 @@ object Graph {
         .join(e.select(col("u").as("a"), col("v").as("c")), Seq("a", "c"))
         .agg(count(lit(1)).as("n_triangles"))
     },
-      """WITH tk AS (SELECT list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'),
+      raw"""WITH tk AS (SELECT list_filter(${wsSplitSql("lower(text)")},
         |      x -> x <> '') AS tk
         |  FROM documents WHERE doc_id < 50),
         |p AS (SELECT unnest(list_transform(range(1, len(tk)),

@@ -55,8 +55,8 @@ object NearDup {
       // value-identical to the quadratic `FROM sh a, sh b` scan but
       // Σ df² instead of n²: the sf0.01 replay drops ~30 s → ~2 s and
       // sf0.1 stops timing out. Same ground truth, same doubles.
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk FROM documents),
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("text")} AS tk FROM documents),
         |sh AS MATERIALIZED (SELECT doc_id,
         |    list_distinct(list_transform(range(1, len(tk) - 1),
         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
@@ -87,9 +87,9 @@ object NearDup {
       // pigeonhole chunk join must find exactly these pairs (it is exact,
       // not probabilistic). Docs with zero tokens would be absent here but
       // present (sig 0) in Spark; the corpus has none.
-      """WITH tk AS (
+      raw"""WITH tk AS (
         |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS toks
+        |    ${tokensSql("lower(text)")} AS toks
         |  FROM documents),
         |th AS (
         |  SELECT doc_id, ('0x' || substring(md5(tok), 1, 15))::BIGINT AS h
@@ -112,8 +112,8 @@ object NearDup {
     // #34: exact n-gram Jaccard verify pass over a bounded id range
     QueryDef("q_ngram_jaccard", (s, dir) =>
       Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3, 40),
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("text")} AS tk
         |  FROM documents WHERE doc_id < 40),
         |sh AS (SELECT doc_id,
         |    list_distinct(list_transform(range(1, len(tk) - 1),
@@ -136,8 +136,8 @@ object NearDup {
       // parity holds even under a hash collision, because both engines
       // collide identically; same ≥2 occurrence rule, same window-merge
       // coverage
-      """WITH tk AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH tk AS (SELECT doc_id,
+        |    ${tokensSql("text")} AS tk
         |  FROM documents),
         |g AS (SELECT doc_id, len(tk) AS n_tokens,
         |    CASE WHEN len(tk) >= 10 THEN
@@ -175,23 +175,7 @@ object NearDup {
       // every dot is exact integer arithmetic (order-independent) — the
       // candidate sets must therefore match Spark's bit-for-bit; the
       // exact-cosine verify keeps only pairs ≥ θ.
-      """WITH w AS (
-        |  SELECT t, p, list(CASE WHEN instr('13579bdf', substring(md5(
-        |      CAST(t AS VARCHAR) || ',' || CAST(p AS VARCHAR) || ',' || CAST(d AS VARCHAR)
-        |    ), 1, 1)) > 0 THEN 1.0 ELSE -1.0 END ORDER BY d) AS wv
-        |  FROM range(8) tt(t), range(6) pp(p), range(64) dd(d)
-        |  GROUP BY t, p),
-        |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-        |q AS (SELECT vec_id, list_transform(ve, x -> floor(x * 1000000.0)) AS qv FROM e),
-        |dots AS (
-        |  SELECT q.vec_id, w.t, w.p,
-        |    list_sum(list_transform(range(1, 65), i -> qv[i] * wv[i])) AS dt
-        |  FROM q CROSS JOIN w),
-        |bk AS (
-        |  SELECT vec_id, t,
-        |    CAST(SUM(CASE WHEN dt > 0 THEN CAST(1 AS BIGINT) << p
-        |             ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS bucket
-        |  FROM dots GROUP BY vec_id, t),
+      s"""WITH ${Retrieval.LshBucketsSql}
         |cand AS (
         |  SELECT DISTINCT a.vec_id AS i, b.vec_id AS j
         |  FROM bk a JOIN bk b ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
@@ -236,8 +220,8 @@ object NearDup {
         "doc_id", "text", 5).select(explode(col("sh")).as("g")).distinct()
       trainSh.join(broadcast(benchSh), "g").select(col("id").as("doc_id")).distinct()
     },
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk FROM documents),
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("text")} AS tk FROM documents),
         |sh AS (SELECT doc_id,
         |    list_distinct(list_transform(range(1, len(tk) - 3),
         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4])) AS sh
@@ -301,8 +285,8 @@ object NearDup {
       // source-overlap replay: the q_contamination gram construction per
       // source, md5-60bit gram identity, distinct per source, equi-join
       // on the hash with source_a < source_b
-      """WITH t AS (SELECT source,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT source,
+        |    ${tokensSql("text")} AS tk
         |  FROM documents),
         |sh AS (SELECT source, unnest(list_distinct(list_transform(range(1, len(tk) - 3),
         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' || tk[i+4]))) AS g
@@ -354,11 +338,11 @@ object NearDup {
           uni.cast("long").as("uni"))
         .filter(col("inter") * 2 >= col("uni"))
     },
-      """WITH d AS (SELECT doc_id,
+      raw"""WITH d AS (SELECT doc_id,
         |    regexp_replace(trim(lower(text)), '[ \t\n\x0b\f\r]+', ' ', 'g') AS norm
         |  FROM documents),
         |r AS (SELECT doc_id,
-        |    list_distinct(list_filter(string_split_regex(norm, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS tk,
+        |    list_distinct(${tokensSql("norm")}) AS tk,
         |    row_number() OVER (ORDER BY substring(norm, 1, 16), doc_id) - 1 AS rnk
         |  FROM d),
         |p AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
@@ -385,8 +369,8 @@ object NearDup {
         .agg(count(lit(1)).as("dup_chunks"),
           coalesce(sum(col("n_copies")), lit(0L)).as("copies_total"))
     },
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("text")} AS tk
         |  FROM documents),
         |s AS (SELECT doc_id, tk, len(tk) AS nt FROM t WHERE len(tk) >= 32),
         |hh AS (SELECT unnest(list_transform(range(0, nt // 32),
@@ -431,8 +415,8 @@ object NearDup {
         .groupBy(col("cluster_id")).agg(count(lit(1)).as("cluster_size"))
         .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
     },
-      """WITH RECURSIVE t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk FROM documents),
+      raw"""WITH RECURSIVE t AS (SELECT doc_id,
+        |    ${tokensSql("text")} AS tk FROM documents),
         |sh AS MATERIALIZED (SELECT doc_id,
         |    list_distinct(list_transform(range(1, len(tk) - 1),
         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
@@ -475,8 +459,8 @@ object NearDup {
           sum(col("s0") * col("s2")).cast("long").as("c02"),
           sum(col("s1") * col("s2")).cast("long").as("c12"))
     },
-      """WITH t AS (SELECT source,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT source,
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |g AS (SELECT source, unnest(list_transform(range(1, len(tk) - 1),
         |    i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS gram
@@ -508,10 +492,10 @@ object NearDup {
           count(lit(1)).as("n_members"))
         .filter(col("n_members") >= 2)
     },
-      """WITH RECURSIVE d AS (SELECT doc_id, text, n_chars FROM documents
+      raw"""WITH RECURSIVE d AS (SELECT doc_id, text, n_chars FROM documents
         |  WHERE doc_id < 300),
         |t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk FROM d),
+        |    ${tokensSql("text")} AS tk FROM d),
         |sh AS (SELECT doc_id,
         |    list_distinct(list_transform(range(1, len(tk) - 1),
         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
@@ -561,8 +545,8 @@ object NearDup {
     QueryDef("q_containment", (s, dir) =>
       Dedup.containmentPairs(tp(s, dir, "documents"), "doc_id", "text", 3, 0.5)
         .select(col("i"), col("j"), col("shared"), col("containment")),
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |sh AS (SELECT doc_id,
         |    list_distinct(list_transform(range(1, len(tk) - 1),
@@ -599,8 +583,8 @@ object NearDup {
 
       // Dup matrix replayed: exact-jaccard pairs (LSH == exact at 0.8,
       // the q_dedup_cluster equivalence) labeled and rolled up.
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("text")} AS tk
         |  FROM documents),
         |sh AS MATERIALIZED (SELECT doc_id,
         |    list_distinct(list_transform(range(1, len(tk) - 1),
@@ -628,8 +612,8 @@ object NearDup {
     // oracle, shuffle carries chunk hashes only
     QueryDef("q_cdc_chunks", (s, dir) =>
       Dedup.cdcDupChunks(tp(s, dir, "documents"), "doc_id", "text", 8),
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |tok AS (SELECT doc_id, unnest(tk) AS tok, generate_subscripts(tk, 1) AS pos FROM t),
         |f AS (SELECT doc_id, pos, tok,
@@ -653,8 +637,8 @@ object NearDup {
       Dedup.minHashEstimatePairs(tp(s, dir, "documents"), "doc_id", "text",
         3, 16, 40L)
         .filter(col("est_jaccard") > 0 || col("jaccard") >= 0.5),
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("text")} AS tk
         |  FROM documents WHERE doc_id < 40),
         |sh AS (SELECT doc_id,
         |    list_distinct(list_transform(range(1, len(tk) - 1),
@@ -739,8 +723,8 @@ object NearDup {
     },
 
       // ground truth the prefix filter must equal: all-pairs exact Jaccard
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("text")} AS tk
         |  FROM documents WHERE doc_id < 600),
         |sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
@@ -797,8 +781,8 @@ object NearDup {
     },
 
       // ground truth: all near-dup pairs whose redundant side is incoming
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("text")} AS tk
         |  FROM documents),
         |sh AS MATERIALIZED (SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh

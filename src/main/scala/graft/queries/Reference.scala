@@ -21,8 +21,8 @@ object Reference {
         .select(TextAnalysis.tokens(col("text")).as("toks"))
       TopK.topKeys(docs, "toks", 10)
     },
-      """SELECT token, count(*) AS cnt
-        |FROM (SELECT unnest(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token FROM documents)
+      raw"""SELECT token, count(*) AS cnt
+        |FROM (SELECT unnest(${tokensSql("text")}) AS token FROM documents)
         |GROUP BY token
         |ORDER BY cnt DESC, token ASC
         |LIMIT 10""".stripMargin),
@@ -33,7 +33,7 @@ object Reference {
         .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
       TopK.explodeArray(docs, "toks", "token")
     },
-      """SELECT doc_id, unnest(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+      raw"""SELECT doc_id, unnest(${tokensSql("text")}) AS token
         |FROM documents""".stripMargin),
 
     // #4: full hash-agg count per key (no limit)
@@ -42,8 +42,8 @@ object Reference {
         .select(TextAnalysis.tokens(col("text")).as("toks"))
       TopK.countByKey(TopK.explodeArray(docs, "toks", "token"), "token")
     },
-      """SELECT token, count(*) AS cnt
-        |FROM (SELECT unnest(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token FROM documents)
+      raw"""SELECT token, count(*) AS cnt
+        |FROM (SELECT unnest(${tokensSql("text")}) AS token FROM documents)
         |GROUP BY token""".stripMargin),
 
     // #6: global sort (deterministic: unique tie-break) + limit

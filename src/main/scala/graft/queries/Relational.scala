@@ -380,8 +380,8 @@ object Relational {
           // try_element_at: NULL on an empty token array (ANSI
           // element_at throws), matching DuckDB's tk[1] out-of-bounds
           try_element_at(col("tk"), lit(1)).as("first_tok")),
-      """WITH b AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk FROM documents)
+      raw"""WITH b AS (SELECT doc_id,
+        |  ${tokensSql("text")} AS tk FROM documents)
         |SELECT doc_id, len(list_distinct(tk)) AS n_uniq,
         |  list_contains(tk, 'spark') AS has_spark,
         |  len(tk[1:5]) AS first5, tk[1] AS first_tok

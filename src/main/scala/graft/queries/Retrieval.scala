@@ -3,7 +3,7 @@ package queries
 
 import graft.Materialize._
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,8 +18,6 @@ import Shared._
   * quality and the embedding-based dedup that reuses the IVF cells. */
 object Retrieval {
 
-  /** Brute-force cosine top-10 ranks (q_id, rn, n_id) — shared by
-    * q_ann_bruteforce and as the ground-truth side of q_ann_recall. */
   /** Truncated-RBO depth weights (1−p)·p^(d−1) for p = 0.9, d = 1..10,
     * as EXACT decimal strings — 0.9^k is a terminating decimal, so both
     * engines parse the identical correctly-rounded double; a runtime
@@ -31,6 +29,8 @@ object Retrieval {
     (1 to 10).map { d => val r = (d, w.toString); w *= BigDecimal("0.9"); r }
   }
 
+  /** Brute-force cosine top-10 ranks (q_id, rn, n_id) — shared by
+    * q_ann_bruteforce and as the ground-truth side of q_ann_recall. */
   private val AnnBruteSql =
     """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qe
       |           FROM embeddings WHERE vec_id < 5),
@@ -42,11 +42,13 @@ object Retrieval {
       |      FROM s)
       |SELECT q_id, rn, n_id FROM r WHERE rn <= 10""".stripMargin
 
-  /** LSH-bucketed ANN top-10 ranks, deterministic md5-parity planes
-    * over 1e-6-quantized vectors (same construction as the Spark side)
-    * — shared by q_ann_lsh and the approximate side of q_ann_recall. */
-  private val AnnLshSql =
-    """WITH w AS (
+  /** The LSH bucket CTEs (callers prepend WITH and append their own):
+    * 8 tables × 6 deterministic md5-parity ±1 planes over 1e-6-quantized
+    * vectors (same construction as `AnnLsh`'s exact mode), so every dot
+    * is exact integer arithmetic; bk = (vec_id, t, bucket). Shared by the
+    * ANN replays here and q_dedup_embedding. */
+  private[queries] val LshBucketsSql =
+    """w AS (
       |  SELECT t, p, list(CASE WHEN instr('13579bdf', substring(md5(
       |      CAST(t AS VARCHAR) || ',' || CAST(p AS VARCHAR) || ',' || CAST(d AS VARCHAR)
       |    ), 1, 1)) > 0 THEN 1.0 ELSE -1.0 END ORDER BY d) AS wv
@@ -62,7 +64,12 @@ object Retrieval {
       |  SELECT vec_id, t,
       |    CAST(SUM(CASE WHEN dt > 0 THEN CAST(1 AS BIGINT) << p
       |             ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS bucket
-      |  FROM dots GROUP BY vec_id, t),
+      |  FROM dots GROUP BY vec_id, t),""".stripMargin
+
+  /** LSH-bucketed ANN top-10 ranks off LshBucketsSql — shared by
+    * q_ann_lsh and the approximate side of q_ann_recall. */
+  private val AnnLshSql =
+    s"""WITH $LshBucketsSql
       |cand AS (
       |  SELECT DISTINCT qb.vec_id AS q_id, cb.vec_id AS n_id
       |  FROM bk qb JOIN bk cb ON qb.t = cb.t AND qb.bucket = cb.bucket
@@ -75,6 +82,67 @@ object Retrieval {
       |      FROM s)
       |SELECT q_id, rn, n_id FROM r WHERE rn <= 10""".stripMargin
 
+  /** The stride-init IVF quantizer replayed in DuckDB, as a CTE block
+    * (callers prepend WITH and append their own consuming CTEs): e =
+    * embeddings as double lists; st = the n/16 stride; c = the 16
+    * stride-init centroids (no Lloyd refinement → no float averaging). */
+  private val IvfCentroidsSql =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+      |st AS (SELECT greatest(count(*) // 16, 1) AS stride FROM e),
+      |c AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, ve AS ce
+      |      FROM e, st WHERE vec_id % stride = 0 ORDER BY vec_id LIMIT 16),""".stripMargin
+
+  /** IvfCentroidsSql, then a = each vector's raw argmax-cosine cell. */
+  private val IvfAssignSql =
+    s"""$IvfCentroidsSql
+      |a AS (
+      |  SELECT vec_id, cid FROM (
+      |    SELECT e.vec_id, c.cid,
+      |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
+      |        ORDER BY list_cosine_similarity(ve, ce) DESC, cid) AS rr
+      |    FROM e CROSS JOIN c) WHERE rr = 1),""".stripMargin
+
+  /** IvfAssignSql, then p = the top-4 probed cells of queries 0..4. */
+  private val IvfProbeSql =
+    s"""$IvfAssignSql
+      |p AS (
+      |  SELECT q_id, cid FROM (
+      |    SELECT e.vec_id AS q_id, c.cid,
+      |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
+      |        ORDER BY list_cosine_similarity(ve, ce) DESC, cid) AS rr
+      |    FROM e CROSS JOIN c WHERE e.vec_id < 5) WHERE rr <= 4),""".stripMargin
+
+  /** IvfCentroidsSql, then asn = each vector's cell by the tie-safe
+    * round(9)-argmax (`AnnIvf.assign` with simRound = 9) — the
+    * assignment `cellSourceTable` replays. */
+  private val IvfRoundedAssignSql =
+    s"""$IvfCentroidsSql
+      |sims AS (SELECT e.vec_id AS id, c.cid,
+      |    round(list_cosine_similarity(ve, ce), 9) AS sim FROM e CROSS JOIN c),
+      |rk AS (SELECT id, cid,
+      |    ROW_NUMBER() OVER (PARTITION BY id ORDER BY sim DESC, cid) AS rr FROM sims),
+      |asn AS (SELECT id, cid FROM rk WHERE rr = 1),""".stripMargin
+
+  /** The IVF cells × document sources contingency table (cid, source,
+    * nij) under the oracle-exact stride-init + round(9)-argmax
+    * assignment (IvfRoundedAssignSql on the oracle side). It feeds
+    * several aggregations, so it is checkpointed once — cells × sources
+    * rows — and the corpus-scanning assignment runs once, not once per
+    * branch (measured: AQE declined to reuse the exchange across the
+    * branches; 6 parquet scans executed without this). */
+  private def cellSourceTable(s: SparkSession, dir: String): DataFrame = {
+    val embs = tp(s, dir, "embeddings")
+    val cents = AnnIvf.fit(embs, "vec_id", "embedding", 16, iters = 0)
+    val assigned = AnnIvf
+      .assign(embs, cents, "vec_id", "embedding", simRound = Some(9))
+      .select(col("id"), col("cid"))
+    val gold = t(s, dir, "documents")
+      .select(col("doc_id").as("id"), col("source"))
+    assigned.join(gold, "id")
+      .groupBy(col("cid"), col("source")).agg(count(lit(1)).as("nij"))
+      .eagerCheckpoint()
+  }
+
   /** SemDeDup's guarded assignment replayed in DuckDB, as a CTE block
     * (callers prepend WITH and append their own consuming CTEs): e =
     * embeddings as double lists; a = stride-init argmax-cosine cell per
@@ -85,16 +153,7 @@ object Retrieval {
     * key when the cell exceeds 40 vectors). Shared by q_semdedup and
     * q_semdedup_recall. */
   private val SemDedupGuardedSql =
-    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-      |st AS (SELECT greatest(count(*) // 16, 1) AS stride FROM e),
-      |c AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, ve AS ce
-      |      FROM e, st WHERE vec_id % stride = 0 ORDER BY vec_id LIMIT 16),
-      |a AS (
-      |  SELECT vec_id, cid FROM (
-      |    SELECT e.vec_id, c.cid,
-      |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-      |        ORDER BY list_cosine_similarity(ve, ce) DESC, cid) AS rr
-      |    FROM e CROSS JOIN c) WHERE rr = 1),
+    s"""$IvfAssignSql
       |sz AS (SELECT cid, count(*) AS n FROM a GROUP BY cid),
       |w2 AS (SELECT p, list(CASE WHEN instr('13579bdf', substring(md5(
       |    '99,' || CAST(p AS VARCHAR) || ',' || CAST(d AS VARCHAR)
@@ -116,22 +175,7 @@ object Retrieval {
     * top-4 probed cells, exact rank within the probed union — shared by
     * q_ann_ivf and the approximate side of q_ann_recall_ivf. */
   private val AnnIvfSql =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-      |st AS (SELECT greatest(count(*) // 16, 1) AS stride FROM e),
-      |c AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, ve AS ce
-      |      FROM e, st WHERE vec_id % stride = 0 ORDER BY vec_id LIMIT 16),
-      |a AS (
-      |  SELECT vec_id, cid FROM (
-      |    SELECT e.vec_id, c.cid,
-      |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-      |        ORDER BY list_cosine_similarity(ve, ce) DESC, cid) AS rr
-      |    FROM e CROSS JOIN c) WHERE rr = 1),
-      |p AS (
-      |  SELECT q_id, cid FROM (
-      |    SELECT e.vec_id AS q_id, c.cid,
-      |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-      |        ORDER BY list_cosine_similarity(ve, ce) DESC, cid) AS rr
-      |    FROM e CROSS JOIN c WHERE e.vec_id < 5) WHERE rr <= 4),
+    s"""WITH $IvfProbeSql
       |s AS (
       |  SELECT p.q_id, a.vec_id AS n_id, list_cosine_similarity(eq.ve, en.ve) AS sim
       |  FROM p JOIN a ON a.cid = p.cid
@@ -151,22 +195,7 @@ object Retrieval {
     * One shared stride (n/16) drives both quantizers, as in the
     * engine. */
   private val AnnIvfPqSql =
-    """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-      |st AS (SELECT greatest(count(*) // 16, 1) AS stride FROM e),
-      |c AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, ve AS ce
-      |      FROM e, st WHERE vec_id % stride = 0 ORDER BY vec_id LIMIT 16),
-      |a AS (
-      |  SELECT vec_id, cid FROM (
-      |    SELECT e.vec_id, c.cid,
-      |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-      |        ORDER BY list_cosine_similarity(ve, ce) DESC, cid) AS rr
-      |    FROM e CROSS JOIN c) WHERE rr = 1),
-      |p AS (
-      |  SELECT q_id, cid FROM (
-      |    SELECT e.vec_id AS q_id, c.cid,
-      |      ROW_NUMBER() OVER (PARTITION BY e.vec_id
-      |        ORDER BY list_cosine_similarity(ve, ce) DESC, cid) AS rr
-      |    FROM e CROSS JOIN c WHERE e.vec_id < 5) WHERE rr <= 4),
+    s"""WITH $IvfProbeSql
       |sub AS (SELECT vec_id AS id, unnest(range(0, 8)) AS m,
       |    unnest(list_transform(range(0, 8), i -> ve[i*8+1 : i*8+8])) AS s FROM e),
       |cb AS (SELECT m, CAST(rn - 1 AS BIGINT) AS cid, s AS cc FROM (
@@ -314,12 +343,9 @@ object Retrieval {
       operators.AnnIvf.silhouette(tp(s, dir, "embeddings"),
         "vec_id", "embedding", 16),
 
-      // AnnIvfSql's stride-init centroid CTEs, then top-2 rounded sims
-      // per vector and the (s1−s2)/(1−s2) silhouette fold
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-        |st AS (SELECT greatest(count(*) // 16, 1) AS stride FROM e),
-        |c AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, ve AS ce
-        |      FROM e, st WHERE vec_id % stride = 0 ORDER BY vec_id LIMIT 16),
+      // IvfCentroidsSql, then top-2 rounded sims per vector and the
+      // (s1−s2)/(1−s2) silhouette fold
+      s"""WITH $IvfCentroidsSql
         |sims AS (SELECT e.vec_id AS id, c.cid,
         |    round(list_cosine_similarity(ve, ce), 9) AS sim FROM e CROSS JOIN c),
         |rk AS (SELECT id, cid, sim,
@@ -347,23 +373,7 @@ object Retrieval {
     // oracle-exact stride-init + round(9)-argmax (the q_silhouette /
     // q_kmeans replay rule).
     QueryDef("q_rand_index", (s, dir) => {
-      val embs = tp(s, dir, "embeddings")
-      val cents = operators.AnnIvf.fit(embs, "vec_id", "embedding", 16,
-        iters = 0)
-      val assigned = operators.AnnIvf
-        .assign(embs, cents, "vec_id", "embedding", simRound = Some(9))
-        .select(col("id"), col("cid"))
-      val gold = t(s, dir, "documents")
-        .select(col("doc_id").as("id"), col("source"))
-      // the contingency table feeds THREE aggregations (pair sums per
-      // cell, per class, and overall); checkpoint it once — it is
-      // cells × sources rows — so the corpus-scanning assignment
-      // subtree runs once, not three times (measured: AQE declined to
-      // reuse the exchange across the branches; 6 parquet scans
-      // executed without this)
-      val ct = assigned.join(gold, "id")
-        .groupBy(col("cid"), col("source")).agg(count(lit(1)).as("nij"))
-        .eagerCheckpoint()
+      val ct = cellSourceTable(s, dir)
       val x = ct.agg(sum(col("nij") * (col("nij") - lit(1L))).as("sum2_ij"))
       val aa = ct.groupBy(col("cid")).agg(sum(col("nij")).as("ai"))
         .agg(sum(col("ai") * (col("ai") - lit(1L))).as("sum2_a"),
@@ -380,19 +390,11 @@ object Retrieval {
             .otherwise((ndl(col("sum2_ij")) - exp) / den), 9).as("ari"))
     },
 
-      // q_silhouette's stride-init + rounded-argmax assignment CTEs,
-      // then the pair-counting ARI off the cells × sources contingency
-      // table — doubled pair sums Σx(x−1) stay BIGINT-exact, one
-      // closed-form double tree at the end (identical tree in Spark)
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-        |st AS (SELECT greatest(count(*) // 16, 1) AS stride FROM e),
-        |c AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, ve AS ce
-        |      FROM e, st WHERE vec_id % stride = 0 ORDER BY vec_id LIMIT 16),
-        |sims AS (SELECT e.vec_id AS id, c.cid,
-        |    round(list_cosine_similarity(ve, ce), 9) AS sim FROM e CROSS JOIN c),
-        |rk AS (SELECT id, cid,
-        |    ROW_NUMBER() OVER (PARTITION BY id ORDER BY sim DESC, cid) AS rr FROM sims),
-        |asn AS (SELECT id, cid FROM rk WHERE rr = 1),
+      // IvfRoundedAssignSql, then the pair-counting ARI off the
+      // cells × sources contingency table — doubled pair sums Σx(x−1)
+      // stay BIGINT-exact, one closed-form double tree at the end
+      // (identical tree in Spark)
+      s"""WITH $IvfRoundedAssignSql
         |ct AS (SELECT a.cid, d.source, CAST(count(*) AS BIGINT) AS nij
         |  FROM asn a JOIN documents d ON d.doc_id = a.id GROUP BY 1, 2),
         |x AS (SELECT CAST(SUM(nij * (nij - 1)) AS BIGINT) AS sum2_ij FROM ct),
@@ -497,8 +499,8 @@ object Retrieval {
     QueryDef("q_tfidf", (s, dir) =>
       Tfidf.topTerms(tp(s, dir, "documents").filter(col("doc_id") < 200),
         "doc_id", "text", 3),
-      """WITH terms AS (SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS term
+      raw"""WITH terms AS (SELECT doc_id,
+        |    unnest(${tokensSql("lower(text)")}) AS term
         |  FROM documents WHERE doc_id < 200),
         |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY doc_id, term),
         |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY term)
@@ -757,8 +759,8 @@ object Retrieval {
         .agg(count(lit(1)).as("n_drawn"))
         .orderBy(col("n_drawn").desc, col("token").asc).limit(50)
     },
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |tok AS (SELECT doc_id, j, tk[j + 1] AS token
         |  FROM (SELECT doc_id, tk, unnest(range(len(tk))) AS j FROM t)),
@@ -784,8 +786,8 @@ object Retrieval {
     // scan, one term-keyed hash agg (AQE splits stopword-class terms)
     QueryDef("q_postings", (s, dir) =>
       operators.Search.postings(tp(s, dir, "documents"), "doc_id", "text"),
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |tf AS (SELECT DISTINCT doc_id, term
         |  FROM (SELECT doc_id, unnest(tk) AS term FROM t))
@@ -799,8 +801,8 @@ object Retrieval {
     QueryDef("q_bm25", (s, dir) =>
       operators.Search.bm25(tp(s, dir, "documents"), "doc_id", "text",
         Seq("spark", "join", "window")),
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |dl AS (SELECT doc_id, len(tk) AS dl FROM t),
         |stats AS (SELECT count(*) AS n_docs,
@@ -837,7 +839,7 @@ object Retrieval {
       // construction restricted to shared >= 1 — the equi-join candidate
       // rule), CAST(1 AS DOUBLE) forces IEEE division where DuckDB's bare
       // 1.0 literal is decimal.
-      """WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qe
+      raw"""WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qe
         |           FROM embeddings WHERE vec_id < 5),
         |c AS (SELECT vec_id AS d_id, CAST(embedding AS DOUBLE[]) AS ne FROM embeddings),
         |sem0 AS (SELECT q_id, d_id, list_cosine_similarity(qe, ne) AS sim
@@ -847,7 +849,7 @@ object Retrieval {
         |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, d_id) AS rsem
         |  FROM sem0) WHERE rsem <= 20),
         |t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+        |    ${tokensSql("text")} AS tk
         |  FROM documents),
         |shl AS (SELECT doc_id,
         |    list_distinct(list_transform(range(1, len(tk) - 1),
@@ -960,8 +962,8 @@ object Retrieval {
     QueryDef("q_sparse_cosine", (s, dir) =>
       operators.Search.sparseCosinePairs(tp(s, dir, "documents"),
         "doc_id", "text", 40L),
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents WHERE doc_id < 40),
         |tf AS (SELECT doc_id, term, count(*) AS tf
         |  FROM (SELECT doc_id, unnest(tk) AS term FROM t) GROUP BY doc_id, term),
@@ -1059,17 +1061,7 @@ object Retrieval {
     // the harmonic mean of the two ROUNDED values (engine-identical by
     // construction).
     QueryDef("q_v_measure", (s, dir) => {
-      val embs = tp(s, dir, "embeddings")
-      val cents = operators.AnnIvf.fit(embs, "vec_id", "embedding", 16,
-        iters = 0)
-      val assigned = operators.AnnIvf
-        .assign(embs, cents, "vec_id", "embedding", simRound = Some(9))
-        .select(col("id"), col("cid"))
-      val gold = t(s, dir, "documents")
-        .select(col("doc_id").as("id"), col("source"))
-      val ct = assigned.join(gold, "id")
-        .groupBy(col("cid"), col("source")).agg(count(lit(1)).as("nij"))
-        .eagerCheckpoint() // feeds four aggregations (r14 ARI note)
+      val ct = cellSourceTable(s, dir)
       def nd(c: Column) = c.cast("double")
       val ak = ct.groupBy(col("cid")).agg(sum(col("nij")).as("ak"))
       val bc = ct.groupBy(col("source")).agg(sum(col("nij")).as("bc"))
@@ -1115,15 +1107,7 @@ object Retrieval {
       // same stride-init + round(9)-argmax assignment and contingency
       // table as q_rand_index; ln terms round(9) into DECIMAL sums, h/c
       // close round(6), V is the harmonic mean of the ROUNDED h and c
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-        |st AS (SELECT greatest(count(*) // 16, 1) AS stride FROM e),
-        |c AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cid, ve AS ce
-        |      FROM e, st WHERE vec_id % stride = 0 ORDER BY vec_id LIMIT 16),
-        |sims AS (SELECT e.vec_id AS id, c.cid,
-        |    round(list_cosine_similarity(ve, ce), 9) AS sim FROM e CROSS JOIN c),
-        |rk AS (SELECT id, cid,
-        |    ROW_NUMBER() OVER (PARTITION BY id ORDER BY sim DESC, cid) AS rr FROM sims),
-        |asn AS (SELECT id, cid FROM rk WHERE rr = 1),
+      s"""WITH $IvfRoundedAssignSql
         |ct AS MATERIALIZED (SELECT a.cid, d.source, CAST(count(*) AS BIGINT) AS nij
         |  FROM asn a JOIN documents d ON d.doc_id = a.id GROUP BY 1, 2),
         |ak AS (SELECT cid, CAST(SUM(nij) AS BIGINT) AS ak FROM ct GROUP BY cid),

@@ -31,6 +31,16 @@ private[queries] object Shared {
   val RevenueSql =
     "CAST(ROUND(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(28,4))), 2) AS DOUBLE)"
 
+  /** Oracle-side split of the SQL expression `text` on runs of the
+    * whitespace class `TextAnalysis.tokens` splits on; empties kept. */
+  def wsSplitSql(text: String): String =
+    raw"""string_split_regex($text, '[ \t\n\x0b\f\r]+')"""
+
+  /** The oracle twin of `TextAnalysis.tokens` over the SQL expression
+    * `text` (raw `text` or `lower(text)`): the split, empties dropped. */
+  def tokensSql(text: String): String =
+    s"list_filter(${wsSplitSql(text)}, x -> x <> '')"
+
   /** Oracle-side verified near-dup PAIRS at exact Jaccard ≥ 0.8 over
     * distinct 3-shingles — the inverted-index join replay of
     * `Dedup.minHashNearDups` (per-gram equi-join, |A∪B| = |A|+|B|−|A∩B|;
@@ -39,8 +49,8 @@ private[queries] object Shared {
     * (q_leakage_split's component closure). Pre-stripped, no trailing
     * comma. */
   val NearDupPairsSql =
-    """WITH RECURSIVE t AS (SELECT doc_id,
-      |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk FROM documents),
+    raw"""WITH RECURSIVE t AS (SELECT doc_id,
+      |    ${tokensSql("text")} AS tk FROM documents),
       |sh AS MATERIALIZED (SELECT doc_id,
       |    list_distinct(list_transform(range(1, len(tk) - 1),
       |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh

@@ -57,10 +57,10 @@ object Sketches {
 
       // rebuilds the identical deterministic KMV sketches in SQL — the
       // k-smallest-distinct set is engine-independent by construction
-      """WITH tok AS (SELECT DISTINCT source,
+      raw"""WITH tok AS (SELECT DISTINCT source,
         |    ('0x' || substring(md5(token), 1, 15))::BIGINT AS h
         |  FROM (SELECT source,
-        |      unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+        |      unnest(${tokensSql("lower(text)")}) AS token
         |    FROM documents)),
         |sk AS (SELECT source, (list(h ORDER BY h))[1:256] AS mins
         |  FROM tok GROUP BY source),
@@ -108,10 +108,10 @@ object Sketches {
       top.crossJoin(broadcast(sketch))
         .select(col("token"), col("exact_n"), est.as("est_n"))
     },
-      """WITH tok AS (SELECT token,
+      raw"""WITH tok AS (SELECT token,
         |    ('0x' || substring(md5(token), 1, 15))::BIGINT AS h
         |  FROM (SELECT
-        |      unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+        |      unnest(${tokensSql("lower(text)")}) AS token
         |    FROM documents)),
         |bc AS (SELECT i, (h >> (i * 12)) & 4095 AS b, CAST(count(*) AS BIGINT) AS c
         |  FROM tok CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS i)
@@ -223,8 +223,8 @@ object Sketches {
           col("e.lb").as("cnt")),
 
       // exact regime: per-source vocabulary ≤ the 64-counter budget
-      """WITH tk AS (SELECT source,
-        |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'),
+      raw"""WITH tk AS (SELECT source,
+        |    unnest(list_filter(${wsSplitSql("lower(text)")},
         |      x -> x <> '')) AS item
         |  FROM documents)
         |SELECT source, item, CAST(COUNT(*) AS BIGINT) AS cnt

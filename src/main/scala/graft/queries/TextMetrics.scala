@@ -33,8 +33,8 @@ object TextMetrics {
     QueryDef("q_lang_id", (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred")),
-      """WITH b AS (SELECT doc_id,
-        |  list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS toks
+      raw"""WITH b AS (SELECT doc_id,
+        |  ${tokensSql("lower(text)")} AS toks
         |  FROM documents),
         |sc AS (SELECT doc_id,
         |  len(list_filter(toks, x -> x IN ('the','a','of','and','to'))) AS en,
@@ -54,9 +54,9 @@ object TextMetrics {
     QueryDef("q_quality_score", (s, dir) =>
       t(s, dir, "documents")
         .select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("quality")),
-      """WITH b AS (SELECT doc_id, text AS t,
+      raw"""WITH b AS (SELECT doc_id, text AS t,
         |  CAST(GREATEST(LENGTH(text), 1) AS DOUBLE) AS n,
-        |  list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS toks
+        |  ${tokensSql("lower(text)")} AS toks
         |  FROM documents)
         |SELECT doc_id,
         |  LEAST(CAST(LENGTH(t) AS DOUBLE) / 500.0, 1.0) * 0.25
@@ -103,8 +103,8 @@ object TextMetrics {
       // exact integer counts + the one shared Flesch IEEE tree; tokens
       // via the house whitespace-split twin, syllables as vowel-group
       // runs floored at 1 per word, sentences as non-blank [.!?]+ splits
-      """WITH b AS (SELECT doc_id,
-        |  list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS toks,
+      raw"""WITH b AS (SELECT doc_id,
+        |  ${tokensSql("lower(text)")} AS toks,
         |  list_filter(string_split_regex(text, '[.!?]+'), x -> trim(x) <> '') AS sents
         |  FROM documents)
         |SELECT doc_id,
@@ -131,11 +131,11 @@ object TextMetrics {
           (lit(1.0) - size(array_distinct(col("tk"))).cast("double") /
             greatest(size(col("tk")), lit(1)).cast("double")).as("dup_ratio"))
         .filter(col("dup_ratio") > 0.5),
-      """SELECT doc_id,
+      raw"""SELECT doc_id,
         |  1.0 - CAST(len(list_distinct(tk)) AS DOUBLE) / CAST(greatest(len(tk), 1) AS DOUBLE)
         |    AS dup_ratio
         |FROM (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents)
         |WHERE 1.0 - CAST(len(list_distinct(tk)) AS DOUBLE) / CAST(greatest(len(tk), 1) AS DOUBLE) > 0.5""".stripMargin),
 
@@ -174,9 +174,9 @@ object TextMetrics {
 
       // Simpson replay: integer n_t(n_t-1) numerator and N(N-1)
       // denominator, one shared division round(9)
-      """WITH tc AS (SELECT source, token, CAST(COUNT(*) AS BIGINT) AS c FROM (
+      raw"""WITH tc AS (SELECT source, token, CAST(COUNT(*) AS BIGINT) AS c FROM (
         |    SELECT source,
-        |      unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'),
+        |      unnest(list_filter(${wsSplitSql("lower(text)")},
         |        x -> x <> '')) AS token
         |    FROM documents) GROUP BY source, token),
         |ag AS (SELECT source,
@@ -252,8 +252,8 @@ object TextMetrics {
             lit(0.5) * (lit(1.0) - col("sq").cast("double")), 6).as("js"))
         .orderBy(col("s1"), col("s2"))
     },
-      """WITH tk AS (SELECT source,
-        |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+      raw"""WITH tk AS (SELECT source,
+        |    unnest(${tokensSql("lower(text)")}) AS token
         |  FROM documents),
         |cst AS (SELECT source, token, CAST(count(*) AS BIGINT) AS c
         |  FROM tk GROUP BY 1, 2),
@@ -300,8 +300,8 @@ object TextMetrics {
     // round(6): see q_entropy.
     QueryDef("q_unigram_logprob", (s, dir) =>
       operators.TextStats.unigramSurprisal(tp(s, dir, "documents"), "doc_id", "text"),
-      """WITH tk AS (SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+      raw"""WITH tk AS (SELECT doc_id,
+        |    unnest(${tokensSql("lower(text)")}) AS token
         |  FROM documents),
         |c AS (SELECT token, count(*) AS c FROM tk GROUP BY token),
         |tot AS (SELECT CAST(sum(c) AS DOUBLE) AS tot FROM c)
@@ -313,8 +313,8 @@ object TextMetrics {
     // source-drift / mixture diagnostic; vocab-sized shuffles only
     QueryDef("q_kl_sources", (s, dir) =>
       operators.TextStats.klFromCorpus(tp(s, dir, "documents"), "text", "source"),
-      """WITH tk AS (SELECT source AS stratum,
-        |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+      raw"""WITH tk AS (SELECT source AS stratum,
+        |    unnest(${tokensSql("lower(text)")}) AS token
         |  FROM documents),
         |cst AS (SELECT stratum, token, count(*) AS c FROM tk GROUP BY stratum, token),
         |ns AS (SELECT stratum, CAST(sum(c) AS BIGINT) AS n FROM cst GROUP BY stratum),
@@ -331,8 +331,8 @@ object TextMetrics {
     // exact decimal regression moments; rank window on the vocab table
     QueryDef("q_zipf", (s, dir) =>
       operators.TextStats.zipfFit(tp(s, dir, "documents"), "text", 500),
-      """WITH c AS (SELECT token, count(*) AS cnt FROM (
-        |    SELECT unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+      raw"""WITH c AS (SELECT token, count(*) AS cnt FROM (
+        |    SELECT unnest(${tokensSql("lower(text)")}) AS token
         |    FROM documents) GROUP BY token),
         |rk AS (SELECT token, cnt, row_number() OVER (ORDER BY cnt DESC, token ASC) AS rnk FROM c),
         |t AS (SELECT CAST(rnk AS DOUBLE) AS rd, CAST(cnt AS DOUBLE) AS cd FROM rk WHERE rnk <= 500),
@@ -387,7 +387,7 @@ object TextMetrics {
       // bigram count-of-counts self-join shifted by one; the 20 smallest
       // distinct counts; integer product, one division round(9);
       // N_{r+1} gaps emit 0
-      """WITH t AS (SELECT list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |v AS (SELECT g, CAST(count(*) AS BIGINT) AS r FROM (
         |    SELECT unnest(list_transform(range(1, len(tk)),
@@ -436,8 +436,8 @@ object TextMetrics {
 
       // top-101 head by (count desc, token asc) — ln ratios round(9)
       // into a DECIMAL sum, the α̂ division round(6)
-      """WITH c AS (SELECT token, CAST(count(*) AS BIGINT) AS c FROM (
-        |    SELECT unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+      raw"""WITH c AS (SELECT token, CAST(count(*) AS BIGINT) AS c FROM (
+        |    SELECT unnest(${tokensSql("lower(text)")}) AS token
         |    FROM documents) GROUP BY token),
         |hd AS (SELECT c, row_number() OVER (ORDER BY c DESC, token ASC) AS r
         |  FROM c ORDER BY c DESC, token ASC LIMIT 101),
@@ -456,7 +456,7 @@ object TextMetrics {
     QueryDef("q_bigram_logprob", (s, dir) =>
       operators.TextStats.bigramSurprisal(tp(s, dir, "documents"),
         "doc_id", "text", col("doc_id") < 300),
-      """WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk FROM documents),
+      raw"""WITH t AS (SELECT doc_id, ${tokensSql("lower(text)")} AS tk FROM documents),
         |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS bg FROM t WHERE len(tk) >= 2),
         |cb AS (SELECT bg, count(*) AS cb FROM bg GROUP BY bg),
         |cu AS (SELECT string_split(bg, ' ')[1] AS w1, CAST(sum(cb) AS BIGINT) AS cu FROM cb GROUP BY 1)
@@ -499,7 +499,7 @@ object TextMetrics {
             col("surprisal") <= col("hi")).as("n_kept"))
         .orderBy(col("source"))
     },
-      """WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk FROM documents),
+      raw"""WITH t AS (SELECT doc_id, ${tokensSql("lower(text)")} AS tk FROM documents),
         |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS bg FROM t WHERE len(tk) >= 2),
         |cb AS (SELECT bg, count(*) AS cb FROM bg GROUP BY bg),
         |cu AS (SELECT string_split(bg, ' ')[1] AS w1, CAST(sum(cb) AS BIGINT) AS cu FROM cb GROUP BY 1),
@@ -539,8 +539,8 @@ object TextMetrics {
           round(col("n_novel").cast("double") / col("n_grams").cast("double"), 9)
             .as("novelty"))
     },
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("text")} AS tk
         |  FROM documents),
         |sh AS (SELECT doc_id,
         |    list_distinct(list_transform(range(1, len(tk) - 1),
@@ -790,8 +790,8 @@ object TextMetrics {
           sum(when(col("c") === 1, 1L).otherwise(0L)).cast("long").as("n_hapax"))
         .withColumn("ttr",
           round(col("n_types").cast("double") / col("n_tokens").cast("double"), 9)),
-      """WITH ex AS (SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS tok
+      raw"""WITH ex AS (SELECT doc_id,
+        |    unnest(${tokensSql("lower(text)")}) AS tok
         |  FROM documents),
         |c AS (SELECT doc_id, tok, count(*) AS c FROM ex GROUP BY doc_id, tok),
         |a AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens, count(*) AS n_types,
@@ -846,8 +846,8 @@ object TextMetrics {
             col("sum_len") >= col("n_tokens") * 3 &&
             col("sum_len") <= col("n_tokens") * 10 &&
             col("n_stop") * 50 >= col("n_tokens")).cast("int")),
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |m AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
         |    CAST(coalesce(list_sum(list_transform(tk, x -> len(x))), 0) AS BIGINT) AS sum_len,
@@ -884,8 +884,8 @@ object TextMetrics {
             .as("vmr"))
         .orderBy(col("n_occ").desc, col("token").asc).limit(50)
     },
-      """WITH td AS (SELECT doc_id, unnest(list_filter(
-        |      string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+      raw"""WITH td AS (SELECT doc_id, unnest(list_filter(
+        |      ${wsSplitSql("lower(text)")}, x -> x <> '')) AS token
         |  FROM documents),
         |c AS (SELECT token, doc_id, CAST(count(*) AS BIGINT) AS c
         |  FROM td GROUP BY 1, 2),
@@ -933,8 +933,8 @@ object TextMetrics {
         .orderBy(col("cxy").desc, col("w1").asc, col("w2").asc)
         .limit(50)
     },
-      """WITH t AS (SELECT
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |bg AS (SELECT p.w1 AS w1, p.w2 AS w2
         |  FROM (SELECT unnest(list_transform(range(1, len(tk)),
@@ -988,8 +988,8 @@ object TextMetrics {
           round(col("h").cast("double"), 6).as("h_rate"))
         .orderBy(col("source"))
     },
-      """WITH t AS (SELECT source,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT source,
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |bg AS (SELECT source, p.w1 AS w1, p.w2 AS w2
         |  FROM (SELECT source, unnest(list_transform(range(1, len(tk)),
@@ -1043,8 +1043,8 @@ object TextMetrics {
     },
 
       // vocab-sized integer counts, one division per ratio
-      """WITH t AS (SELECT source,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT source,
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |ug AS (SELECT source, g, CAST(count(*) AS BIGINT) AS c FROM
         |    (SELECT source, unnest(tk) AS g FROM t) GROUP BY 1, 2),
@@ -1093,7 +1093,7 @@ object TextMetrics {
     },
 
       // the Good–Turing bigram COC table closed with the Chao1 tree
-      """WITH t AS (SELECT list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |v AS (SELECT g, CAST(count(*) AS BIGINT) AS r FROM (
         |    SELECT unnest(list_transform(range(1, len(tk)),
@@ -1157,8 +1157,8 @@ object TextMetrics {
 
       // Monroe et al. log-odds with the corpus-count Dirichlet prior;
       // each ln rounds 9, the z tree closes round 9
-      """WITH tk AS (SELECT source,
-        |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS w
+      raw"""WITH tk AS (SELECT source,
+        |    unnest(${tokensSql("lower(text)")}) AS w
         |  FROM documents),
         |prior AS (SELECT w, CAST(count(*) AS BIGINT) AS aw FROM tk GROUP BY w),
         |a0 AS (SELECT CAST(SUM(aw) AS BIGINT) AS a0 FROM prior),

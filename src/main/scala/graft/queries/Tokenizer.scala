@@ -56,7 +56,7 @@ object Tokenizer {
       |m AS MATERIALIZED ($learned),
       |w AS (SELECT source, wd, count(*) AS cnt FROM (
       |    SELECT source,
-      |      unnest(list_filter(string_split_regex(text, '[ \\t\\n\\x0b\\f\\r]+'), t -> t <> '')) AS wd
+      |      unnest(list_filter(${wsSplitSql("text")}, t -> t <> '')) AS wd
       |    FROM documents) GROUP BY source, wd),
       |s0 AS (SELECT source, cnt,
       |    array_to_string(list_concat(
@@ -150,7 +150,7 @@ object Tokenizer {
        |    list_append(regexp_extract_all(replace(w, chr(57344), ''), '(?s).'),
        |      chr(57344)) AS syms
        |  FROM (SELECT t.w FROM documents,
-       |    UNNEST(list_filter(string_split_regex(lower(text), '[ \\t\\n\\x0b\\f\\r]+'),
+       |    UNNEST(list_filter(${wsSplitSql("lower(text)")},
        |      x -> len(x) > 0)) AS t(w))
        |  GROUP BY w),
        |${(1 to n).map(BpeRound).mkString(",\n")}""".stripMargin
@@ -164,8 +164,8 @@ object Tokenizer {
         .select(col("doc_id"),
           TextAnalysis.tokenCount(col("text")).as("n_ws"),
           TextAnalysis.bpeishTokenCount(col("text")).as("n_bpe")),
-      """SELECT doc_id,
-        |  len(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS n_ws,
+      raw"""SELECT doc_id,
+        |  len(${tokensSql("text")}) AS n_ws,
         |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]')) AS n_bpe
         |FROM documents""".stripMargin),
 
@@ -194,7 +194,7 @@ object Tokenizer {
           .wordNGrams(lower(col("text")), 2, distinct = false)).as("bigram"))
         .groupBy(col("bigram")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("bigram").asc).limit(50),
-      """WITH t AS (SELECT list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |bg AS (SELECT unnest(list_transform(range(1, len(tk)),
         |    i -> tk[i] || ' ' || tk[i+1])) AS bigram
@@ -214,8 +214,8 @@ object Tokenizer {
             .orderBy(col("cnt").desc, col("token").asc)).as("rn"))
         .filter(col("rn") === 1).drop("rn")
     },
-      """WITH c AS (SELECT source,
-        |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+      raw"""WITH c AS (SELECT source,
+        |    unnest(${tokensSql("lower(text)")}) AS token
         |  FROM documents),
         |g AS (SELECT source, token, COUNT(*) AS cnt FROM c GROUP BY source, token),
         |r AS (SELECT source, token, cnt,
@@ -261,7 +261,7 @@ object Tokenizer {
         .groupBy(col("pair")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("pair").asc).limit(20)
     },
-      """WITH t AS (SELECT list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT ${tokensSql("lower(text)")} AS tk
         |  FROM documents WHERE doc_id < 200),
         |s AS (SELECT tk, len(tk) AS n FROM t WHERE len(tk) >= 2),
         |p AS (SELECT unnest(flatten(list_transform(range(1, n),
@@ -285,8 +285,8 @@ object Tokenizer {
           sum(col("b")).cast("long").as("n_b"),
           sum(col("a") * col("b")).cast("long").as("n_common"))
     },
-      """WITH d AS (SELECT source,
-        |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+      raw"""WITH d AS (SELECT source,
+        |    unnest(${tokensSql("lower(text)")}) AS token
         |  FROM documents WHERE source IN ('src0', 'src1')),
         |g AS (SELECT token,
         |    MAX(CASE WHEN source = 'src0' THEN 1 ELSE 0 END) AS a,
@@ -309,8 +309,8 @@ object Tokenizer {
 
       // chunking replay: same 64/48 window arithmetic, 1-based inclusive
       // list slice, md5-60bit fingerprint of the space-joined window
-      """WITH d AS (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'),
+      raw"""WITH d AS (SELECT doc_id,
+        |    list_filter(${wsSplitSql("lower(text)")},
         |      x -> x <> '') AS tk
         |  FROM documents),
         |c AS (SELECT doc_id, tk,
@@ -352,9 +352,9 @@ object Tokenizer {
 
       // Heaps replay: per-source (N, V) points, zipf's round(9) decimal
       // moment sums, closed-form slope/intercept round(6)
-      """WITH tc AS (SELECT source, token, CAST(COUNT(*) AS BIGINT) AS c FROM (
+      raw"""WITH tc AS (SELECT source, token, CAST(COUNT(*) AS BIGINT) AS c FROM (
         |    SELECT source,
-        |      unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'),
+        |      unnest(list_filter(${wsSplitSql("lower(text)")},
         |        x -> x <> '')) AS token
         |    FROM documents) GROUP BY source, token),
         |pt AS (SELECT source, SUM(c) AS n, CAST(COUNT(*) AS BIGINT) AS v
@@ -397,8 +397,8 @@ object Tokenizer {
 
       // vocab-coverage replay: row_number by (cnt desc, token) over the
       // vocab table, conditional integer sums, shared divisions round(9)
-      """WITH v AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-        |    SELECT unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'),
+      raw"""WITH v AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
+        |    SELECT unnest(list_filter(${wsSplitSql("lower(text)")},
         |      x -> x <> '')) AS token
         |    FROM documents) GROUP BY token),
         |r AS (SELECT cnt,
@@ -421,8 +421,8 @@ object Tokenizer {
           explode(sequence(lit(0), expr("(nt + 31) div 32") - 1)).as("chunk_idx"))
         .select(col("doc_id"), col("chunk_idx"),
           least(lit(32), col("nt") - col("chunk_idx") * 32).as("chunk_tok")),
-      """WITH t AS (SELECT doc_id,
-        |    len(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS nt
+      raw"""WITH t AS (SELECT doc_id,
+        |    len(${tokensSql("text")}) AS nt
         |  FROM documents),
         |c AS (SELECT doc_id, nt, unnest(range(0, (nt + 31) // 32)) AS chunk_idx
         |  FROM t WHERE nt > 0)
@@ -437,7 +437,7 @@ object Tokenizer {
     QueryDef("q_pmi", (s, dir) =>
       operators.TextStats.pmiPairs(
         tp(s, dir, "documents").filter(col("doc_id") < 200), "text"),
-      """WITH t AS (SELECT list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT ${tokensSql("lower(text)")} AS tk
         |  FROM documents WHERE doc_id < 200),
         |s AS (SELECT tk, len(tk) AS n FROM t),
         |p AS (SELECT unnest(flatten(list_transform(range(1, n),
@@ -466,7 +466,7 @@ object Tokenizer {
     QueryDef("q_vocab_ids", (s, dir) =>
       operators.Vocab.build(tp(s, dir, "documents"), "text", 2L)
         .filter(col("tok_id") <= 100),
-      """WITH tk AS (SELECT unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+      raw"""WITH tk AS (SELECT unnest(${tokensSql("lower(text)")}) AS token
         |  FROM documents),
         |c AS (SELECT token, count(*) AS cnt FROM tk GROUP BY token
         |  HAVING count(*) >= 2)
@@ -488,8 +488,8 @@ object Tokenizer {
         .select(col("doc_id"),
           array_join(col("ids").cast("array<string>"), ",").as("ids_csv"))
     },
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |alltk AS (SELECT unnest(tk) AS token FROM t),
         |c AS (SELECT token, count(*) AS cnt FROM alltk GROUP BY token
@@ -522,8 +522,8 @@ object Tokenizer {
         "doc_id", "text", broadcast(vocab))
       operators.Vocab.decode(enc, "doc_id", "ids", broadcast(vocab))
     },
-      """WITH t AS (SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '') AS tk
+      raw"""WITH t AS (SELECT doc_id,
+        |    ${tokensSql("lower(text)")} AS tk
         |  FROM documents),
         |alltk AS (SELECT unnest(tk) AS token FROM t),
         |c AS (SELECT token, count(*) AS cnt FROM alltk GROUP BY token
@@ -546,8 +546,8 @@ object Tokenizer {
     QueryDef("q_vocab_growth", (s, dir) =>
       operators.Vocab.vocabGrowth(tp(s, dir, "documents"), "doc_id", "text",
         Seq(50L, 100L, 200L, 300L, 400L, 500L)),
-      """WITH tk AS (SELECT doc_id,
-        |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+      raw"""WITH tk AS (SELECT doc_id,
+        |    unnest(${tokensSql("lower(text)")}) AS token
         |  FROM documents),
         |f AS (SELECT token, min(doc_id) AS fd FROM tk GROUP BY token)
         |SELECT CAST(n AS BIGINT) AS n, count(*) AS vocab_size
@@ -562,8 +562,8 @@ object Tokenizer {
         .filter(col("tok_id") <= 20)
       operators.Vocab.oovRate(docs, "text", "source", vocab)
     },
-      """WITH tk AS (SELECT source,
-        |    unnest(list_filter(string_split_regex(lower(text), '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS token
+      raw"""WITH tk AS (SELECT source,
+        |    unnest(${tokensSql("lower(text)")}) AS token
         |  FROM documents),
         |c AS (SELECT token, count(*) AS cnt FROM tk GROUP BY token),
         |v AS (SELECT token FROM (
@@ -669,8 +669,8 @@ object Tokenizer {
             .as("fertility"),
           round(col("n_bytes").cast("double") / col("n_bpe").cast("double"), 9)
             .as("bytes_per_token")),
-      """WITH b AS (SELECT source,
-        |    len(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> '')) AS ws,
+      raw"""WITH b AS (SELECT source,
+        |    len(${tokensSql("text")}) AS ws,
         |    len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0b\f\r]')) AS bpe,
         |    octet_length(encode(text)) AS by
         |  FROM documents)

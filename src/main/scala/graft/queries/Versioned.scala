@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,6 +12,103 @@ import Shared._
 
 /** Versioned tables, change capture, time travel and upsert sinks. */
 object Versioned {
+
+  /** The keyed snapshot the upsert sinks start from: customer balances,
+    * minus custkey % 7 == 0 so those keys' changes exercise INSERT. */
+  private def snapshot(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "customer")
+      .filter(col("c_custkey") % 7 =!= 0)
+      .select(col("c_custkey").as("key"), col("c_acctbal").as("bal"))
+
+  /** The CDC change set every upsert query applies: the orders dated in
+    * [from, until) as a change log — status F deletes (op D), any other
+    * status upserts the order total (op U) — collapsed to each key's
+    * last writer by max_by over (ts = o_orderdate, seq = o_orderkey).
+    * Null keys drop: no MERGE can match them. Returns (key, bal, op). */
+  private def changeSet(s: SparkSession, dir: String, from: String,
+      until: Option[String] = None): DataFrame = {
+    val date = col("o_orderdate")
+    val window = until.foldLeft(date >= lit(from).cast("timestamp"))(
+      (w, u) => w && date < lit(u).cast("timestamp"))
+    t(s, dir, "orders").filter(window)
+      .filter(col("o_custkey").isNotNull)
+      .select(col("o_custkey").as("key"),
+        when(col("o_orderstatus") === "F", "D").otherwise("U").as("op"),
+        col("o_totalprice").as("bal"),
+        date.as("ts"), col("o_orderkey").as("seq"))
+      .groupBy(col("key"))
+      .agg(max_by(struct(col("op"), col("bal")),
+        struct(col("ts"), col("seq"))).as("l"))
+      .select(col("key"), col("l.bal").as("bal"), col("l.op").as("op"))
+  }
+
+  /** changeSet's oracle: CTEs ch<n> (the change log read by `source`,
+    * the SQL from `FROM orders` on) and last<n> (each key's last writer,
+    * (key, op, newbal)), no trailing comma. */
+  private def changeSetSql(n: String, source: String): String =
+    s"""ch$n AS (SELECT o_custkey AS key,
+       |    CASE WHEN o_orderstatus = 'F' THEN 'D' ELSE 'U' END AS op,
+       |    o_totalprice AS newbal, o_orderdate AS ts, o_orderkey AS seq
+       |  $source),
+       |last$n AS (SELECT key, op, newbal FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY key
+       |      ORDER BY ts DESC, seq DESC) AS rn FROM ch$n)
+       |  WHERE rn = 1)""".stripMargin
+
+  /** The time-travel round trip, parameterized by how a version is read
+    * back: init a versioned table from the snapshot, merge two
+    * chronological change sets, then fingerprint versions 1..3 (row
+    * count + exact decimal(28,2) balance sum). */
+  private def timeTravel(read: (SparkSession, String, Long) => DataFrame)
+      : (SparkSession, String) => DataFrame = (s, dir) => {
+    val work = java.nio.file.Files.createTempDirectory("graft_tt")
+    val tbl = work.resolve("tbl").toString
+    // clusterBy stamps per-file key min/max into v1's manifest, so
+    // both merges below rewrite only their stats-pruned candidate
+    // files (the r17 O(delta) commit shape) — content is unchanged
+    sources.VersionedTable.init(s, tbl, snapshot(s, dir), clusterBy = Seq("key"))
+    for ((from, until) <- Seq("1997-01-01" -> "1997-07-01", "1997-07-01" -> "1999-01-01"))
+      sources.VersionedTable.merge(s, tbl, changeSet(s, dir, from, Some(until)),
+        Seq("key"), deleteWhen = col("op") === "D")
+    (1L to 3L).map { v =>
+      read(s, tbl, v)
+        .agg(count(lit(1)).cast("long").as("n_rows"),
+          sum(col("bal").cast("decimal(28,2)")).as("sum_bal"))
+        .select(lit(v).as("version"), col("n_rows"), col("sum_bal"))
+    }.reduce(_.unionAll(_)).orderBy(col("version"))
+  }
+
+  /** timeTravel's oracle: the version chain replayed relationally — v2 =
+    * MERGE(v1, ch1), v3 = MERGE(v2, ch2); per-version fingerprints close
+    * in exact decimal(28,2) sums. */
+  private val TimeTravelSql: String = {
+    def changes(n: String, from: String, until: String) = changeSetSql(n,
+      s"""FROM orders
+         |  WHERE o_orderdate >= TIMESTAMP '$from'
+         |    AND o_orderdate < TIMESTAMP '$until'
+         |    AND o_custkey IS NOT NULL""".stripMargin)
+    s"""WITH v1 AS (SELECT c_custkey AS key, c_acctbal AS bal
+       |  FROM customer WHERE c_custkey % 7 <> 0),
+       |${changes("1", "1997-01-01", "1997-07-01")},
+       |v2 AS (SELECT COALESCE(s.key, l.key) AS key,
+       |    CASE WHEN l.key IS NOT NULL THEN l.newbal ELSE s.bal END AS bal
+       |  FROM v1 s FULL OUTER JOIN last1 l ON s.key = l.key
+       |  WHERE l.op IS NULL OR l.op <> 'D'),
+       |${changes("2", "1997-07-01", "1999-01-01")},
+       |v3 AS (SELECT COALESCE(s.key, l.key) AS key,
+       |    CASE WHEN l.key IS NOT NULL THEN l.newbal ELSE s.bal END AS bal
+       |  FROM v2 s FULL OUTER JOIN last2 l ON s.key = l.key
+       |  WHERE l.op IS NULL OR l.op <> 'D')
+       |SELECT CAST(1 AS BIGINT) AS version, CAST(count(*) AS BIGINT) AS n_rows,
+       |  SUM(CAST(bal AS DECIMAL(28,2))) AS sum_bal FROM v1
+       |UNION ALL
+       |SELECT CAST(2 AS BIGINT), CAST(count(*) AS BIGINT),
+       |  SUM(CAST(bal AS DECIMAL(28,2))) FROM v2
+       |UNION ALL
+       |SELECT CAST(3 AS BIGINT), CAST(count(*) AS BIGINT),
+       |  SUM(CAST(bal AS DECIMAL(28,2))) FROM v3
+       |ORDER BY version""".stripMargin
+  }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -39,9 +136,9 @@ object Versioned {
     },
 
       // full recompute — exactly what the incremental merge must equal
-      """SELECT source, COUNT(*) AS n_docs,
-        |  CAST(SUM(len(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> ''))) AS BIGINT) AS tok_sum,
-        |  ROUND(CAST(SUM(len(list_filter(string_split_regex(text, '[ \t\n\x0b\f\r]+'), x -> x <> ''))) AS DOUBLE)
+      raw"""SELECT source, COUNT(*) AS n_docs,
+        |  CAST(SUM(len(${tokensSql("text")})) AS BIGINT) AS tok_sum,
+        |  ROUND(CAST(SUM(len(${tokensSql("text")})) AS DOUBLE)
         |    / CAST(COUNT(*) AS DOUBLE), 9) AS avg_tokens
         |FROM documents GROUP BY source""".stripMargin),
 
@@ -56,29 +153,13 @@ object Versioned {
     QueryDef("q_scd_apply", (s, dir) => {
       val snap = t(s, dir, "customer")
         .select(col("c_custkey").as("key"), col("c_acctbal").as("snap_bal"))
-      val ch = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1997-06-01").cast("timestamp"))
-        .select(col("o_custkey").as("key"),
-          when(col("o_orderstatus") === "F", "D").otherwise("U").as("op"),
-          col("o_totalprice").as("newbal"),
-          col("o_orderdate").as("ts"), col("o_orderkey").as("seq"))
-      val last = ch.groupBy(col("key"))
-        .agg(max_by(struct(col("op"), col("newbal")),
-          struct(col("ts"), col("seq"))).as("l"))
-        .select(col("key").as("k2"), col("l.op").as("op"),
-          col("l.newbal").as("newbal"))
+      val last = changeSet(s, dir, "1997-06-01")
+        .select(col("key").as("k2"), col("op"), col("bal").as("newbal"))
       snap.join(last, col("key") === col("k2"), "left")
         .filter(col("op").isNull || col("op") =!= "D")
         .select(col("key"), coalesce(col("newbal"), col("snap_bal")).as("bal"))
     },
-      """WITH ch AS (SELECT o_custkey AS key,
-        |    CASE WHEN o_orderstatus = 'F' THEN 'D' ELSE 'U' END AS op,
-        |    o_totalprice AS newbal, o_orderdate AS ts, o_orderkey AS seq
-        |  FROM orders WHERE o_orderdate >= TIMESTAMP '1997-06-01'),
-        |last AS (SELECT key, op, newbal FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY key
-        |      ORDER BY ts DESC, seq DESC) AS rn FROM ch)
-        |  WHERE rn = 1)
+      s"""WITH ${changeSetSql("", "FROM orders WHERE o_orderdate >= TIMESTAMP '1997-06-01'")}
         |SELECT c_custkey AS key, COALESCE(l.newbal, c_acctbal) AS bal
         |FROM customer LEFT JOIN last l ON c_custkey = l.key
         |WHERE l.op IS NULL OR l.op <> 'D'""".stripMargin),
@@ -96,23 +177,9 @@ object Versioned {
     QueryDef("q_merge_upsert", (s, dir) => {
       val work = java.nio.file.Files.createTempDirectory("graft_merge")
       val tgtDir = work.resolve("tbl").toString
-      t(s, dir, "customer")
-        .filter(col("c_custkey") % 7 =!= 0)
-        .select(col("c_custkey").as("key"), col("c_acctbal").as("bal"))
-        .write.parquet(tgtDir)
-      val src = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit("1997-06-01").cast("timestamp"))
-        .filter(col("o_custkey").isNotNull)
-        .select(col("o_custkey").as("key"),
-          when(col("o_orderstatus") === "F", "D").otherwise("U").as("op"),
-          col("o_totalprice").as("bal"),
-          col("o_orderdate").as("ts"), col("o_orderkey").as("seq"))
-        .groupBy(col("key"))
-        .agg(max_by(struct(col("op"), col("bal")),
-          struct(col("ts"), col("seq"))).as("l"))
-        .select(col("key"), col("l.bal").as("bal"), col("l.op").as("op"))
-      sources.Sinks.merge(s, tgtDir, src, Seq("key"),
-        deleteWhen = col("op") === "D")
+      snapshot(s, dir).write.parquet(tgtDir)
+      sources.Sinks.merge(s, tgtDir, changeSet(s, dir, "1997-06-01"),
+        Seq("key"), deleteWhen = col("op") === "D")
       s.read.parquet(tgtDir)
     },
 
@@ -121,17 +188,9 @@ object Versioned {
       // the last-writer change set — matched deletes drop, matched
       // updates take the source bal, source-only non-deletes insert,
       // target-only rows pass through
-      """WITH snap AS (SELECT c_custkey AS key, c_acctbal AS bal
+      s"""WITH snap AS (SELECT c_custkey AS key, c_acctbal AS bal
         |  FROM customer WHERE c_custkey % 7 <> 0),
-        |ch AS (SELECT o_custkey AS key,
-        |    CASE WHEN o_orderstatus = 'F' THEN 'D' ELSE 'U' END AS op,
-        |    o_totalprice AS newbal, o_orderdate AS ts, o_orderkey AS seq
-        |  FROM orders
-        |  WHERE o_orderdate >= TIMESTAMP '1997-06-01' AND o_custkey IS NOT NULL),
-        |last AS (SELECT key, op, newbal FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY key
-        |      ORDER BY ts DESC, seq DESC) AS rn FROM ch)
-        |  WHERE rn = 1)
+        |${changeSetSql("", "FROM orders\n  WHERE o_orderdate >= TIMESTAMP '1997-06-01' AND o_custkey IS NOT NULL")}
         |SELECT COALESCE(s.key, l.key) AS key,
         |  CASE WHEN l.key IS NOT NULL THEN l.newbal ELSE s.bal END AS bal
         |FROM snap s FULL OUTER JOIN last l ON s.key = l.key
@@ -148,86 +207,9 @@ object Versioned {
     // that every historical snapshot equals the state the engine held
     // when that version committed, not just the latest. Fingerprints
     // are decimal(28,2) sums (order-free exact, 2-decimal money).
-    QueryDef("q_time_travel", (s, dir) => {
-      val work = java.nio.file.Files.createTempDirectory("graft_tt")
-      val tbl = work.resolve("tbl").toString
-      val base = t(s, dir, "customer")
-        .filter(col("c_custkey") % 7 =!= 0)
-        .select(col("c_custkey").as("key"), col("c_acctbal").as("bal"))
-      // clusterBy stamps per-file key min/max into v1's manifest, so
-      // both merges below rewrite only their stats-pruned candidate
-      // files (the r17 O(delta) commit shape) — content is unchanged
-      sources.VersionedTable.init(s, tbl, base, clusterBy = Seq("key"))
-      def changes(lo: String, hi: String) = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit(lo).cast("timestamp") &&
-          col("o_orderdate") < lit(hi).cast("timestamp"))
-        .filter(col("o_custkey").isNotNull)
-        .select(col("o_custkey").as("key"),
-          when(col("o_orderstatus") === "F", "D").otherwise("U").as("op"),
-          col("o_totalprice").as("bal"),
-          col("o_orderdate").as("ts"), col("o_orderkey").as("seq"))
-        .groupBy(col("key"))
-        .agg(max_by(struct(col("op"), col("bal")),
-          struct(col("ts"), col("seq"))).as("l"))
-        .select(col("key"), col("l.bal").as("bal"), col("l.op").as("op"))
-      sources.VersionedTable.merge(s, tbl,
-        changes("1997-01-01", "1997-07-01"), Seq("key"),
-        deleteWhen = col("op") === "D")
-      sources.VersionedTable.merge(s, tbl,
-        changes("1997-07-01", "1999-01-01"), Seq("key"),
-        deleteWhen = col("op") === "D")
-      (1L to 3L).map { v =>
-        sources.VersionedTable.read(s, tbl, Some(v))
-          .agg(count(lit(1)).cast("long").as("n_rows"),
-            sum(col("bal").cast("decimal(28,2)")).as("sum_bal"))
-          .select(lit(v).as("version"), col("n_rows"), col("sum_bal"))
-      }.reduce(_.unionAll(_)).orderBy(col("version"))
-    },
-
-      // the version chain replayed relationally: v2 = MERGE(v1, ch1),
-      // v3 = MERGE(v2, ch2); per-version fingerprints close in exact
-      // decimal(28,2) sums
-      """WITH v1 AS (SELECT c_custkey AS key, c_acctbal AS bal
-        |  FROM customer WHERE c_custkey % 7 <> 0),
-        |ch1 AS (SELECT o_custkey AS key,
-        |    CASE WHEN o_orderstatus = 'F' THEN 'D' ELSE 'U' END AS op,
-        |    o_totalprice AS newbal, o_orderdate AS ts, o_orderkey AS seq
-        |  FROM orders
-        |  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |    AND o_orderdate < TIMESTAMP '1997-07-01'
-        |    AND o_custkey IS NOT NULL),
-        |last1 AS (SELECT key, op, newbal FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY key
-        |      ORDER BY ts DESC, seq DESC) AS rn FROM ch1)
-        |  WHERE rn = 1),
-        |v2 AS (SELECT COALESCE(s.key, l.key) AS key,
-        |    CASE WHEN l.key IS NOT NULL THEN l.newbal ELSE s.bal END AS bal
-        |  FROM v1 s FULL OUTER JOIN last1 l ON s.key = l.key
-        |  WHERE l.op IS NULL OR l.op <> 'D'),
-        |ch2 AS (SELECT o_custkey AS key,
-        |    CASE WHEN o_orderstatus = 'F' THEN 'D' ELSE 'U' END AS op,
-        |    o_totalprice AS newbal, o_orderdate AS ts, o_orderkey AS seq
-        |  FROM orders
-        |  WHERE o_orderdate >= TIMESTAMP '1997-07-01'
-        |    AND o_orderdate < TIMESTAMP '1999-01-01'
-        |    AND o_custkey IS NOT NULL),
-        |last2 AS (SELECT key, op, newbal FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY key
-        |      ORDER BY ts DESC, seq DESC) AS rn FROM ch2)
-        |  WHERE rn = 1),
-        |v3 AS (SELECT COALESCE(s.key, l.key) AS key,
-        |    CASE WHEN l.key IS NOT NULL THEN l.newbal ELSE s.bal END AS bal
-        |  FROM v2 s FULL OUTER JOIN last2 l ON s.key = l.key
-        |  WHERE l.op IS NULL OR l.op <> 'D')
-        |SELECT CAST(1 AS BIGINT) AS version, CAST(count(*) AS BIGINT) AS n_rows,
-        |  SUM(CAST(bal AS DECIMAL(28,2))) AS sum_bal FROM v1
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(count(*) AS BIGINT),
-        |  SUM(CAST(bal AS DECIMAL(28,2))) FROM v2
-        |UNION ALL
-        |SELECT CAST(3 AS BIGINT), CAST(count(*) AS BIGINT),
-        |  SUM(CAST(bal AS DECIMAL(28,2))) FROM v3
-        |ORDER BY version""".stripMargin),
+    QueryDef("q_time_travel",
+      timeTravel((s, tbl, v) => sources.VersionedTable.read(s, tbl, Some(v))),
+      TimeTravelSql),
 
     // #294c: q_time_travel's version chain read back through the SQL
     // surface — `spark.read.format("graft-table").option("versionAsOf",
@@ -236,83 +218,10 @@ object Versioned {
     // path resolves every historical manifest to the identical state.
     // The format route is also the stats-pruned read path
     // (GraftManifestFileIndex), exercised here under a real workload.
-    QueryDef("q_time_travel_sql", (s, dir) => {
-      val work = java.nio.file.Files.createTempDirectory("graft_tts")
-      val tbl = work.resolve("tbl").toString
-      val base = t(s, dir, "customer")
-        .filter(col("c_custkey") % 7 =!= 0)
-        .select(col("c_custkey").as("key"), col("c_acctbal").as("bal"))
-      sources.VersionedTable.init(s, tbl, base, clusterBy = Seq("key"))
-      def changes(lo: String, hi: String) = t(s, dir, "orders")
-        .filter(col("o_orderdate") >= lit(lo).cast("timestamp") &&
-          col("o_orderdate") < lit(hi).cast("timestamp"))
-        .filter(col("o_custkey").isNotNull)
-        .select(col("o_custkey").as("key"),
-          when(col("o_orderstatus") === "F", "D").otherwise("U").as("op"),
-          col("o_totalprice").as("bal"),
-          col("o_orderdate").as("ts"), col("o_orderkey").as("seq"))
-        .groupBy(col("key"))
-        .agg(max_by(struct(col("op"), col("bal")),
-          struct(col("ts"), col("seq"))).as("l"))
-        .select(col("key"), col("l.bal").as("bal"), col("l.op").as("op"))
-      sources.VersionedTable.merge(s, tbl,
-        changes("1997-01-01", "1997-07-01"), Seq("key"),
-        deleteWhen = col("op") === "D")
-      sources.VersionedTable.merge(s, tbl,
-        changes("1997-07-01", "1999-01-01"), Seq("key"),
-        deleteWhen = col("op") === "D")
-      (1L to 3L).map { v =>
-        s.read.format("graft-table").option("versionAsOf", v.toString)
-          .load(tbl)
-          .agg(count(lit(1)).cast("long").as("n_rows"),
-            sum(col("bal").cast("decimal(28,2)")).as("sum_bal"))
-          .select(lit(v).as("version"), col("n_rows"), col("sum_bal"))
-      }.reduce(_.unionAll(_)).orderBy(col("version"))
-    },
-
-      // identical relational replay — the format() read path must resolve
-      // each version to the same state the Scala API does
-      """WITH v1 AS (SELECT c_custkey AS key, c_acctbal AS bal
-        |  FROM customer WHERE c_custkey % 7 <> 0),
-        |ch1 AS (SELECT o_custkey AS key,
-        |    CASE WHEN o_orderstatus = 'F' THEN 'D' ELSE 'U' END AS op,
-        |    o_totalprice AS newbal, o_orderdate AS ts, o_orderkey AS seq
-        |  FROM orders
-        |  WHERE o_orderdate >= TIMESTAMP '1997-01-01'
-        |    AND o_orderdate < TIMESTAMP '1997-07-01'
-        |    AND o_custkey IS NOT NULL),
-        |last1 AS (SELECT key, op, newbal FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY key
-        |      ORDER BY ts DESC, seq DESC) AS rn FROM ch1)
-        |  WHERE rn = 1),
-        |v2 AS (SELECT COALESCE(s.key, l.key) AS key,
-        |    CASE WHEN l.key IS NOT NULL THEN l.newbal ELSE s.bal END AS bal
-        |  FROM v1 s FULL OUTER JOIN last1 l ON s.key = l.key
-        |  WHERE l.op IS NULL OR l.op <> 'D'),
-        |ch2 AS (SELECT o_custkey AS key,
-        |    CASE WHEN o_orderstatus = 'F' THEN 'D' ELSE 'U' END AS op,
-        |    o_totalprice AS newbal, o_orderdate AS ts, o_orderkey AS seq
-        |  FROM orders
-        |  WHERE o_orderdate >= TIMESTAMP '1997-07-01'
-        |    AND o_orderdate < TIMESTAMP '1999-01-01'
-        |    AND o_custkey IS NOT NULL),
-        |last2 AS (SELECT key, op, newbal FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY key
-        |      ORDER BY ts DESC, seq DESC) AS rn FROM ch2)
-        |  WHERE rn = 1),
-        |v3 AS (SELECT COALESCE(s.key, l.key) AS key,
-        |    CASE WHEN l.key IS NOT NULL THEN l.newbal ELSE s.bal END AS bal
-        |  FROM v2 s FULL OUTER JOIN last2 l ON s.key = l.key
-        |  WHERE l.op IS NULL OR l.op <> 'D')
-        |SELECT CAST(1 AS BIGINT) AS version, CAST(count(*) AS BIGINT) AS n_rows,
-        |  SUM(CAST(bal AS DECIMAL(28,2))) AS sum_bal FROM v1
-        |UNION ALL
-        |SELECT CAST(2 AS BIGINT), CAST(count(*) AS BIGINT),
-        |  SUM(CAST(bal AS DECIMAL(28,2))) FROM v2
-        |UNION ALL
-        |SELECT CAST(3 AS BIGINT), CAST(count(*) AS BIGINT),
-        |  SUM(CAST(bal AS DECIMAL(28,2))) FROM v3
-        |ORDER BY version""".stripMargin),
+    QueryDef("q_time_travel_sql",
+      timeTravel((s, tbl, v) => s.read.format("graft-table")
+        .option("versionAsOf", v.toString).load(tbl)),
+      TimeTravelSql),
 
     // #179: SCD type-2 dimension build from a change log — orders as
     // per-customer priority updates: drop no-change rows (lag), then

@@ -102,9 +102,10 @@ object Sinks {
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetBytes: Long = 128L << 20): Int = {
     recoverCompact(path)
-    val dir = new java.io.File(path)
-    val bytes = Option(dir.listFiles()).map(_.filter(_.isFile)
-      .filter(_.getName.endsWith(".parquet")).map(_.length()).sum).getOrElse(0L)
+    val (fs, live, _, _) = swapPaths(path)
+    val bytes = fs.listStatus(live)
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      .map(_.getLen).sum
     val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
     swapIn(path) { tmp =>
       spark.read.parquet(path).coalesce(n)
@@ -182,10 +183,6 @@ object Sinks {
     }
   }
 
-  /** The MERGE join shape shared by [[merge]] (in-place swap, one
-    * generation) and [[VersionedTable.merge]] (append-a-snapshot time
-    * travel): full-outer on the keys, source payload wins, deletes
-    * filtered, counts on the frame as `graft_merge` observe metrics. */
   /** The merge source's (row count, distinct key count) in ONE
     * delta-sized job; count_distinct over the keys STRUCT so an
     * (invalid) all-null key still counts as a distinct value, exactly
@@ -199,6 +196,10 @@ object Sinks {
     (guard.getLong(0), guard.getLong(1))
   }
 
+  /** The MERGE join shape shared by [[merge]] (in-place swap, one
+    * generation) and [[VersionedTable.merge]] (append-a-snapshot time
+    * travel): full-outer on the keys, source payload wins, deletes
+    * filtered, counts on the frame as `graft_merge` observe metrics. */
   private[sources] def mergedFrame(tgt: DataFrame, source: DataFrame,
                                    keys: Seq[String],
                                    deleteWhen: org.apache.spark.sql.Column,

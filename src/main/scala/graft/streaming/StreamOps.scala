@@ -129,6 +129,23 @@ object StreamOps {
     })
   }
 
+  /** One micro-batch of change events as both CDC sinks apply it:
+    * `last` = each key's last writer (max_by over `orderCols`), and
+    * `bootstrap` = last's non-delete rows without the order and op
+    * columns, the payload a missing table initializes from. */
+  private def changeSet(batch: DataFrame, keys: Seq[String],
+                        orderCols: Seq[String], opCol: String,
+                        deleteOp: String): (DataFrame, DataFrame) = {
+    val nonKey = batch.columns.filterNot(keys.contains).toSeq
+    val last = batch.groupBy(keys.map(col): _*)
+      .agg(max_by(struct(nonKey.map(col): _*),
+        struct(orderCols.map(col): _*)).as("_l"))
+      .select(keys.map(col) ++ nonKey.map(c => col(s"_l.$c").as(c)): _*)
+    val payload = batch.columns.toSeq
+      .filterNot(orderCols.contains).filterNot(_ == opCol)
+    (last, last.filter(col(opCol) =!= deleteOp).select(payload.map(col): _*))
+  }
+
   /** Streaming CDC apply — the SPEED-LAYER twin of `Sinks.merge` (the
     * batch/speed symmetry every family here keeps): each micro-batch
     * of change events collapses to its last writer per key (max_by
@@ -160,11 +177,8 @@ object StreamOps {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     changes.writeStream.foreachBatch(MicroBatch.persisted { (batch, _) =>
       val spark = batch.sparkSession
-      val nonKey = batch.columns.filterNot(keys.contains).toSeq
-      val last = batch.groupBy(keys.map(col): _*)
-        .agg(max_by(struct(nonKey.map(col): _*),
-          struct(orderCols.map(col): _*)).as("_l"))
-        .select(keys.map(col) ++ nonKey.map(c => col(s"_l.$c").as(c)): _*)
+      val (last, bootstrap) =
+        changeSet(batch, keys, orderCols, opCol, deleteOp)
       // heal a torn swap first: with the live path missing, the table
       // sits in .compact.old and a bootstrap would shadow every row of it
       graft.sources.Sinks.recoverCompact(tablePath)
@@ -176,14 +190,8 @@ object StreamOps {
         if (!last.isEmpty)
           graft.sources.Sinks.merge(spark, tablePath, last, keys,
             deleteWhen = col(opCol) === deleteOp)
-      } else {
-        val payload = batch.columns.toSeq
-          .filterNot(orderCols.contains).filterNot(_ == opCol)
-        if (!last.isEmpty)
-          last.filter(col(opCol) =!= deleteOp)
-            .select(payload.map(col): _*)
-            .write.parquet(tablePath)
-      }
+      } else if (!last.isEmpty)
+        bootstrap.write.parquet(tablePath)
     })
   }
 
@@ -323,11 +331,8 @@ object StreamOps {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     changes.writeStream.foreachBatch(MicroBatch.persisted { (batch, _) =>
       val spark = batch.sparkSession
-      val nonKey = batch.columns.filterNot(keys.contains).toSeq
-      val last = batch.groupBy(keys.map(col): _*)
-        .agg(max_by(struct(nonKey.map(col): _*),
-          struct(orderCols.map(col): _*)).as("_l"))
-        .select(keys.map(col) ++ nonKey.map(c => col(s"_l.$c").as(c)): _*)
+      val (last, bootstrap) =
+        changeSet(batch, keys, orderCols, opCol, deleteOp)
       if (!last.isEmpty) {
         import graft.sources.VersionedTable
         if (VersionedTable.currentVersion(tablePath).isDefined) {
@@ -339,13 +344,8 @@ object StreamOps {
               maxFiles = if (autoCompactFiles > 0) autoCompactFiles
                          else Int.MaxValue,
               keepVersions = if (vacuumKeep > 0) vacuumKeep else Int.MaxValue)
-        } else {
-          val payload = batch.columns.toSeq
-            .filterNot(orderCols.contains).filterNot(_ == opCol)
-          VersionedTable.init(spark, tablePath,
-            last.filter(col(opCol) =!= deleteOp).select(payload.map(col): _*),
-            clusterBy = keys)
-        }
+        } else
+          VersionedTable.init(spark, tablePath, bootstrap, clusterBy = keys)
       }
     })
   }

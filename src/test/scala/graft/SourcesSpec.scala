@@ -125,10 +125,24 @@ class SourcesSpec extends SparkSpec {
     val after = new java.io.File(s"$dir/t").listFiles
       .count(_.getName.endsWith(".parquet"))
     assert(after === n && after < before, s"$before -> $after")
-    val got = spark.read.parquet(s"$dir/t")
-    assert(got.count() === orders.count())
-    assert(got.agg(sum(col("o_orderkey"))).head().getLong(0) ===
-      orders.agg(sum(col("o_orderkey"))).head().getLong(0))
+    def sameRows(path: String): Unit = {
+      val got = spark.read.parquet(path)
+      assert(got.count() === orders.count())
+      assert(got.agg(sum(col("o_orderkey"))).head().getLong(0) ===
+        orders.agg(sum(col("o_orderkey"))).head().getLong(0))
+    }
+    sameRows(s"$dir/t")
+    // the same 24-file layout addressed as a file:// URI, with a target
+    // of a third of its bytes: compact must size the directory through
+    // the path's Hadoop FileSystem and write several files, not one
+    orders.repartition(24).write.parquet(s"$dir/u")
+    def parquetFiles(p: String) = new java.io.File(p).listFiles
+      .filter(_.getName.endsWith(".parquet"))
+    val bytes = parquetFiles(s"$dir/u").map(_.length).sum
+    val uri = "file://" + new java.io.File(s"$dir/u").getAbsolutePath
+    val m = Sinks.compact(spark, uri, targetBytes = bytes / 3)
+    assert(m >= 2 && parquetFiles(s"$dir/u").length === m, s"24 -> $m")
+    sameRows(s"$dir/u")
   }
 
   test("merge sink: update/insert/delete/pass-through with loud metrics and key-unique guard") {

@@ -9,11 +9,7 @@
 #      first use by make_advdata.py), each compared against its DuckDB
 #      oracle by oracle_check.py.
 #
-#   tools/gate.sh             # full: every query on both corpora
-#   tools/gate.sh --changed   # incremental Spark side on both corpora
-#                             # (plan-hash manifests in target/verify_inc
-#                             # and target/verify_inc_adv), full oracle
-#                             # compare
+#   tools/gate.sh             # every query on both corpora
 #
 # Exits non-zero on the first failing stage.
 set -euo pipefail
@@ -22,7 +18,6 @@ set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 cd "$REPO"
 
-MODE="${1:-}"
 SF=/root/testdata/sf0.01
 ADV=advdata
 
@@ -47,27 +42,13 @@ sbt -batch compile test
 # it, and running Verify against the missing dir fails every query.
 [ -d "$ADV" ] || python3 tools/make_advdata.py "$(dirname "$SF")/sf0.001" "$ADV"
 
-if [ "$MODE" = "--changed" ]; then
-  echo "== gate: incremental Verify (sf0.01) =="
-  run_jvm graft.Verify "$SF" target/verify_inc --changed
-  echo "== gate: oracle compare (sf0.01, full matrix) =="
-  python3 tools/oracle_check.py "$SF" target/verify_inc
-  # the hostile corpus too: an operator change must meet it before the
-  # full gate. The plan hash does not see the data, so after editing
-  # make_advdata.py delete advdata/ and target/verify_inc_adv together.
-  echo "== gate: incremental Verify (adversarial corpus) =="
-  run_jvm graft.Verify "$ADV" target/verify_inc_adv --changed
-  echo "== gate: oracle compare (adversarial corpus, full matrix) =="
-  python3 tools/oracle_check.py "$ADV" target/verify_inc_adv
-else
-  echo "== gate: full Verify (sf0.01) =="
-  rm -rf /tmp/gate_sf && run_jvm graft.Verify "$SF" /tmp/gate_sf
-  echo "== gate: oracle compare (sf0.01) =="
-  python3 tools/oracle_check.py "$SF" /tmp/gate_sf
-  echo "== gate: full Verify (adversarial corpus) =="
-  rm -rf /tmp/gate_adv && run_jvm graft.Verify "$ADV" /tmp/gate_adv
-  echo "== gate: oracle compare (adversarial corpus) =="
-  python3 tools/oracle_check.py "$ADV" /tmp/gate_adv
-fi
+echo "== gate: full Verify (sf0.01) =="
+rm -rf /tmp/gate_sf && run_jvm graft.Verify "$SF" /tmp/gate_sf
+echo "== gate: oracle compare (sf0.01) =="
+python3 tools/oracle_check.py "$SF" /tmp/gate_sf
+echo "== gate: full Verify (adversarial corpus) =="
+rm -rf /tmp/gate_adv && run_jvm graft.Verify "$ADV" /tmp/gate_adv
+echo "== gate: oracle compare (adversarial corpus) =="
+python3 tools/oracle_check.py "$ADV" /tmp/gate_adv
 
 echo "== gate: PASS =="
