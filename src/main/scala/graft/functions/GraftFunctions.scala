@@ -9,7 +9,9 @@ import NativeExpressions._
 
 /** SQL-name registration for the native expressions, so `spark.sql`
   * users get them too: graft_cosine, graft_hamming, graft_minhash,
-  * graft_simhash64. Wire at session build time via
+  * graft_simhash64_md5, graft_md5_60, graft_nfc, graft_ngrams,
+  * graft_lsh_buckets, graft_zorder. SURVEY §2.5 lists the same names
+  * (SurveySpec holds the two in step). Wire at session build time via
   * `spark.sql.extensions=graft.GraftExtensions`, or post-hoc with
   * `GraftFunctions.register(spark)`.
   */
@@ -40,9 +42,9 @@ object GraftFunctions {
         case Seq(c, n, s) => MinHashSig(c, litInt(n, "numHashes"), litLong(s, "seed"))
         case _ => throw new IllegalArgumentException("graft_minhash(arr[, numHashes[, seed]])")
       }),
-    (FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (es: Seq[Expression]) => SimHash64(es(0))),
+    (FunctionIdentifier("graft_simhash64_md5"),
+      new ExpressionInfo(classOf[SimHash64Md5].getName, "graft_simhash64_md5"),
+      (es: Seq[Expression]) => SimHash64Md5(es(0))),
     // graft_md5_60(s): the repo's replayable md5-60bit hash identity,
     // fused (== conv(substring(md5(s),1,15),16,10) cast long)
     (FunctionIdentifier("graft_md5_60"),
@@ -59,21 +61,18 @@ object GraftFunctions {
         case Seq(c, n, Literal(d: Boolean, _)) => WordNGrams(c, litInt(n, "n"), d)
         case _ => throw new IllegalArgumentException("graft_ngrams(text, n[, distinct])")
       }),
-    // graft_lsh_buckets(vec, tables, planes, seed): all random-
-    // hyperplane bucket keys in one pass (planes derived from the seed
-    // exactly as AnnLsh.hyperplanes does, dim fixed at 64 for SQL use)
+    // graft_lsh_buckets(vec, tables, planes): all hyperplane bucket
+    // keys in one pass over AnnLsh.md5SignPlanes (dim fixed at 64 for
+    // SQL use; pass the 1e-6-quantized vector to replay bucketedExact)
     (FunctionIdentifier("graft_lsh_buckets"),
       new ExpressionInfo(classOf[HyperplaneBuckets].getName, "graft_lsh_buckets"),
       (es: Seq[Expression]) => es match {
-        case Seq(c, tbl, pl, sd) =>
-          val tables = litInt(tbl, "tables")
-          val planes = litInt(pl, "planes")
-          val seed = litLong(sd, "seed")
-          HyperplaneBuckets(c, (0 until tables).map(t =>
-            graft.operators.AnnLsh.hyperplanes(planes, 64, seed + t)
-              .map(_.toArray).toArray).toArray)
+        case Seq(c, tbl, pl) =>
+          HyperplaneBuckets(c, graft.operators.AnnLsh.md5SignPlanes(
+            litInt(tbl, "tables"), litInt(pl, "planes"), 64)
+            .map(_.map(_.toArray).toArray).toArray)
         case _ => throw new IllegalArgumentException(
-          "graft_lsh_buckets(vec, tables, planes, seed)")
+          "graft_lsh_buckets(vec, tables, planes)")
       }),
     // graft_zorder(x, y[, bits]): Morton-interleave clustering key
     (FunctionIdentifier("graft_zorder"),

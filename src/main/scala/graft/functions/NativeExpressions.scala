@@ -14,9 +14,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * element; these generate a single fused Java loop per row via
   * doGenCode, with an interpreted eval kept for parity/fallback.
   *
-  * Hash parity: all hashing calls the same XxHash64Function the builtin
-  * `xxhash64` uses, so native and HOF pipelines produce IDENTICAL
-  * signatures (asserted in NativeExprSpec).
+  * Hash parity: MinHashSig calls the same XxHash64Function the builtin
+  * `xxhash64` uses; SimHash64Md5 and Winnow hash with Md5Impl.hash60,
+  * the value of the builtin `conv(substring(md5(s), 1, 15), 16, 10)`.
+  * Native and HOF pipelines produce IDENTICAL signatures (asserted in
+  * NativeExprSpec).
   */
 object NativeExpressions {
 
@@ -189,64 +191,12 @@ object NativeExpressions {
       copy(child = c)
   }
 
-  /** One-pass 64-bit SimHash over a token array (same bit votes as
-    * Dedup.simHashDf's 64-iteration HOF pipeline). */
-  case class SimHash64(child: Expression)
-      extends UnaryExpression with ImplicitCastInputTypes {
-    override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
-    override def dataType: DataType = LongType
-    override def prettyName: String = "graft_simhash64"
-
-    override def nullSafeEval(input: Any): Any = {
-      val arr = input.asInstanceOf[ArrayData]
-      val votes = new Array[Int](64)
-      var t = 0
-      val n = arr.numElements()
-      while (t < n) {
-        val h = XxHash64Function.hash(arr.getUTF8String(t), StringType, 42L)
-        var j = 0
-        while (j < 64) {
-          if (((h >>> j) & 1L) != 0L) votes(j) += 1 else votes(j) -= 1
-          j += 1
-        }
-        t += 1
-      }
-      var sig = 0L
-      var j = 0
-      while (j < 64) { if (votes(j) > 0) sig |= (1L << j); j += 1 }
-      sig
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val votes = ctx.freshName("votes")
-        val t = ctx.freshName("t")
-        val j = ctx.freshName("j")
-        val h = ctx.freshName("h")
-        val sig = ctx.freshName("sig")
-        s"""
-        int[] $votes = new int[64];
-        for (int $t = 0; $t < $a.numElements(); $t++) {
-          long $h = $XXF.hash($a.getUTF8String($t), $DTS.StringType, 42L);
-          for (int $j = 0; $j < 64; $j++) {
-            if ((($h >>> $j) & 1L) != 0L) $votes[$j]++; else $votes[$j]--;
-          }
-        }
-        long $sig = 0L;
-        for (int $j = 0; $j < 64; $j++) if ($votes[$j] > 0) $sig |= (1L << $j);
-        ${ev.value} = $sig;
-        """
-      })
-
-    override protected def withNewChildInternal(c: Expression): Expression =
-      copy(child = c)
-  }
-
-  /** One-pass 64-bit SimHash over a token array using the md5-prefix
-    * 60-bit token hash (Md5Impl.hash60) instead of xxhash64 — the hash
-    * an external SQL engine can reproduce (`('0x' || substring(md5(t),
-    * 1, 15))::BIGINT` in DuckDB), making the whole simhash pipeline
-    * oracle-checkable. Bits 60-63 never vote positive and stay 0. */
+  /** One-pass 64-bit SimHash over a token array: each token's
+    * md5-prefix 60-bit hash (Md5Impl.hash60) votes on every bit — the
+    * hash an external SQL engine can reproduce (`('0x' ||
+    * substring(md5(t), 1, 15))::BIGINT` in DuckDB), making the whole
+    * simhash pipeline oracle-checkable. Bits 60-63 never vote positive
+    * and stay 0. */
   case class SimHash64Md5(child: Expression)
       extends UnaryExpression with ImplicitCastInputTypes {
     override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
@@ -447,11 +397,12 @@ object NativeExpressions {
   }
 
   /** One-pass winnowing fingerprints (Schleimer/Wilkerson/Aiken): hash
-    * all character k-grams (the same xxhash64(substr) the HOF pipeline
-    * uses — hash-identical, asserted in NativeExprSpec), slide a window
-    * of w hashes with a monotonic deque (O(n), vs the HOF's O(n·w)
-    * slice-per-window), emit the distinct sorted window minima. */
-  case class Winnow(child: Expression, k: Int, w: Int, md5: Boolean = false)
+    * all character k-grams with Md5Impl.hash60 (the md5-prefix hash the
+    * HOF pipeline and the oracle replay — hash-identical, asserted in
+    * NativeExprSpec), slide a window of w hashes with a monotonic deque
+    * (O(n), vs the HOF's O(n·w) slice-per-window), emit the distinct
+    * sorted window minima. */
+  case class Winnow(child: Expression, k: Int, w: Int)
       extends UnaryExpression with ImplicitCastInputTypes {
     require(k > 0 && w > 0)
     override def inputTypes: Seq[DataType] = Seq(StringType)
@@ -459,7 +410,7 @@ object NativeExpressions {
     override def prettyName: String = "graft_winnow"
 
     override def nullSafeEval(input: Any): Any =
-      WinnowImpl.winnow(input.asInstanceOf[UTF8String], k, w, md5)
+      WinnowImpl.winnow(input.asInstanceOf[UTF8String], k, w)
 
     // WinnowImpl is a TOP-LEVEL object: Scala emits Java static
     // forwarders for those, so Janino resolves this call. (A nested
@@ -468,24 +419,21 @@ object NativeExpressions {
     // interpreted eval.)
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, a => {
-        s"""${ev.value} = graft.functions.WinnowImpl.winnow($a, $k, $w, $md5);"""
+        s"""${ev.value} = graft.functions.WinnowImpl.winnow($a, $k, $w);"""
       })
 
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
   }
 
-  private[functions] def winnowBody(s: UTF8String, k: Int, w: Int,
-                                    md5: Boolean): ArrayData = {
+  private[functions] def winnowBody(s: UTF8String, k: Int, w: Int): ArrayData = {
       val n = s.numChars()
       if (n < k) return new GenericArrayData(Array.empty[Long])
       val m = n - k + 1
       val h = new Array[Long](m)
       var i = 0
       while (i < m) {
-        val gram = s.substringSQL(i + 1, k)
-        h(i) = if (md5) Md5Impl.hash60(gram)
-               else XxHash64Function.hash(gram, StringType, 42L)
+        h(i) = Md5Impl.hash60(s.substringSQL(i + 1, k))
         i += 1
       }
       val mins: Array[Long] =
@@ -619,9 +567,6 @@ object NativeExpressions {
   def minHashSig(shingles: Column, numHashes: Int, seed: Long = 0x5EED): Column =
     GraftBridge.column(MinHashSig(e(shingles), numHashes, seed))
 
-  def simHash64(tokens: Column): Column =
-    GraftBridge.column(SimHash64(e(tokens)))
-
   def simHash64Md5(tokens: Column): Column =
     GraftBridge.column(SimHash64Md5(e(tokens)))
 
@@ -632,8 +577,8 @@ object NativeExpressions {
   def simHashBlockKeys(sig: Column, blocks: Int, keyBlocks: Int): Column =
     GraftBridge.column(SimHashBlockKeys(e(sig), blocks, keyBlocks))
 
-  def winnow(text: Column, k: Int, w: Int, md5: Boolean = false): Column =
-    GraftBridge.column(Winnow(e(text), k, w, md5))
+  def winnow(text: Column, k: Int, w: Int): Column =
+    GraftBridge.column(Winnow(e(text), k, w))
 
   def nfc(text: Column): Column =
     GraftBridge.column(NfcNormalize(e(text)))
@@ -731,8 +676,8 @@ object NfcImpl {
   * static forwarders — generated code calls
   * `graft.functions.WinnowImpl.winnow(...)` as a plain static method. */
 object WinnowImpl {
-  def winnow(s: UTF8String, k: Int, w: Int, md5: Boolean): ArrayData =
-    NativeExpressions.winnowBody(s, k, w, md5)
+  def winnow(s: UTF8String, k: Int, w: Int): ArrayData =
+    NativeExpressions.winnowBody(s, k, w)
 }
 
 /** md5-prefix 60-bit hash: the value of the first 15 hex chars of

@@ -65,25 +65,14 @@ object AnnIvf {
         first(col("vec")).as("vec"))
   }
 
-  /** Lloyd update: elementwise mean per cell via posexplode + regroup
-    * (array_sort on (pos, mean) structs keeps element order exact). */
-  private def recenter(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("cid"), posexplode(col("vec").cast("array<double>"))
-        .as(Seq("pos", "v")))
-      .groupBy(col("cid"), col("pos"))
-      .agg(avg(col("v")).as("m"))
-      .groupBy(col("cid"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        s => s.getField("m")).as("centroid"))
-
-  /** Lloyd update with ORACLE-EXACT arithmetic: per-dim decimal(28,12)
+  /** Lloyd update with ORACLE-EXACT arithmetic: the elementwise mean
+    * per cell via posexplode + regroup (array_sort on (pos, mean)
+    * structs keeps element order exact), from per-dim decimal(28,12)
     * sums (order-independent, exact on any engine) cast to double, then
     * one IEEE double division by the member count. The mean is
     * quantized at 1e-12 — immaterial for clustering — and in exchange
     * the whole Lloyd pass reproduces bit-for-bit in external SQL,
-    * which `recenter`'s double `avg` (accumulation-order-dependent)
-    * cannot. Same scale shape: posexplode + hash agg + regroup. */
+    * which a double `avg` (accumulation-order-dependent) cannot. */
   private def recenterExact(assigned: DataFrame): DataFrame =
     assigned
       .select(col("cid"), posexplode(col("vec").cast("array<double>"))
@@ -108,24 +97,14 @@ object AnnIvf {
     spark.createDataFrame(rows.asJava, centroids.select("cid", "centroid").schema)
   }
 
-  /** Fit nlist centroids with `iters` Lloyd passes. Each pass is one
-    * scan + one shuffle; the tiny centroid result is localized so pass
-    * i+1's plan does not contain pass i's. */
-  def fit(df: DataFrame, idCol: String, vecCol: String, nlist: Int,
-          iters: Int = 1): DataFrame = {
-    var centroids = localized(df.sparkSession, initCentroids(df, idCol, vecCol, nlist))
-    for (_ <- 0 until iters)
-      centroids = localized(df.sparkSession,
-        recenter(assign(df, centroids, idCol, vecCol)))
-    centroids
-  }
-
-  /** `fit` with the oracle-exact Lloyd update: identical distributed
-    * shape (scan + shuffle per pass, localized centroids), results
-    * reproducible in external SQL. The path `q_kmeans` runs. The
+  /** Fit nlist centroids with `iters` oracle-exact Lloyd passes. Each
+    * pass is one scan + one shuffle; the tiny centroid result is
+    * localized so pass i+1's plan does not contain pass i's. Results
+    * are reproducible in external SQL (the path `q_kmeans` runs). The
     * assignment inside each pass uses the tie-safe round(9) argmax
     * (see `assign`) so a near-tie between centroids resolves the same
-    * on any engine replaying the pass. */
+    * on any engine replaying the pass. iters = 0 keeps the stride-init
+    * centroids. */
   def fitExact(df: DataFrame, idCol: String, vecCol: String, nlist: Int,
                iters: Int): DataFrame = {
     var centroids = localized(df.sparkSession, initCentroids(df, idCol, vecCol, nlist))
@@ -197,7 +176,7 @@ object AnnIvf {
     * reproducible in an external SQL oracle. */
   def annTopK(df: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
               k: Int, nlist: Int = 16, nprobe: Int = 4, iters: Int = 1): DataFrame = {
-    val centroids = fit(df, idCol, vecCol, nlist, iters)
+    val centroids = fitExact(df, idCol, vecCol, nlist, iters)
     val assigned = assign(df, centroids, idCol, vecCol)
     search(assigned, centroids, queries, idCol, vecCol, k, nprobe)
   }
@@ -222,7 +201,7 @@ object AnnIvf {
     require(nlist >= 2,
       "silhouette needs >= 2 clusters: with one centroid there is no " +
         "'nearest other cluster' and every score is undefined")
-    silhouetteWith(df, fit(df, idCol, vecCol, nlist, iters = 0),
+    silhouetteWith(df, fitExact(df, idCol, vecCol, nlist, iters = 0),
       idCol, vecCol)
   }
 

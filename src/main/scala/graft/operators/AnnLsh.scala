@@ -16,12 +16,6 @@ import graft.functions.Vectors
   */
 object AnnLsh {
 
-  /** Deterministic seeded Gaussian hyperplanes. */
-  def hyperplanes(numPlanes: Int, dim: Int, seed: Long): Seq[Seq[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(numPlanes)(Seq.fill(dim)(rnd.nextGaussian()))
-  }
-
   /** Rademacher (±1) hyperplanes with each sign drawn from the parity
     * of md5("t,p,d")'s first hex nibble — sign-random-projection with
     * ±1 components is a standard LSH family (Achlioptas-style sparse
@@ -51,9 +45,13 @@ object AnnLsh {
   private[operators] def quantized(vec: Column): Column =
     transform(vec.cast("array<double>"), x => floor(x * lit(1e6)).cast("double"))
 
-  /** `bucketed` over md5-parity ±1 planes and quantized vectors —
+  /** (id, vec, table, bucket) exploded across `tables` independent LSH
+    * tables of md5-parity ±1 planes over quantized vectors —
     * deterministic and oracle-reproducible; `vec` stays the ORIGINAL
-    * embedding for the exact-cosine verify stage downstream. */
+    * embedding for the exact-cosine verify stage downstream. All
+    * tables' bucket keys come from one fused codegen'd pass over the
+    * vector (NativeExpressions.HyperplaneBuckets), not tables × planes
+    * interpreted HOF dots. */
   def bucketedExact(df: DataFrame, idCol: String, vecCol: String,
                     numPlanes: Int, tables: Int, dim: Int): DataFrame = {
     val planes = md5SignPlanes(tables, numPlanes, dim)
@@ -62,40 +60,15 @@ object AnnLsh {
         quantized(col(vecCol)), planes)).as(Seq("table", "bucket")))
   }
 
-  /** (id, table, bucket) exploded across `tables` independent LSH
-    * tables (different seeds). All tables' bucket keys come from one
-    * fused codegen'd pass over the vector (NativeExpressions
-    * .HyperplaneBuckets), not tables × planes interpreted HOF dots. */
-  def bucketed(df: DataFrame, idCol: String, vecCol: String,
-               numPlanes: Int, tables: Int, dim: Int, seed: Long): DataFrame = {
-    val planes = (0 until tables).map(t => hyperplanes(numPlanes, dim, seed + t))
-    df.select(col(idCol).as("id"), col(vecCol).as("vec"),
-      posexplode(graft.functions.NativeExpressions.hyperplaneBuckets(
-        col(vecCol).cast("array<double>"), planes)).as(Seq("table", "bucket")))
-  }
-
   /** Approximate top-k cosine neighbors: candidates = corpus vectors
-    * sharing any table bucket with the query, then exact cosine + rank
-    * on candidates only. */
-  def annTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              vecCol: String, k: Int, numPlanes: Int = 6, tables: Int = 8,
-              dim: Int = 64, seed: Long = 0xA11): DataFrame =
-    annTopKFrom(bucketed(corpus, idCol, vecCol, numPlanes, tables, dim, seed),
-      bucketed(queries, idCol, vecCol, numPlanes, tables, dim, seed), k)
-
-  /** annTopK over the deterministic md5-parity ±1 planes (bucketedExact)
-    * — same candidate/verify/rank plan, oracle-reproducible buckets. */
+    * sharing any table bucket with the query (bucketedExact), then
+    * exact cosine + rank on candidates only. */
   def annTopKExact(corpus: DataFrame, queries: DataFrame, idCol: String,
                    vecCol: String, k: Int, numPlanes: Int = 6,
-                   tables: Int = 8, dim: Int = 64): DataFrame =
-    annTopKFrom(bucketedExact(corpus, idCol, vecCol, numPlanes, tables, dim),
-      bucketedExact(queries, idCol, vecCol, numPlanes, tables, dim), k)
-
-  private def annTopKFrom(corpusB: DataFrame, queriesB: DataFrame,
-                          k: Int): DataFrame = {
-    val cb = corpusB
+                   tables: Int = 8, dim: Int = 64): DataFrame = {
+    val cb = bucketedExact(corpus, idCol, vecCol, numPlanes, tables, dim)
       .select(col("id").as("n_id"), col("vec").as("n_vec"), col("table"), col("bucket"))
-    val qb = queriesB
+    val qb = bucketedExact(queries, idCol, vecCol, numPlanes, tables, dim)
       .select(col("id").as("q_id"), col("vec").as("q_vec"), col("table"), col("bucket"))
     // cosine BEFORE the (q_id, n_id) dedup: sim is functionally
     // dependent on the pair, so dedup carries 3 scalars through the
@@ -113,32 +86,20 @@ object AnnLsh {
   }
 
   /** Embedding near-dup pairs: cosine ≥ theta, candidates from shared
-    * LSH buckets, exact cosine verify. */
-  def cosineNearDups(df: DataFrame, idCol: String, vecCol: String,
-                     theta: Double, numPlanes: Int = 6, tables: Int = 8,
-                     dim: Int = 64, seed: Long = 0xA11): DataFrame =
-    cosineNearDupsGrouped(df, idCol, vecCol, theta,
-      reps => bucketed(reps, "id", "vec", numPlanes, tables, dim, seed))
-
-  /** cosineNearDups over the deterministic md5-parity ±1 planes. */
+    * LSH buckets (bucketedExact), exact cosine verify. */
   def cosineNearDupsExact(df: DataFrame, idCol: String, vecCol: String,
                           theta: Double, numPlanes: Int = 6, tables: Int = 8,
-                          dim: Int = 64): DataFrame =
-    cosineNearDupsGrouped(df, idCol, vecCol, theta,
-      reps => bucketedExact(reps, "id", "vec", numPlanes, tables, dim))
-
-  /** r19: the bucket join and cosine verify run over one
-    * representative per bit-identical vector (ContentGroups); verbatim
-    * duplicates collide in every LSH table and square the per-bucket
-    * self-join. */
-  private def cosineNearDupsGrouped(df: DataFrame, idCol: String,
-                                    vecCol: String, theta: Double,
-                                    bucketer: DataFrame => DataFrame): DataFrame = {
+                          dim: Int = 64): DataFrame = {
+    // r19: the bucket join and cosine verify run over one
+    // representative per bit-identical vector (ContentGroups); verbatim
+    // duplicates collide in every LSH table and square the per-bucket
+    // self-join.
     import graft.Materialize._
     val mem = ContentGroups.members(
         df.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec")
       .eagerCheckpoint() // (id, sid, cnt, vec): reps + expansions
-    val repPairs = cosineNearDupsFrom(bucketer(ContentGroups.reps(mem)), theta)
+    val repPairs = cosineNearDupsFrom(bucketedExact(ContentGroups.reps(mem),
+        "id", "vec", numPlanes, tables, dim), theta)
       .select(col("i").as("sa"), col("j").as("sb"), col("sim"))
     ContentGroups.pairs(mem, "vec", repPairs, directed = false)(
       (a, b) => Seq(Vectors.cosine(a, b).as("sim")), col("sim") >= theta)

@@ -40,8 +40,8 @@ object AnnPq {
         i => slice(col("v"), i * subDim + 1, lit(subDim)))).as(Seq("m", "sub")))
 
   /** (m, cid, centroid): ksub stride-init centroids per subspace —
-    * deterministic by id order, no float training (the Lloyd-refined
-    * variant would plug in AnnIvf.fitExact per subspace). */
+    * deterministic by id order, no float training ([[trainCodebooks]]
+    * Lloyd-refines them with AnnIvf.fitExact's decimal-exact mean). */
   def fitCodebooks(df: DataFrame, idCol: String, vecCol: String,
                    m: Int, subDim: Int, ksub: Int): DataFrame = {
     val n = df.count()
@@ -199,7 +199,7 @@ object AnnPq {
                    vecCol: String, k: Int, nlist: Int = 16,
                    nprobe: Int = 4, m: Int = 8, subDim: Int = 8,
                    ksub: Int = 16): DataFrame = {
-    val centroids = AnnIvf.fit(df, idCol, vecCol, nlist, iters = 0)
+    val centroids = AnnIvf.fitExact(df, idCol, vecCol, nlist, iters = 0)
     val assigned = AnnIvf.assign(df, centroids, idCol, vecCol)
     val cb = fitCodebooks(df, idCol, vecCol, m, subDim, ksub)
     val enc = encode(df, cb, idCol, vecCol, m, subDim)

@@ -536,16 +536,6 @@ object Dedup {
 
   // -------------------------------------------------------------- simhash
 
-  /** (id, sig): 64-bit SimHash over lowercase whitespace tokens via the
-    * one-pass codegen'd native expression (bit-identical to
-    * HofReference.simHashDfHof, asserted in NativeExprSpec). */
-  def simHashDf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("id"),
-        TextAnalysis.tokens(lower(col(textCol))).as("tk"))
-      .select(col("id"),
-        graft.functions.NativeExpressions.simHash64(col("tk")).as("sig"))
-
   /** Hamming distance between two packed 64-bit signatures. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
@@ -555,21 +545,10 @@ object Dedup {
     * maxHamming differing bits can touch at most maxHamming blocks, so
     * every pair within the radius agrees on ≥ keyBlocks whole blocks — an equi-join keyed
     * on each of the C(b, 4) 4-block concatenations finds all of them
-    * (EXACT, not probabilistic) without an n² compare. */
-  def simHashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 7): DataFrame =
-    simHashBlockJoin(simHashDf(
-      // ≥1 whitespace token ⟺ ∃ non-whitespace char: same exclusion,
-      // but the pushed-down scan predicate is one rlike instead of a
-      // full tokenize (which the projection above re-evaluates anyway)
-      docs.filter(col(textCol).rlike("\\S")),
-      idCol, textCol), maxHamming)
-
-  /** simHashNearDups over the md5-prefix token hash (SimHash64Md5) —
-    * identical pigeonhole chunk join, but the signature is reproducible
-    * in an external SQL oracle, so the pair set can be verified against
-    * an all-pairs hamming scan (the chunk join is EXACT, not
-    * probabilistic: any pair within the radius shares a whole chunk). */
+    * (EXACT, not probabilistic) without an n² compare. The signature
+    * is SimHash64Md5 over lowercase whitespace tokens, reproducible in
+    * an external SQL oracle, so the pair set can be verified against an
+    * all-pairs hamming scan. */
   def simHashNearDupsMd5(docs: DataFrame, idCol: String, textCol: String,
                          maxHamming: Int = 7): DataFrame = {
     // zero-token docs are excluded: the empty token array hashes to

@@ -17,26 +17,20 @@ object Fingerprint {
 
   /** (id, fps): winnowed fingerprint set, distinct + sorted, via the
     * one-pass native expression (hash-identical to
-    * HofReference.fingerprintDfHof, asserted in NativeExprSpec). */
-  def fingerprintDf(docs: DataFrame, idCol: String, textCol: String,
-                    k: Int = 8, w: Int = 4): DataFrame =
-    docs.select(col(idCol).as("id"),
-      graft.functions.NativeExpressions.winnow(col(textCol), k, w).as("fps"))
-
-  /** fingerprintDf with the md5-prefix 60-bit k-gram hash instead of
-    * xxhash64: same winnowing (sliding-min, distinct, sorted), but the
-    * gram hash is reproducible in an external SQL oracle as
-    * `('0x' || substring(md5(gram), 1, 15))::BIGINT` — which makes the
-    * whole fingerprint oracle-checkable, not just rows-countable. */
+    * HofReference.fingerprintDfHof, asserted in NativeExprSpec). The
+    * k-gram hash is the md5-prefix 60-bit value an external SQL oracle
+    * reproduces as `('0x' || substring(md5(gram), 1, 15))::BIGINT`, so
+    * the whole fingerprint is oracle-checkable, not just
+    * rows-countable. */
   def fingerprintMd5Df(docs: DataFrame, idCol: String, textCol: String,
                        k: Int = 8, w: Int = 4): DataFrame =
     docs.select(col(idCol).as("id"),
-      graft.functions.NativeExpressions.winnow(col(textCol), k, w, md5 = true).as("fps"))
+      graft.functions.NativeExpressions.winnow(col(textCol), k, w).as("fps"))
 
   /** (id, fp) exploded pairs for overlap joins. */
   def fingerprints(docs: DataFrame, idCol: String, textCol: String,
                    k: Int = 8, w: Int = 4): DataFrame =
-    fingerprintDf(docs, idCol, textCol, k, w)
+    fingerprintMd5Df(docs, idCol, textCol, k, w)
       .select(col("id"), explode(col("fps")).as("fp"))
 
   /** Docs sharing ≥ minShared fingerprints — plagiarism-style overlap.

@@ -55,7 +55,7 @@ object IndexedSearch {
     val spark = embs.sparkSession
     val genId = "gen-" + java.util.UUID.randomUUID().toString.take(12)
     val gen = s"$dir/$genId"
-    val centroids = AnnIvf.fit(embs, idCol, vecCol, nlist, iters)
+    val centroids = AnnIvf.fitExact(embs, idCol, vecCol, nlist, iters)
     AnnIvf.saveIndex(centroids, s"$gen/ivf_centroids")
     val assigned = AnnIvf.assign(embs, centroids, idCol, vecCol)
     assigned.write.mode("overwrite").partitionBy("cid")

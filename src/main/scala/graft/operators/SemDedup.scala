@@ -52,7 +52,7 @@ object SemDedup {
   def assignedGuarded(embs: DataFrame, idCol: String, vecCol: String,
                       nlist: Int = 16, maxCell: Int = 0, subBits: Int = 4,
                       dim: Int = 64): DataFrame = {
-    val centroids = AnnIvf.fit(embs, idCol, vecCol, nlist, iters = 0)
+    val centroids = AnnIvf.fitExact(embs, idCol, vecCol, nlist, iters = 0)
     // r18 (guide §3.3): every consumer pairs this frame with itself
     // (the cell-size rollup, nearDupPairs' self-join, kept's
     // anti-join, the recall query's double probe join) — without
@@ -112,7 +112,7 @@ object SemDedup {
     val repsBase = ContentGroups.reps(mem)
     // centroids come from the FULL corpus (stride-init is a function of
     // every vec_id), only the assignment scan shrinks to the reps
-    val centroids = AnnIvf.fit(embs, idCol, vecCol, nlist, iters = 0)
+    val centroids = AnnIvf.fitExact(embs, idCol, vecCol, nlist, iters = 0)
     val aR = AnnIvf.assign(repsBase.select(col("id"), col("vec")),
         centroids, "id", "vec")
       .join(repsBase.select(col("id"), col("cnt")), "id")

@@ -585,10 +585,6 @@ object Agreement {
     // B-way explode over one scan; everything after is B-sized.
     QueryDef("q_paired_bootstrap", (s, dir) => {
       val B = 200
-      val thr = Seq(424136118829305329L, 848272237658610659L,
-        1060340297073263324L, 1131029650211480879L, 1148701988496035267L,
-        1152236456152946145L, 1152825534095764625L, 1152909688087595836L,
-        1152920207336574738L)
       val ev0 = tp(s, dir, "events")
         .select(col("event_id"),
           col("value").cast("decimal(18,2)").as("v"),
@@ -602,14 +598,10 @@ object Agreement {
             when(coin === col("y"), 1L).otherwise(0L)).as("d"))
       // staged hash column — same 9×-duplicated-md5 fix as
       // q_bootstrap_ci in ArmStats (guide §7.2); values identical
-      val hh = col("_h")
-      val w = thr.tail.zipWithIndex.foldLeft(when(hh < lit(thr.head), 0)) {
-        case (acc, (tk, i)) => acc.when(hh < lit(tk), i + 1)
-      }.otherwise(9)
       val rep = ev.withColumn("r", explode(sequence(lit(0), lit(B - 1))))
         .withColumn("_h", NativeExpressions.md5Prefix60(concat(lit("boot:"),
           col("event_id"), lit(":"), col("r"))))
-        .withColumn("w", w).drop("_h")
+        .withColumn("w", ArmStats.poissonWeight(col("_h"))).drop("_h")
         .groupBy(col("r"))
         .agg(sum(col("w") * col("d")).cast("long").as("delta"))
       val wrk = boundedGlobal("B=200 replicate deltas")
@@ -644,17 +636,7 @@ object Agreement {
         |    ('0x' || substring(md5('boot:' || CAST(event_id AS VARCHAR)
         |      || ':' || CAST(r AS VARCHAR)), 1, 15))::BIGINT AS h
         |  FROM ev CROSS JOIN (SELECT unnest(range(200)) AS r)),
-        |ww AS (SELECT d, r, CASE
-        |    WHEN h < 424136118829305329 THEN 0
-        |    WHEN h < 848272237658610659 THEN 1
-        |    WHEN h < 1060340297073263324 THEN 2
-        |    WHEN h < 1131029650211480879 THEN 3
-        |    WHEN h < 1148701988496035267 THEN 4
-        |    WHEN h < 1152236456152946145 THEN 5
-        |    WHEN h < 1152825534095764625 THEN 6
-        |    WHEN h < 1152909688087595836 THEN 7
-        |    WHEN h < 1152920207336574738 THEN 8
-        |    ELSE 9 END AS w FROM hw),
+        |ww AS (SELECT d, r, ${ArmStats.PoissonWeightSql} FROM hw),
         |rep AS (SELECT r, CAST(SUM(w * d) AS BIGINT) AS delta
         |  FROM ww GROUP BY r),
         |rk AS (SELECT delta,

@@ -143,6 +143,31 @@ object ArmStats {
   private[queries] val P50Sql =
     "MIN(CASE WHEN cum >= (nn + 1) // 2 THEN v END) AS p50"
 
+  /** floor(F(k)·2^60) for the Poisson(1) CDF F, k = 0..8: the integer
+    * inverse-CDF ladder of the deterministic bootstrap weight. */
+  private val PoissonThresholds = Seq(424136118829305329L,
+    848272237658610659L, 1060340297073263324L, 1131029650211480879L,
+    1148701988496035267L, 1152236456152946145L, 1152825534095764625L,
+    1152909688087595836L, 1152920207336574738L)
+
+  /** A Poisson(1) bootstrap weight in 0..9, drawn by inverse CDF from
+    * `h`, a 60-bit md5 uniform, against PRE-SCALED INTEGER thresholds:
+    * the draw never touches a float, so both engines replay the
+    * identical resample. The CASE repeats `h` nine times, so pass a
+    * staged column, not the hash expression itself (q_bootstrap_ci).
+    * q_bootstrap_ci and q_paired_bootstrap draw their weights here. */
+  private[queries] def poissonWeight(h: Column): Column =
+    PoissonThresholds.zipWithIndex.tail
+      .foldLeft(when(h < lit(PoissonThresholds.head), 0)) {
+        case (acc, (t, k)) => acc.when(h < lit(t), k)
+      }.otherwise(PoissonThresholds.size)
+
+  /** poissonWeight as an oracle select item over the column `h`. */
+  private[queries] val PoissonWeightSql: String =
+    PoissonThresholds.zipWithIndex
+      .map { case (t, k) => s"    WHEN h < $t THEN $k\n" }
+      .mkString("CASE\n", "", s"    ELSE ${PoissonThresholds.size} END AS w")
+
   /** Oracle-side twin of [[armCdfGrid]] — shared CTE prefix for the
     * two-sample test oracles (pre-stripped; ends after the `j` CTE
     * with no trailing comma). */
@@ -669,10 +694,6 @@ object ArmStats {
     // statistics (ranks 5/196 of B=200), not interpolated quantiles.
     QueryDef("q_bootstrap_ci", (s, dir) => {
       val B = 200
-      val thr = Seq(424136118829305329L, 848272237658610659L,
-        1060340297073263324L, 1131029650211480879L, 1148701988496035267L,
-        1152236456152946145L, 1152825534095764625L, 1152909688087595836L,
-        1152920207336574738L)
       // tp, not t: the B=200 explode + md5 draws run ABOVE the scan,
       // and the testdata's single-row-group parquet would pin all 20M
       // hashed rows to one task (measured 27 s vs ~2 s rebalanced)
@@ -692,14 +713,10 @@ object ArmStats {
       // more than once, so the staged column is hashed exactly once.
       // Measured: the draw stage's task time dropped ~6× (see
       // OPTIMIZATION_r18.md); values identical, thresholds unchanged.
-      val h = col("_h")
-      val w = thr.tail.zipWithIndex.foldLeft(when(h < lit(thr.head), 0)) {
-        case (acc, (tk, i)) => acc.when(h < lit(tk), i + 1)
-      }.otherwise(9)
       val rep = ev.withColumn("r", explode(sequence(lit(0), lit(B - 1))))
         .withColumn("_h", NativeExpressions.md5Prefix60(concat(lit("boot:"),
           col("event_id"), lit(":"), col("r"))))
-        .withColumn("w", w).drop("_h")
+        .withColumn("w", poissonWeight(col("_h"))).drop("_h")
         .groupBy(col("arm"), col("r"))
         .agg(sum((col("v") * col("w").cast("decimal(2,0)"))
             .cast("decimal(28,4)")).as("sv"),
@@ -720,23 +737,13 @@ object ArmStats {
         .select(col("arm"), col("n"), col("mean"),
           col("ci_lo"), col("ci_hi"))
     },
-      """WITH ev AS (SELECT event_type AS arm, event_id,
+      s"""WITH ev AS (SELECT event_type AS arm, event_id,
         |    CAST(value AS DECIMAL(18,2)) AS v FROM events),
         |hw AS (SELECT arm, r, v,
         |    ('0x' || substring(md5('boot:' || CAST(event_id AS VARCHAR)
         |      || ':' || CAST(r AS VARCHAR)), 1, 15))::BIGINT AS h
         |  FROM ev CROSS JOIN (SELECT unnest(range(200)) AS r)),
-        |ww AS (SELECT arm, r, v, CASE
-        |    WHEN h < 424136118829305329 THEN 0
-        |    WHEN h < 848272237658610659 THEN 1
-        |    WHEN h < 1060340297073263324 THEN 2
-        |    WHEN h < 1131029650211480879 THEN 3
-        |    WHEN h < 1148701988496035267 THEN 4
-        |    WHEN h < 1152236456152946145 THEN 5
-        |    WHEN h < 1152825534095764625 THEN 6
-        |    WHEN h < 1152909688087595836 THEN 7
-        |    WHEN h < 1152920207336574738 THEN 8
-        |    ELSE 9 END AS w FROM hw),
+        |ww AS (SELECT arm, r, v, $PoissonWeightSql FROM hw),
         |rep AS (SELECT arm, r,
         |    ROUND(CAST(SUM(CAST(v * CAST(w AS DECIMAL(2,0)) AS DECIMAL(28,4))) AS DOUBLE)
         |      / CAST(SUM(w) AS DOUBLE), 9) AS m

@@ -132,7 +132,7 @@ object Retrieval {
     * branches; 6 parquet scans executed without this). */
   private def cellSourceTable(s: SparkSession, dir: String): DataFrame = {
     val embs = tp(s, dir, "embeddings")
-    val cents = AnnIvf.fit(embs, "vec_id", "embedding", 16, iters = 0)
+    val cents = AnnIvf.fitExact(embs, "vec_id", "embedding", 16, iters = 0)
     val assigned = AnnIvf
       .assign(embs, cents, "vec_id", "embedding", simRound = Some(9))
       .select(col("id"), col("cid"))

@@ -659,7 +659,6 @@ object VersionedTable {
                                    maxPruneComparisons: Long =
                                      MaxPruneComparisons)
                                   (beforePublish: () => Unit): Long = {
-    var attempts = 0
     // r19 (guide §3.3): the caller's source is typically a non-trivial
     // derivation (a change-log rollup); it used to EXECUTE three times
     // per commit — the key-count guard, the prune pass's distinct keys,

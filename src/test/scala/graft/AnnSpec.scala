@@ -29,7 +29,7 @@ class AnnSpec extends SparkSpec {
 
   test("LSH ANN recall vs brute force") {
     val r = recall(neighborSets(
-      AnnLsh.annTopK(emb, queries, "vec_id", "embedding", 10)))
+      AnnLsh.annTopKExact(emb, queries, "vec_id", "embedding", 10)))
     // synthetic embeddings have moderate nearest-neighbor cosines
     // (~0.5), the hard regime for hyperplane LSH — the point here is
     // the mechanism + determinism, not tuned recall
@@ -71,7 +71,7 @@ class AnnSpec extends SparkSpec {
     // one snapshot, persists it, and every later query job loads the
     // SAME centroids — results must be identical to the fitting session
     val dir = tmpDir("ivfidx")
-    val centroids = AnnIvf.fit(emb, "vec_id", "embedding", 16)
+    val centroids = AnnIvf.fitExact(emb, "vec_id", "embedding", 16, iters = 1)
     AnnIvf.saveIndex(centroids, s"$dir/centroids")
     val loaded = AnnIvf.loadIndex(spark, s"$dir/centroids")
     def results(c: org.apache.spark.sql.DataFrame) =
@@ -94,7 +94,7 @@ class AnnSpec extends SparkSpec {
     IndexedSearch.fit(emb, "vec_id", "embedding", dir)
 
     // in-session references (same params as IndexedSearch defaults)
-    val centroids = AnnIvf.fit(emb, "vec_id", "embedding", 16)
+    val centroids = AnnIvf.fitExact(emb, "vec_id", "embedding", 16, iters = 1)
     val assigned = AnnIvf.assign(emb, centroids, "vec_id", "embedding")
     val refIvf = AnnIvf.search(assigned, centroids, queries,
         "vec_id", "embedding", 10, 4)
@@ -287,7 +287,7 @@ class AnnSpec extends SparkSpec {
   }
 
   test("IVF assigns every vector to exactly one cell") {
-    val centroids = AnnIvf.fit(emb, "vec_id", "embedding", 16)
+    val centroids = AnnIvf.fitExact(emb, "vec_id", "embedding", 16, iters = 1)
     val assigned = AnnIvf.assign(emb, centroids, "vec_id", "embedding")
     assert(assigned.count() === emb.count())
     assert(assigned.select("id").distinct().count() === emb.count())

@@ -8,6 +8,21 @@ class DedupSpec extends SparkSpec {
 
   lazy val docs = table("documents")
 
+  /** A 400-token document (id 1), a copy of it with one middle token
+    * replaced (id 2) and a document sharing no token with either
+    * (id 3): a near-dup pair planted here, not picked from the corpus. */
+  lazy val planted = {
+    import SparkSpec.spark.implicits._
+    val doc = (1 to 400).map(i => s"tok$i")
+    Seq(1L -> doc, 2L -> doc.updated(200, "edited"),
+        3L -> (1 to 400).map(i => s"other$i"))
+      .map { case (id, ts) => (id, ts.mkString(" ")) }
+      .toDF("doc_id", "text")
+  }
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
   test("minhash-LSH finds exactly the exact-jaccard near-dup pairs") {
     val lsh = Dedup.minHashNearDups(docs, "doc_id", "text", theta = 0.8)
       .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -22,21 +37,18 @@ class DedupSpec extends SparkSpec {
     import SparkSpec.spark.implicits._
     val twice = Seq((1L, "the same text exactly"), (2L, "the same text exactly"))
       .toDF("doc_id", "text")
-    val ts = Dedup.simHashDf(twice, "doc_id", "text")
+    val ts = NativeExprSpec.simHashSigs(twice)
       .select("sig").collect().map(_.getLong(0))
     assert(ts(0) === ts(1))
 
-    val sigs = Dedup.simHashDf(docs, "doc_id", "text")
+    val sigs = NativeExprSpec.simHashSigs(planted)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def ham(i: Long, j: Long) = java.lang.Long.bitCount(sigs(i) ^ sigs(j))
-    // doc 285/301 are a planted near-dup pair (jaccard 0.989). This
-    // corpus's tiny shared vocab makes many bit-votes near-tied, so
-    // simhash distances run high — the near-dup must still sit well
-    // below the ~32-bit expectation for unrelated docs.
-    assert(ham(285L, 301L) < 20)
-    val unrelated = Seq((0L, 7L), (3L, 11L), (20L, 90L), (40L, 200L))
-      .map { case (i, j) => ham(i, j) }
-    assert(ham(285L, 301L) < unrelated.min)
+    assert(ham(1L, 2L) < ham(1L, 3L))
+    assert(ham(1L, 2L) < ham(2L, 3L))
+    // the operator flags the one-token edit, and only it
+    assert(pairSet(Dedup.simHashNearDupsMd5(planted, "doc_id", "text", 7)) ===
+      Set((1L, 2L)))
   }
 
   test("duplicated spans: coverage invariants, full-dup and no-dup extremes") {
@@ -69,26 +81,27 @@ class DedupSpec extends SparkSpec {
 
   test("pigeonhole candidate join finds every pair within the radius") {
     // ground truth: all-pairs hamming over collected signatures
-    val sigs = Dedup.simHashDf(docs, "doc_id", "text")
+    // (docs without a token are excluded by the operator: they all
+    // share the all-zero signature)
+    val sigs = NativeExprSpec.simHashSigs(docs.filter(col("text").rlike("\\S")))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val truth = (for {
       (i, si) <- sigs; (j, sj) <- sigs
       if i < j && java.lang.Long.bitCount(si ^ sj) <= 7
     } yield (i, j)).toSet
-    val found = Dedup.simHashNearDups(docs, "doc_id", "text", 7)
-      .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(found === truth)
+    assert(truth.nonEmpty)
+    assert(pairSet(Dedup.simHashNearDupsMd5(docs, "doc_id", "text", 7)) === truth)
   }
 
   test("winnowing fingerprint overlap flags copied text") {
-    val overlaps = Fingerprint.overlapPairs(docs, "doc_id", "text", minShared = 10)
-      .select("i", "j").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the jaccard-0.989 planted pair must share many fingerprints
-    assert(overlaps.contains((285L, 301L)))
+    // the one-token edit shares every fingerprint away from the edit;
+    // the unrelated document shares none
+    assert(pairSet(Fingerprint.overlapPairs(planted, "doc_id", "text",
+      minShared = 10)) === Set((1L, 2L)))
   }
 
   test("winnow selects a sparse subset of kgram hashes") {
-    val row = Fingerprint.fingerprintDf(docs, "doc_id", "text").head()
+    val row = Fingerprint.fingerprintMd5Df(docs, "doc_id", "text").head()
     val nFps = row.getSeq[Long](1).size
     assert(nFps > 0)
     val textLen = docs.filter(col("doc_id") === row.getLong(0))

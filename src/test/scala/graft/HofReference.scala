@@ -7,12 +7,18 @@ import graft.functions.{TextAnalysis, Vectors}
 import graft.operators.Dedup
 
 /** The higher-order-function formulations the native expressions
-  * replaced (`Dedup.shingleDf`/`signatureDf`/`simHashDf`,
-  * `Fingerprint.fingerprintDf`, `Vectors.cosine`, the LSH bucket keys
-  * of `AnnLsh.bucketed`). Interpreted and slow,
+  * replaced (`Dedup.shingleDf`/`signatureDf`, the SimHash64Md5
+  * signature of `Dedup.simHashNearDupsMd5`,
+  * `Fingerprint.fingerprintMd5Df`, `Vectors.cosine`, the LSH bucket
+  * keys of `AnnLsh.bucketedExact`). Interpreted and slow,
   * but built only from Spark builtins: NativeExprSpec and TextStatsSpec
   * assert the native paths against them as parity oracles. */
 object HofReference {
+
+  /** The md5-60bit hash identity the SimHash and winnowing twins share:
+    * the first 15 hex digits of md5(s) as a long. */
+  private def md5Hash60(s: Column): Column =
+    conv(substring(md5(s), 1, 15), 16, 10).cast("long")
 
   /** The HOF formulation shingleDf replaced — kept as the parity
     * reference (NativeExprSpec asserts element-identical output). */
@@ -41,15 +47,17 @@ object HofReference {
 
   private val BitMasks: Seq[Long] = (0 until 64).map(1L << _)
 
-  /** HOF reference implementation of simHashDf — per-bit weighted vote
-    * of token xxhash64 bits packed into one long, 64 interpreted passes
-    * over the staged hash array. Kept as the parity oracle. */
+  /** HOF reference implementation of the (id, sig) SimHash64Md5
+    * signatures over lowercase whitespace tokens — per-bit weighted
+    * vote of token md5-60bit hash bits packed into one long, 64
+    * interpreted passes over the staged hash array. Kept as the parity
+    * oracle. */
   def simHashDfHof(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val masks = typedlit(BitMasks)
     docs
       .select(col(idCol).as("id"),
         TextAnalysis.tokens(lower(col(textCol))).as("tk"))
-      .select(col("id"), transform(col("tk"), t => xxhash64(t)).as("hs"))
+      .select(col("id"), transform(col("tk"), md5Hash60(_)).as("hs"))
       .select(col("id"),
         aggregate(sequence(lit(0), lit(63)), lit(0L), (acc, j) => {
           val mask = element_at(masks, j + 1)
@@ -68,7 +76,7 @@ object HofReference {
       .select(col("id"),
         when(length(col("t")) >= k,
           transform(sequence(lit(1), length(col("t")) - lit(k - 1)),
-            i => xxhash64(substr(col("t"), i, lit(k)))))
+            i => md5Hash60(substr(col("t"), i, lit(k)))))
           .otherwise(array().cast("array<bigint>")).as("g"))
       .select(col("id"),
         when(size(col("g")) - lit(w - 1) >= 1,
@@ -83,7 +91,7 @@ object HofReference {
 
   /** Sign-bit bucket key: bit i = [v · planeᵢ > 0]. HOF reference
     * implementation, kept as the parity oracle for the native
-    * expression used by `bucketed`. */
+    * expression used by `bucketedExact`. */
   def bucketKey(vec: Column, planes: Seq[Seq[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
       when(Vectors.dot(vec, typedlit(p)) > 0, lit(1L << i)).otherwise(lit(0L))

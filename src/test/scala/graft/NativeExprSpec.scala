@@ -1,11 +1,21 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions, NativeExpressions, TextAnalysis, Vectors}
 import graft.operators.Dedup
 
+object NativeExprSpec {
+  /** (id, sig): the SimHash64Md5 signature over lowercase whitespace
+    * tokens that Dedup.simHashNearDupsMd5 joins on. */
+  def simHashSigs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("id"), NativeExpressions.simHash64Md5(
+      TextAnalysis.tokens(lower(col("text")))).as("sig"))
+}
+
 class NativeExprSpec extends SparkSpec {
+  import NativeExprSpec.simHashSigs
 
   lazy val docs = table("documents")
   lazy val emb = table("embeddings")
@@ -55,7 +65,7 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("native simhash is bit-identical to the HOF pipeline") {
-    val native = Dedup.simHashDf(docs, "doc_id", "text")
+    val native = simHashSigs(docs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val hof = HofReference.simHashDfHof(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -73,7 +83,7 @@ class NativeExprSpec extends SparkSpec {
       (0 until blocks).combinations(keyBlocks).map(_.foldLeft(0L)((k, i) =>
         (k << sizes(i)) | bl(i))).toSeq
     }
-    val sigs = Dedup.simHashDf(docs, "doc_id", "text").limit(100)
+    val sigs = simHashSigs(docs).limit(100)
     val got = sigs.select(col("id"), col("sig"),
         NativeExpressions.simHashBlockKeys(col("sig"), blocks, keyBlocks).as("ks"))
       .collect().map(r => (r.getLong(1), r.getSeq[Long](2)))
@@ -86,7 +96,7 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("native hamming equals bit_count(xor)") {
-    val sigs = Dedup.simHashDf(docs, "doc_id", "text").limit(50)
+    val sigs = simHashSigs(docs).limit(50)
     val a = sigs.select(col("id").as("i"), col("sig").as("sa"))
     val b = sigs.select(col("id").as("j"), col("sig").as("sb"))
     val joined = a.join(b, col("i") < col("j"))
@@ -99,8 +109,7 @@ class NativeExprSpec extends SparkSpec {
 
   test("native hyperplane buckets are bit-identical to the HOF bucketKey") {
     import graft.operators.AnnLsh
-    val tables = 4; val numPlanes = 6; val dim = 64; val seed = 0xA11L
-    val planes = (0 until tables).map(t => AnnLsh.hyperplanes(numPlanes, dim, seed + t))
+    val planes = AnnLsh.md5SignPlanes(tables = 4, numPlanes = 6, dim = 64)
     val native = emb.select(col("vec_id"),
       NativeExpressions.hyperplaneBuckets(
         col("embedding").cast("array<double>"), planes).as("ks"))
@@ -113,7 +122,7 @@ class NativeExprSpec extends SparkSpec {
 
   test("native winnow is hash-identical to the HOF fingerprint pipeline") {
     import graft.operators.Fingerprint
-    val native = Fingerprint.fingerprintDf(docs, "doc_id", "text")
+    val native = Fingerprint.fingerprintMd5Df(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val hof = HofReference.fingerprintDfHof(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
@@ -151,10 +160,14 @@ class NativeExprSpec extends SparkSpec {
     GraftFunctions.register(spark)
     Tables.registerAll(spark, sf)
     val viaSql = spark.sql(
-      """SELECT graft_hamming(graft_simhash64(array('a','b')),
-        |                     graft_simhash64(array('a','c'))) AS h""".stripMargin)
+      """SELECT graft_hamming(graft_simhash64_md5(array('a','b')),
+        |                     graft_simhash64_md5(array('a','c'))) AS h""".stripMargin)
       .head().getInt(0)
     assert(viaSql >= 0)
+    val sig = spark.sql("SELECT graft_simhash64_md5(array('a','b')) AS s")
+      .head().getLong(0)
+    assert(sig === spark.range(1).select(NativeExpressions.simHash64Md5(
+      array(lit("a"), lit("b")))).head().getLong(0))
     val minhash = spark.sql(
       "SELECT graft_minhash(array('x y z'), 8) AS sig").head().getSeq[Long](0)
     assert(minhash.length === 8)
@@ -167,9 +180,17 @@ class NativeExprSpec extends SparkSpec {
       .head().getDouble(0)
     assert(math.abs(cos - 1.0) < 1e-12)
     val buckets = spark.sql(
-      """SELECT graft_lsh_buckets(CAST(embedding AS ARRAY<DOUBLE>), 8, 6, 2577)
-        |  AS ks FROM embeddings LIMIT 1""".stripMargin).head().getSeq[Long](0)
-    assert(buckets.length === 8 && buckets.forall(k => k >= 0 && k < 64))
+      """SELECT vec_id, graft_lsh_buckets(CAST(embedding AS ARRAY<DOUBLE>), 8, 6)
+        |  AS ks FROM embeddings WHERE vec_id < 20""".stripMargin)
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(buckets.size === 20 &&
+      buckets.values.forall(ks => ks.length === 8 && ks.forall(k => k >= 0 && k < 64)))
+    // the SQL form builds the md5-parity planes of AnnLsh.md5SignPlanes
+    val viaApi = emb.filter(col("vec_id") < 20).select(col("vec_id"),
+        NativeExpressions.hyperplaneBuckets(col("embedding").cast("array<double>"),
+          graft.operators.AnnLsh.md5SignPlanes(8, 6, 64)).as("ks"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    assert(buckets === viaApi)
     val z = spark.sql("SELECT graft_zorder(3L, 5L, 10) AS z").head().getLong(0)
     assert(z === ((1L << 0) + (1L << 2)) + ((1L << 1) + (1L << 5))) // x bits -> 2b, y bits -> 2b+1
     val m = spark.sql(

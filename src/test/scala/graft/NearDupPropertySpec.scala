@@ -5,7 +5,8 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.forAllNoShrink
 import org.scalacheck.rng.Seed
 
-import graft.operators.{AnnLsh, Dedup, SemDedup, TextStats}
+import graft.functions.WinnowImpl
+import graft.operators.{AnnLsh, Dedup, Fingerprint, SemDedup, TextStats}
 
 /** Family properties of the near-dup operators, checked on small
   * generated corpora that mix verbatim copies, reordered tokens, near
@@ -108,6 +109,12 @@ class NearDupPropertySpec extends SparkSpec {
     dot / (math.sqrt(dot) * math.sqrt(dot))
   }
 
+  /** Distinct winnowed fingerprints of `t` at overlapPairs' k = 3,
+    * w = 2 below: the `shared` count a doc's copies pair up with. */
+  private def fingerprintCount(t: String): Long =
+    WinnowImpl.winnow(org.apache.spark.unsafe.types.UTF8String.fromString(t), 3, 2)
+      .numElements().toLong
+
   private val pairOps: Seq[PairOp[_]] = Seq(
     PairOp[String]("minHashNearDups", textCorpus, texts,
       Dedup.minHashNearDups(_, "doc_id", "text", theta = 0.5, shingleN = 1),
@@ -121,6 +128,10 @@ class NearDupPropertySpec extends SparkSpec {
       Dedup.simHashNearDupsMd5(_, "doc_id", "text", 7),
       directed = false,
       t => Option.when(tokens(t).nonEmpty)(Seq(0))),
+    PairOp[String]("overlapPairs", textCorpus, texts,
+      Fingerprint.overlapPairs(_, "doc_id", "text", minShared = 2, k = 3, w = 2),
+      directed = false,
+      t => Option.when(fingerprintCount(t) >= 2)(Seq(fingerprintCount(t)))),
     PairOp[Array[Float]]("cosineNearDupsExact", vecCorpus, vectors,
       AnnLsh.cosineNearDupsExact(_, "vec_id", "embedding", 0.4),
       directed = false,

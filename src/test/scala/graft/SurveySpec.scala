@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.QueryDef
 
-/** SURVEY.md §2 ↔ `SparkEntry.queries` bijection guard.
+/** SURVEY.md §2 ↔ `SparkEntry.queries` bijection guard, and SURVEY
+  * §2.5 ↔ `GraftFunctions.all` on SQL function names.
   *
   * The coverage bar is defined over SURVEY §2; round 8 shipped three
   * queries that existed only in code and were invisible to it. This
@@ -15,14 +16,15 @@ import graft.queries.QueryDef
   */
 class SurveySpec extends AnyFunSuite {
 
+  private lazy val survey: String = {
+    val src = scala.io.Source.fromFile("SURVEY.md", "UTF-8")
+    try src.mkString finally src.close()
+  }
+
   private lazy val surveyKeys: Set[String] = {
-    val text = {
-      val src = scala.io.Source.fromFile("SURVEY.md", "UTF-8")
-      try src.mkString finally src.close()
-    }
     // §2 spans from its header to §3; query keys appear backticked in
     // the "Query key" column (sometimes alongside an operator name).
-    val s2 = text.substring(text.indexOf("## §2"), text.indexOf("## §3"))
+    val s2 = survey.substring(survey.indexOf("## §2"), survey.indexOf("## §3"))
     "`(q_[a-z0-9_]+)`".r.findAllMatchIn(s2).map(_.group(1)).toSet
   }
 
@@ -40,6 +42,20 @@ class SurveySpec extends AnyFunSuite {
     val stale = surveyKeys -- queryKeys
     assert(stale.isEmpty,
       s"SURVEY §2 references unknown query keys (stale rows): ${stale.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("SURVEY §2.5 names exactly the SQL functions GraftFunctions registers") {
+    // §2.5 spans from its header to §2.6; each SQL name appears
+    // backticked, as `graft_x` or `graft_x(args)`
+    val s25 = survey.substring(survey.indexOf("### §2.5"), survey.indexOf("### §2.6"))
+    val named = "`(graft_[a-z0-9_]+)".r.findAllMatchIn(s25).map(_.group(1)).toSet
+    val registered = graft.functions.GraftFunctions.all.map(_._1.funcName).toSet
+    val stale = named -- registered
+    assert(stale.isEmpty,
+      s"SURVEY §2.5 names unregistered SQL functions: ${stale.toSeq.sorted.mkString(", ")}")
+    val missing = registered -- named
+    assert(missing.isEmpty,
+      s"registered SQL functions absent from SURVEY §2.5: ${missing.toSeq.sorted.mkString(", ")}")
   }
 
   test("no duplicate query keys in the SparkEntry source") {
