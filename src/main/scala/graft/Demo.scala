@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.Materialize._
 import graft.functions.TextAnalysis
 import graft.operators.TopK
 import graft.sources._
@@ -35,11 +34,11 @@ object Demo {
       .foreach(l => println("demo: " +
         l.substring(l.indexOf("PartitionFilters")).take(220)))
 
-    // 3. the flagship: tokenize -> count -> top 10
+    // 3. the flagship: tokenize -> count -> top 10, materialized once:
+    // the three actions below read these 10 rows, not the documents
     val docs = Tables.load(spark, sfDir, "documents")
     val top = TopK.topKeys(
       docs.select(TextAnalysis.tokens(col("text")).as("toks")), "toks", 10)
-      .eagerCheckpoint() // three actions below read these 10 rows
 
     // 4. reference sinks: header'd CSV + serving store publish
     Sinks.csv(top, s"$outDir/top10")

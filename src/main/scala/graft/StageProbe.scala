@@ -12,7 +12,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * every JOB with its wall time plus the sum of its stages' task
   * times, so the expensive piece of a multi-job operator is visible
   * without the UI, then the query's initial formatted plan and the
-  * final adaptive plan of the timed run. Usage:
+  * final adaptive plan of every action of the timed run. Usage:
   *
   *   SPARK_GRAFT_SF_DIR=<sfDir> runMain graft.StageProbe q_x [q_y ...]
   */
@@ -68,14 +68,16 @@ object StageProbe {
           }
         }
     }
-    // the noop write's own QueryExecution: its executed plan after the
-    // run is the FINAL adaptive plan (AQE join rewrites and coalesced
-    // shuffle reads are runtime decisions the initial plan cannot show)
-    @volatile var finalPlan: Option[String] = None
+    // each action's own QueryExecution: its executed plan after the run
+    // is the FINAL adaptive plan (AQE join rewrites and coalesced shuffle
+    // reads are runtime decisions the initial plan cannot show). A query
+    // that materializes while it builds (TopK.topK) runs its work in an
+    // action before the noop write.
+    val finalPlans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.listenerManager.register(new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
                              durationNs: Long): Unit =
-        finalPlan = Some(qe.executedPlan.toString)
+        finalPlans.add(s"$funcName: ${qe.executedPlan}")
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
     })
@@ -85,7 +87,7 @@ object StageProbe {
       try run(fn(spark, sfDir)) catch { case NonFatal(_) => () }
       spark.catalog.clearCache()
       jobs.clear(); stages.clear(); stageToJob.clear()
-      finalPlan = None
+      finalPlans.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
@@ -110,8 +112,9 @@ object StageProbe {
       }
       println("  -- initial plan --")
       println(initialPlan)
-      println("  -- final adaptive plan of the timed run --")
-      println(finalPlan.getOrElse("(not captured)"))
+      println("  -- final adaptive plan of each action of the timed run --")
+      if (finalPlans.isEmpty) println("(not captured)")
+      finalPlans.forEach(p => println(p))
     }
     spark.stop()
   }

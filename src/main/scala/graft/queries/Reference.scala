@@ -15,7 +15,8 @@ object Reference {
 
   val defs: Seq[QueryDef] = Seq(
 
-    // #3-5: explode → count → top-k (reference App.java:98-101)
+    // #3-5: explode → count → top-k (reference App.java:98-101); the
+    // build runs the TakeOrderedAndProject plan and returns its 10 rows
     QueryDef("q_top10_tokens", (s, dir) => {
       val docs = t(s, dir, "documents")
         .select(TextAnalysis.tokens(col("text")).as("toks"))

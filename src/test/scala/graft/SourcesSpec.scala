@@ -7,7 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
+import graft.operators.TopK
 import graft.sources._
+import graft.streaming.StoreSink
 
 class SourcesSpec extends SparkSpec {
 
@@ -403,15 +405,10 @@ class SourcesSpec extends SparkSpec {
     assert(store.read().count() === lines.size - 1)
   }
 
-  test("BatchJob scans its window once for both sinks") {
-    val dir = tmpDir("batchjob_once")
-    Sinks.partitionedByHour(table("events"), "ts", s"$dir/hours")
-    val w = TimeWindow.day(2024, 1, 15)
-    val windowRows = PartitionedSource.readWindow(spark, s"$dir/hours", w).count()
-    assert(windowRows > 0)
-    // records read by file-scan tasks of this test's jobs only: reads of
-    // the materialized top-10 rows are not file scans
-    val group = "batchjob-scans-once"
+  /** Records read by the file-scan stages of the jobs `body` runs; reads
+    * of materialized top-k rows are not file scans. */
+  private def fileScanRecords(body: => Unit): Long = {
+    val group = s"file-scans-${java.util.UUID.randomUUID}"
     val scanStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val reads = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
     val listener = new SparkListener {
@@ -425,12 +422,46 @@ class SourcesSpec extends SparkSpec {
     }
     val sc = spark.sparkContext
     listening(listener) {
-      sc.setJobGroup(group, "BatchJob.run")
-      try BatchJob.run(spark, s"$dir/hours", s"$dir/out", w)
-      finally sc.clearJobGroup()
+      sc.setJobGroup(group, "file scans")
+      try body finally sc.clearJobGroup()
     }
-    val scanned = reads.asScala.collect { case (st, n) if scanStages.contains(st) => n }.sum
+    reads.asScala.collect { case (st, n) if scanStages.contains(st) => n }.sum
+  }
+
+  test("BatchJob scans its window once for both sinks") {
+    val dir = tmpDir("batchjob_once")
+    Sinks.partitionedByHour(table("events"), "ts", s"$dir/hours")
+    val w = TimeWindow.day(2024, 1, 15)
+    val windowRows = PartitionedSource.readWindow(spark, s"$dir/hours", w).count()
+    assert(windowRows > 0)
+    val scanned = fileScanRecords(BatchJob.run(spark, s"$dir/hours", s"$dir/out", w))
     assert(scanned === windowRows, s"window of $windowRows rows read $scanned records")
+  }
+
+  test("the reference call sequence reads its window once") {
+    // two hours of tweets with a hashtag array, in the hour layout the
+    // reference reads (App.java:93-95)
+    val dir = tmpDir("reference_once")
+    for (h <- 0 until 2)
+      Sinks.avro(spark.range(0, 400).select(col("id"),
+        array((1 to 3).map(i => concat(lit("t"), ((col("id") * i + h) % 7).cast("string"))): _*)
+          .as("hashtags")),
+        s"$dir/tweets/year=2024/month=03/day=01/hour=0$h")
+    val w = TimeWindow.hour(2024, 3, 1, 1)
+    def tweets = TableLoader.read(spark, "avro", s"$dir/tweets")
+      .filter(w.partitionFilter(col("year"), col("month"), col("day"), col("hour")))
+    val windowRows = tweets.count()
+    assert(windowRows === 400)
+    val store = new ParquetResultStore(spark, s"$dir/store", "key", "win_start")
+    val scanned = fileScanRecords {
+      val top = TopK.topKeys(tweets.select(col("hashtags")), "hashtags", 10)
+      Sinks.csv(top, s"$dir/top10")
+      StoreSink.publishWindow(store, StoreSink.windowKeyed(
+        top.withColumn("win_start", lit(java.sql.Timestamp.from(w.start))), "win_start"),
+        w.start, w.end)
+    }
+    assert(scanned === windowRows, s"window of $windowRows rows read $scanned records")
+    assert(store.read().count() === 7)
   }
 
   test("BatchJob: publishing consecutive hours keeps both hours' rows") {

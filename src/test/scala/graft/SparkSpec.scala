@@ -1,7 +1,12 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs, built with graft's engine
@@ -55,5 +60,26 @@ trait SparkSpec extends AnyFunSuite {
       sc.removeSparkListener(marker)
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** The physical plans of the SQL executions `body` ran: each plan as it
+    * started, then each adaptive re-plan, the final one last. Every plan
+    * renders one node per line, as `executedPlan.toString` does, for
+    * callers that materialize their result and so hand back a plan that
+    * no longer shows the work. */
+  def executedPlans(body: => Any): Seq[String] = {
+    def render(p: SparkPlanInfo, depth: Int): Seq[String] =
+      ("  " * depth + p.simpleString) +: p.children.flatMap(render(_, depth + 1))
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    listening(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.add(render(s.sparkPlanInfo, 0).mkString("\n"))
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.add(render(u.sparkPlanInfo, 0).mkString("\n"))
+        case _ => ()
+      }
+    })(body)
+    plans.asScala.toSeq
   }
 }

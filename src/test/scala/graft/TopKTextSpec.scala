@@ -22,9 +22,29 @@ class TopKTextSpec extends SparkSpec {
 
   test("top-k plans as TakeOrderedAndProject, not a global sort") {
     val toks = docs.select(TextAnalysis.tokens(col("text")).as("toks"))
-    val plan = TopK.topKeys(toks, "toks", 10)
-      .queryExecution.executedPlan.toString
+    val plan = executedPlans(TopK.topKeys(toks, "toks", 10)).mkString("\n")
     assert(plan.contains("TakeOrderedAndProject"))
+  }
+
+  test("topK == the lazy orderBy.limit plan, row for row, in one partition") {
+    import SparkSpec.spark.implicits._
+    // a, b and d tie on 3; c, e and f trail
+    val counted = TopK.countByKey(
+      Seq("b", "a", "d", "b", "c", "a", "d", "e", "b", "a", "d", "f", "c").toDF("token"), "token")
+    val empty = counted.filter(lit(false))
+    val order = Seq(col("cnt").desc, col("token").asc)
+    for ((df, k) <- Seq(counted -> 1, counted -> 2, counted -> 10, empty -> 10)) {
+      val eager = TopK.topK(df, k, order: _*)
+      val expected = df.orderBy(order: _*).limit(k)
+      assert(eager.schema === expected.schema, s"k = $k")
+      assert(eager.collect().toSeq === expected.collect().toSeq, s"k = $k")
+      assert(eager.rdd.getNumPartitions === 1, s"k = $k")
+    }
+    assert(TopK.topK(counted, 2, order: _*).collect().map(_.getString(0)).toSeq === Seq("a", "b"))
+    assert(TopK.topK(counted, 10, order: _*).count() === 6)
+    val none = TopK.topK(empty, 10, order: _*)
+    assert(none.isEmpty)
+    assert(none.schema.fieldNames.toSeq === Seq("token", "cnt"))
   }
 
   test("approx_count_distinct tracks exact within rsd on token keys") {
